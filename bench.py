@@ -228,6 +228,42 @@ def _detect_contention(payload: dict, prev: dict | None) -> dict:
     return {"flag": bool(reasons), "reasons": reasons}
 
 
+def _payload(timings: dict[str, float], sf: float, runs: int, *,
+             chain_sec: float, parallel_sec: float, workers: int,
+             load_start: list[float], load_end: list[float],
+             mid_run: dict, load_waited: float) -> dict:
+    """The full bench payload ``main()`` persists and budget-trims
+    (``contended`` is added once the previous solo payload is read)."""
+    return {
+        "metric": "total_bench_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "calibration": {
+            "md5_chain_sec": chain_sec,
+            "iters": CALIBRATION_ITERS,
+            # all-core twin: wall seconds for `workers` simultaneous
+            # md5 chains (each the same work as md5_chain_sec); the
+            # ratio parallel/single ~1 on a healthy solo host
+            "md5_parallel_sec": parallel_sec,
+            "parallel_workers": workers,
+        },
+        # co-tenant noise witnesses: load average sampled before the
+        # session started and after the sweep (1/5/15-min), plus the
+        # 10s-interval mid-run 1-min-load distribution — start/end can
+        # both be quiet around a contended middle (BENCH_r11)
+        "load_avg_start": load_start,
+        "load_avg_end": load_end,
+        "load_mid_run": mid_run,
+        # seconds spent waiting for a quiet host before the session
+        # started (0 = started quiet); a nonzero value with a still-high
+        # load_avg_start means the wait budget expired under load
+        "load_wait_sec": load_waited,
+        "timed_runs_per_query": runs,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
@@ -274,7 +310,6 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
 
-    total = round(sum(timings.values()), 3)
     load_end = _loadavg()
     mid_run = sampler.stop()
     # stop the session BEFORE calibrating: the JVM's background threads
@@ -283,34 +318,12 @@ def main() -> None:
     spark.stop()
     workers = int(os.environ.get(
         "SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
-    payload = {
-        "metric": "total_bench_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "calibration": {
-            "md5_chain_sec": calibrate(),
-            "iters": CALIBRATION_ITERS,
-            # all-core twin: wall seconds for `workers` simultaneous
-            # md5 chains (each the same work as md5_chain_sec); the
-            # ratio parallel/single ~1 on a healthy solo host
-            "md5_parallel_sec": calibrate_parallel(workers),
-            "parallel_workers": workers,
-        },
-        # co-tenant noise witnesses: load average sampled before the
-        # session started and after the sweep (1/5/15-min), plus the
-        # 10s-interval mid-run 1-min-load distribution — start/end can
-        # both be quiet around a contended middle (BENCH_r11)
-        "load_avg_start": load_start,
-        "load_avg_end": load_end,
-        "load_mid_run": mid_run,
-        # seconds spent waiting for a quiet host before the session
-        # started (0 = started quiet); a nonzero value with a still-high
-        # load_avg_start means the wait budget expired under load
-        "load_wait_sec": load_waited,
-        "timed_runs_per_query": runs,
-    }
+    payload = _payload(
+        timings, sf, runs, chain_sec=calibrate(),
+        parallel_sec=calibrate_parallel(workers), workers=workers,
+        load_start=load_start, load_end=load_end, mid_run=mid_run,
+        load_waited=load_waited,
+    )
     # the driver keeps only the LAST 2000 chars of stdout and parses
     # the final JSON line; a 174-entry queries map is ~5 KB, so every
     # BENCH since round 3 captured a left-truncated line that failed
@@ -351,8 +364,14 @@ def main() -> None:
     # anchors first (round-stable driver comparison set), then the
     # rotating registry order fills whatever budget remains
     priority = list(dict.fromkeys(ANCHOR_QUERIES + list(queries)))
-    print(json.dumps(_tail_budgeted(payload, priority, full=full_file),
-                     separators=(",", ":")))
+    tail = _tail_budgeted(payload, priority, full=full_file)
+    print(json.dumps(tail, separators=(",", ":")))
+    # the anchors are the round-over-round comparison set: a
+    # cut one must fail the run, not silently shrink that set
+    cut = [n for n in ANCHOR_QUERIES if n not in tail["queries"]]
+    if cut:
+        raise SystemExit(f"bench: {len(cut)} anchor queries missing from "
+                         f"the tail line: {cut}")
 
 
 def _tail_budgeted(payload: dict, priority: list[str],

@@ -39,15 +39,20 @@ from siddhi_execution_unique_spark.operators.validation import (
     require_column,
     require_keys,
 )
+from siddhi_execution_unique_spark.sources import naive_as_utc
 
 BATCH_START = "batch_start_ms"
 BATCH_END = "batch_end_ms"
 
 
 def event_ms(df: DataFrame, ts: str) -> Column:
-    """Event time as epoch millis, from a timestamp or long/int column."""
+    """Event time as epoch millis, from a timestamp or long/int column.
+    A naive (``TIMESTAMP_NTZ``) column is read as UTC wall clock, the
+    same instant ``sources.load_table`` gives it."""
     dt = df.schema[ts].dataType
-    if isinstance(dt, (TimestampType, TimestampNTZType)):
+    if isinstance(dt, TimestampNTZType):
+        return F.unix_millis(naive_as_utc(F.col(ts)))
+    if isinstance(dt, TimestampType):
         return F.unix_millis(F.col(ts))
     return F.col(ts).cast("long")
 

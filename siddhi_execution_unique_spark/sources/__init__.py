@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -39,8 +39,67 @@ def _max_partition_bytes(spark: SparkSession) -> int:
     return int(raw)
 
 
+def naive_as_utc(col: Column) -> Column:
+    """Read a naive wall clock (``TIMESTAMP_NTZ``) as the UTC instant
+    it names. Parquet TIMESTAMP without isAdjustedToUTC reads as NTZ
+    under Spark 4's inference, and epoch math (``unix_millis``,
+    ``withWatermark``) only accepts instants. Subtracting the NTZ epoch
+    is deterministic in ANY session timezone (a cast ntz->timestamp is
+    not) and matches DuckDB's ``epoch_ms`` on the same naive column."""
+    epoch = F.expr("timestamp_ntz'1970-01-01 00:00:00'")
+    return F.timestamp_micros(F.timestamp_diff("MICROSECOND", epoch, col))
+
+
+def _stamp(path: str) -> tuple:
+    """(inode, size, mtime_ns) of ``path``, or of every entry beneath
+    it when it is a directory. Raises ``OSError`` when the path is not
+    on local storage."""
+
+    def entry(p: str) -> tuple:
+        st = os.stat(p)
+        return (os.path.relpath(p, path), st.st_ino, st.st_size, st.st_mtime_ns)
+
+    if not os.path.isdir(path):
+        return (entry(path),)
+
+    def fail(err: OSError):
+        raise err
+
+    out = [entry(path)]
+    for root, dirs, files in os.walk(path, onerror=fail):
+        dirs.sort()
+        out += [entry(os.path.join(root, n)) for n in sorted(dirs + files)]
+    return tuple(out)
+
+
+def _set_conf(spark: SparkSession) -> tuple:
+    """The session's set conf (what ``spark.conf.getAll`` returns) as
+    NUL-joined keys and values of one map: four Py4J round trips,
+    where ``getAll`` makes one per entry (~60 ms for ~35 entries).
+    When a key or value itself holds a NUL, the join would be
+    ambiguous, so fall back to ``getAll``."""
+    conf = spark.conf._jconf.getAll()
+    keys = conf.keys().mkString("\0")
+    values = conf.values().mkString("\0")
+    if keys.count("\0") == values.count("\0") == conf.size() - 1:
+        return keys, values
+    return tuple(sorted(spark.conf.getAll.items()))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one star-schema table from ``{sf_dir}/{name}.parquet``."""
+    """Read one star-schema table from ``{sf_dir}/{name}.parquet``.
+
+    Repeated loads in one session return the same DataFrame. The memo
+    holds a plan, not data: every action on it still scans the file,
+    fans out and shuffles, and nothing is cached in memory. It is keyed
+    on the resolved path, the input's stamp (inode, size and mtime of
+    the file, or of every entry of a directory), the session's set
+    conf and the session itself, so a rewritten file, a changed conf
+    or another session (``spark.newSession()``) loads afresh. A path
+    that ``os.stat`` cannot read (non-local storage) is never memoized.
+    A hit skips schema inference (a Spark job), file listing and
+    re-analysis. Two loads of one table are one DataFrame, so alias
+    the sides of a self-join."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     # The events table stores TIMESTAMP(NANOS) parquet, which Spark's
@@ -51,26 +110,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # round driver's), without re-mutating conf on every load.
     if str(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")) != "true":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        stamp = _stamp(src)
+    except OSError:  # non-local storage: no stamp, so no memo
+        return _read(spark, src, name)
+    key = (stamp, _set_conf(spark))
+    # one entry per path, scoped to (and collected with) the session
+    memo = spark.__dict__.setdefault("_load_table_memo", {})
+    path = os.path.realpath(src)
+    hit = memo.get(path)
+    if hit is None or hit[0] != key:
+        hit = memo[path] = (key, _read(spark, src, name))
+    return hit[1]
+
+
+def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # Parquet TIMESTAMP without isAdjustedToUTC reads as TIMESTAMP_NTZ
-    # under Spark 4's NTZ inference; downstream epoch math (unix_millis)
-    # only accepts instants. Reinterpret the naive wall-clock as UTC —
-    # via NTZ subtraction from the NTZ epoch, which is deterministic in
-    # ANY session timezone (a cast ntz->timestamp is not) and matches
-    # DuckDB's epoch_ms on the same naive column.
     for field in df.schema.fields:
         if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(
-                field.name,
-                F.timestamp_micros(
-                    F.expr(
-                        "timestampdiff(MICROSECOND, "
-                        f"timestamp_ntz'1970-01-01 00:00:00', `{field.name}`)"
-                    )
-                ),
-            )
+            df = df.withColumn(field.name, naive_as_utc(F.col(f"`{field.name}`")))
     # The test files are single-row-group parquet, so the scan is one
     # task and every per-row projection above it (shingling, hashing,
     # regex) serializes on one core. Estimate the scan's split count

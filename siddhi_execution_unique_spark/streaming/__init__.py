@@ -2209,6 +2209,29 @@ def _keyed_replay(src: DataFrame, replay_groups, out_schema) -> DataFrame:
             return bool(pd.isna(a) and pd.isna(b))
         return bool(a == b)
 
+    def replay(parts: list):
+        """Replay the complete key runs in ``parts`` (consecutive chunks
+        of one partition's key-sorted rows)."""
+        done = pd.concat(parts, ignore_index=True) \
+            if len(parts) > 1 else parts[0].reset_index(drop=True)
+        kcol = done["k"]
+        if int_key and kcol.dtype.kind == "f":
+            # an integer key column arrives as float64 when a batch
+            # holds null keys, and a float chunk (the null keys sort
+            # first) promotes every int64 chunk concatenated with it;
+            # beyond 2^53 distinct int64 keys become equal floats and
+            # their replay state would merge (the old per-group
+            # dispatch grouped exactly) — refuse loudly rather than
+            # corrupt. Checked on the concatenated frame, which every
+            # row reaches exactly once.
+            mx = kcol.abs().max()
+            if pd.notna(mx) and mx >= 2.0 ** 53:
+                raise ValueError(
+                    "keyed replay: integer key column contains "
+                    "nulls and |key| >= 2^53; float64 conversion "
+                    "cannot represent these keys exactly")
+        return replay_groups(done)
+
     def run(batches):
         # carry = list of chunks of the (single-key) trailing run of
         # the previous batches, concatenated ONCE when the run closes
@@ -2220,18 +2243,6 @@ def _keyed_replay(src: DataFrame, replay_groups, out_schema) -> DataFrame:
             if not len(pdf):
                 continue
             kcol = pdf["k"]
-            if int_key and kcol.dtype.kind == "f":
-                # an integer key column arrives as float64 only when
-                # the batch holds null keys; beyond 2^53 distinct int64
-                # keys become equal floats and their replay state would
-                # merge (the old per-group dispatch grouped exactly) —
-                # refuse loudly rather than corrupt (ADVICE r14)
-                mx = kcol.abs().max()
-                if pd.notna(mx) and mx >= 2.0 ** 53:
-                    raise ValueError(
-                        "keyed replay: integer key column contains "
-                        "nulls and |key| >= 2^53; float64 conversion "
-                        "cannot represent these keys exactly")
             last = kcol.iloc[-1]
             tail = (
                 kcol.isna().to_numpy()
@@ -2244,10 +2255,8 @@ def _keyed_replay(src: DataFrame, replay_groups, out_schema) -> DataFrame:
                 # whole batch is one key run
                 if carry and not _same_key(carry[-1]["k"].iloc[-1],
                                            kcol.iloc[0]):
-                    done = pd.concat(carry, ignore_index=True) \
-                        if len(carry) > 1 else carry[0].reset_index(drop=True)
+                    out = replay(carry)
                     carry = [pdf]
-                    out = replay_groups(done)
                     if len(out):
                         yield out
                 else:
@@ -2256,20 +2265,14 @@ def _keyed_replay(src: DataFrame, replay_groups, out_schema) -> DataFrame:
             # batch closes at least one run: everything before the cut
             # (plus any carried prefix — sorted order makes the concat
             # contiguous) is complete
-            parts = carry + [pdf.iloc[:cut]]
-            done = pd.concat(parts, ignore_index=True) \
-                if len(parts) > 1 else parts[0].reset_index(drop=True)
+            out = replay(carry + [pdf.iloc[:cut]])
             carry = [pdf.iloc[cut:]]
-            out = replay_groups(done)
             if len(out):
                 yield out
         if carry:
-            done = pd.concat(carry, ignore_index=True) \
-                if len(carry) > 1 else carry[0].reset_index(drop=True)
-            if len(done):
-                out = replay_groups(done)
-                if len(out):
-                    yield out
+            out = replay(carry)
+            if len(out):
+                yield out
 
     return (
         src.repartition("k")

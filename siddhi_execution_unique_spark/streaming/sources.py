@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from siddhi_execution_unique_spark.sources import naive_as_utc
+
 
 def stream_table(
     spark: SparkSession,
@@ -33,18 +35,9 @@ def stream_table(
     if ts is not None and ts in df.columns and df.schema[ts].dataType.simpleString() == "bigint":
         df = df.withColumn(ts, F.timestamp_micros(F.expr(f"{ts} div 1000")))
     if ts is not None and ts in df.columns and df.schema[ts].dataType.simpleString() == "timestamp_ntz":
-        # withWatermark rejects TIMESTAMP_NTZ; reinterpret the naive
-        # wall-clock as UTC via the same epoch-diff the batch loader
-        # uses (deterministic in any session timezone)
-        df = df.withColumn(
-            ts,
-            F.timestamp_micros(
-                F.expr(
-                    "timestampdiff(MICROSECOND, "
-                    f"timestamp_ntz'1970-01-01 00:00:00', `{ts}`)"
-                )
-            ),
-        )
+        # withWatermark rejects TIMESTAMP_NTZ; read the naive wall
+        # clock as UTC, exactly as the batch loader does
+        df = df.withColumn(ts, naive_as_utc(F.col(f"`{ts}`")))
     return df
 
 

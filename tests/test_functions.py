@@ -378,6 +378,127 @@ def test_ntz_timestamps_load_as_utc_instants_in_any_session_tz(spark):
     assert got == want
 
 
+def test_ntz_frame_gives_load_table_rows(spark, sf_dir):
+    """A plain ``spark.read.parquet`` frame carries the events' naive
+    timestamps as TIMESTAMP_NTZ. ``event_ms`` reads that naive wall
+    clock as UTC, the instant ``load_table`` gives it, so the
+    operators built on it accept the raw frame and give the same rows
+    (``unix_millis`` alone rejects NTZ)."""
+    import os
+
+    from pyspark.sql.types import TimestampNTZType
+
+    from siddhi_execution_unique_spark import operators as ops
+
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    assert isinstance(raw.schema["ts"].dataType, TimestampNTZType)
+    loaded = load_table(spark, sf_dir, "events")
+
+    def rows(df, *extra):
+        return sorted(map(tuple, df.select("event_id", "user_id", *extra).collect()))
+
+    kw = {"ts": "ts", "tiebreak": "event_id"}
+    for build, extra in (
+        (lambda ev: ops.time_batch(ev, "user_id", 3_600_000, **kw),
+         ("batch_start_ms", "batch_end_ms")),
+        (lambda ev: ops.deduplicate(ev, "user_id", 3_600_000, **kw), ()),
+        (lambda ev: ops.length_batch(ev, "user_id", 5, **kw),
+         ("batch_seq", "fired_at_ms")),
+    ):
+        want = rows(build(loaded), *extra)
+        assert want and rows(build(raw), *extra) == want
+
+
+def test_load_table_memo_repeat_load_is_same_plan(spark, sf_dir, tmp_path):
+    import os
+    import shutil
+
+    sc = spark.sparkContext
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            df = load_table(spark, str(tmp_path), "events")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a fresh path, so the first load is a miss in any test order
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+    first, miss_jobs = jobs("memo-miss")
+    again, hit_jobs = jobs("memo-hit")
+    assert miss_jobs, "a first load infers the schema with a Spark job"
+    assert again is first
+    assert hit_jobs == []
+    # a plan, not rows: the repeat still runs its own scan
+    assert again.count() == first.count() > 0
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_load_table_memo_sees_rewritten_file(spark, tmp_path, layout):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    if layout == "dir":
+        os.makedirs(path)
+        path = os.path.join(path, "part-0.parquet")
+
+    def write(n):
+        pq.write_table(pa.table({"r_regionkey": list(range(n)),
+                                 "r_name": [f"r{i}" for i in range(n)]}), path)
+
+    write(3)
+    before = load_table(spark, str(tmp_path), "region")
+    assert before.count() == 3
+    write(5)
+    after = load_table(spark, str(tmp_path), "region")
+    assert after is not before
+    assert sorted(r.r_regionkey for r in after.collect()) == list(range(5))
+
+
+def test_load_table_memo_keys_on_conf_and_session(spark, sf_dir):
+    first = load_table(spark, sf_dir, "events")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "64m")
+    try:
+        assert load_table(spark, sf_dir, "events") is not first
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    # a NUL in the conf takes the exact getAll path, and still memoizes
+    spark.conf.set("spark.test.memo.nul", "a\0b")
+    try:
+        nul = load_table(spark, sf_dir, "events")
+        assert nul is not first
+        assert load_table(spark, sf_dir, "events") is nul
+    finally:
+        spark.conf.unset("spark.test.memo.nul")
+    other = spark.newSession()
+    theirs = load_table(other, sf_dir, "events")
+    assert theirs is not first
+    assert theirs.sparkSession is other
+    assert load_table(other, sf_dir, "events") is theirs
+
+
+def test_load_table_unknown_name_raises_before_lookup(spark, sf_dir, monkeypatch):
+    from siddhi_execution_unique_spark import sources as src
+
+    def boom(*_):
+        raise AssertionError("looked up")
+
+    monkeypatch.setattr(src, "_stamp", boom)
+    monkeypatch.setattr(src, "_set_conf", boom)
+    with pytest.raises(ValueError, match="unknown table"):
+        load_table(spark, sf_dir, "eventz")
+
+
 def test_quality_percentiles_known_distribution(spark):
     from siddhi_execution_unique_spark.functions import curation as fcur
     # 10 docs of lengths 1..10 in one stratum: type-1 percentiles are
@@ -1800,16 +1921,28 @@ def test_materialize_strategy_reliable(spark, tmp_path, monkeypatch):
     local = checkpointed(df)
     assert sorted(tuple(r) for r in local.collect()) == expect
 
+    def files(uri):
+        # getCheckpointDir returns a URI (file:/...); walk the local path
+        return {_os.path.join(d, f)
+                for d, _, fs in _os.walk(uri.replace("file:", "", 1)) for f in fs}
+
+    # the env var only applies while the context has no checkpoint dir;
+    # an earlier test may have set one, so assert against the dir the
+    # checkpoint really used, whichever it is
+    sc = spark.sparkContext
+    before = sc.getCheckpointDir()
+    old_files = files(before) if before else set()
     ckdir = str(tmp_path / "reliable_ckpt")
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
     reliable = checkpointed(df)
     assert sorted(tuple(r) for r in reliable.collect()) == expect
-    got = spark.sparkContext.getCheckpointDir() or ckdir
-    # getCheckpointDir returns a URI (file:/...); walk the local path
-    walked = [f for _, _, fs in _os.walk(got.replace("file:", "", 1))
-              for f in fs]
-    assert walked, "reliable mode must write checkpoint files"
+    used = sc.getCheckpointDir()
+    if before is None:
+        assert used.replace("file:", "", 1).startswith(ckdir)
+    else:
+        assert used == before
+    assert files(used) - old_files, "reliable mode must write checkpoint files"
 
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
     with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):

@@ -1004,20 +1004,22 @@ def test_bench_tail_line_fits_driver_capture():
     import __spark_entry__ as entry_mod
 
     names = list(entry_mod.queries())
-    payload = {
-        "metric": "total_bench_sec",
-        "value": 123.456,
-        "unit": "sec",
-        "queries": {n: round(0.5 + (i % 37) / 10, 3) for i, n in enumerate(names)},
-        "sf": 0.1,
-        "calibration": {"md5_chain_sec": 0.2169, "iters": 400_000},
-    }
+    # the payload main() emits, every field filled with a value as wide
+    # as a real run's (BENCH_LOCAL.json), so the headroom tested is the
+    # headroom the real tail line has
+    payload = bench._payload(
+        {n: round(1.0 + (i % 37) / 7, 3) for i, n in enumerate(names)},
+        0.1, 2, chain_sec=0.1997, parallel_sec=0.4271, workers=32,
+        load_start=[0.84, 3.49, 3.71], load_end=[15.41, 10.5, 7.81],
+        mid_run={"samples": 87, "p95": 14.24, "max": 17.2}, load_waited=150.0,
+    )
+    payload["contended"] = bench._detect_contention(payload, None)
     priority = list(dict.fromkeys(bench.ANCHOR_QUERIES + names))
     out = bench._tail_budgeted(payload, priority)
     line = json.dumps(out, separators=(",", ":"))
     # driver keeps the last 2000 chars; the budget leaves headroom
     assert len(line) <= 1900
-    assert json.loads(line)["value"] == 123.456
+    assert json.loads(line)["value"] == payload["value"]
     reported = list(out["queries"])
     # priority = pinned anchors first (round-stable PERF comparison,
     # VERDICT r14 item 1), then the rotating registry order

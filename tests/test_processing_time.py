@@ -364,3 +364,37 @@ def test_keyed_replay_dispatch_matches_per_key_reference(spark):
                 ref_dedup.append((k, int(r["event_id"]), s))
     assert got_time == sorted(ref_time, key=repr)
     assert got_dedup == sorted(ref_dedup, key=repr)
+
+
+def test_keyed_replay_refuses_big_int_keys_promoted_by_null_carry(spark):
+    """Null keys sort first, so an all-null Arrow batch (float64 in
+    pandas) is carried into the next batch's key runs. Concatenating it
+    with an int64 batch promotes keys >= 2^53 to float64, where 2^53
+    and 2^53 + 1 are the same number and their replay state would
+    merge; the replay must refuse instead."""
+    import pyspark.sql.functions as F
+
+    from siddhi_execution_unique_spark.streaming import dedup_proc_replay
+
+    big = 2 ** 53
+    rows = [(i, None, 1000 * i) for i in range(3)]
+    rows += [(3, big, 5000), (4, big + 1, 6000), (5, big + 2, 7000)]
+    df = (
+        spark.createDataFrame(rows, "event_id long, user_id long, ms long")
+        .withColumn("ts", F.timestamp_millis("ms"))
+    )
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+            "spark.sql.shuffle.partitions": "1"}
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        with pytest.raises(Exception, match=r"2\^53"):
+            dedup_proc_replay(
+                df, "user_id", 3600_000, ts="ts", tiebreak="event_id").collect()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
