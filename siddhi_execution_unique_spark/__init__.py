@@ -29,6 +29,11 @@ from siddhi_execution_unique_spark.operators import (
     time_length_batch,
     time_window,
 )
+from siddhi_execution_unique_spark import _pyworker
+
+# inside a PySpark worker, pay the per-task zip re-read and full-heap
+# collect once per worker instead (see _pyworker); a no-op elsewhere
+_pyworker.install()
 
 __all__ = [
     "deduplicate",

@@ -68,13 +68,13 @@ def get_spark(
             "changelogCheckpointing.enabled",
             "true",
         )
-        # Keep Python workers alive across JVM-only stretches: the
-        # factory reaps idle workers after ~60s and respawns them
-        # SERIALLY through the daemon (~0.2s each, 32 workers ≈ 7-25s
-        # stall on the next Python stage). A mixed JVM/Python pipeline
-        # wants a persistent worker pool.
-        .config("spark.python.worker.idleTimeoutSeconds", "0")
-        .config("spark.python.worker.killOnIdleTimeout", "false")
+        # Python workers: nothing to set. The factory reaps a worker
+        # idle for a minute (PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS,
+        # not configurable); spark.python.worker.idleTimeoutSeconds and
+        # killOnIdleTimeout only govern a watchdog for unresponsive
+        # workers, and their defaults (0 = off, false) are what we want.
+        # A reaped worker's replacement re-runs _pyworker.install() on
+        # its first package import.
         # Spark 4 routes lower()/upper() on non-ASCII text through ICU
         # case mappings whose one-time init burns minutes of CPU per
         # JVM (observed stuck in CollationAwareUTF8String.<clinit>);

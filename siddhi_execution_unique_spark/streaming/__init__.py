@@ -433,10 +433,8 @@ def length_batch_stream(
 
 def _length_batch_walk(pdf, columns, key, ts, is_timestamp, keep, n,
                        batch_seq, forming, prev):
-    """One micro-batch chunk of the lengthBatch fire chain, shared by
-    the v1 (``applyInPandasWithState``) and v2
-    (``transformWithStateInPandas``) twins so both state APIs drive
-    byte-identical semantics. Returns ``(out_frame_or_None,
+    """One micro-batch chunk of the lengthBatch fire chain of
+    :func:`length_batch_stream`. Returns ``(out_frame_or_None,
     batch_seq, forming, prev)`` — ``forming``/``prev`` are rebound on
     fire, so callers must take the returned values."""
     pdf = pdf.sort_values(ts, kind="mergesort")
@@ -467,97 +465,6 @@ def _length_batch_walk(pdf, columns, key, ts, is_timestamp, keep, n,
         if is_timestamp and len(out):
             out[ts] = pd.to_datetime(out[ts], unit="ms")
     return out, batch_seq, forming, prev
-
-
-def length_batch_stream_v2(
-    df: DataFrame,
-    key: str,
-    window_length: int,
-    ts: str = "ts",
-    keep: str = "last",
-    partition_attr: str | None = None,
-) -> DataFrame:
-    """State-API-v2 twin of :func:`length_batch_stream`, built on
-    Spark 4's ``transformWithStateInPandas`` (``StatefulProcessor``
-    with typed value state — the supported successor of
-    ``applyInPandasWithState``, adding timers/TTL/list-state for
-    future use). The fire-chain semantics are the SAME code path
-    (:func:`_length_batch_walk`), so migrating a twin is a drop-in:
-    swap the grouped call, keep the walk.
-
-    ENVIRONMENT GATE (SURVEY §2j, re-checked r10): pyspark 4.1.2
-    plans this fine, but the Python state-server protocol imports
-    ``google.protobuf`` when the query STARTS; this container lacks
-    protobuf, so execution is blocked there. Plan construction is
-    exercised unconditionally by
-    ``tests/test_streaming.py::test_length_batch_v2_plan_builds``;
-    end-to-end parity vs the v1 twin auto-activates once protobuf is
-    installable (same test module, skip-pinned)."""
-    import json
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
-    if keep not in ("last", "first"):
-        raise ValueError(f"keep must be 'last' or 'first', got {keep!r}")
-    n = int(window_length)
-    if n <= 0:
-        raise ValueError(f"window.length must be a positive int, got {window_length!r}")
-    is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
-    columns = [f.name for f in df.schema.fields]
-    out_schema = StructType(
-        df.schema.fields
-        + [StructField("batch_seq", LongType()), StructField("channel", StringType())]
-    )
-    state_schema = StructType(
-        [
-            StructField("batch_seq", LongType()),
-            StructField("forming_json", StringType()),
-            StructField("prev_json", StringType()),
-        ]
-    )
-
-    class _LengthBatchProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._chain = handle.getValueState("chain", state_schema)
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            got = self._chain.get()
-            if got is not None:
-                batch_seq, forming_json, prev_json = got
-                forming = json.loads(forming_json)
-                prev = json.loads(prev_json)
-            else:
-                batch_seq, forming, prev = 0, {}, []
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                out, batch_seq, forming, prev = _length_batch_walk(
-                    pdf, columns, key, ts, is_timestamp, keep, n,
-                    batch_seq, forming, prev,
-                )
-                if out is not None:
-                    yield out
-            self._chain.update((batch_seq, json.dumps(forming), json.dumps(prev)))
-
-        def close(self) -> None:
-            pass
-
-    grouped = (
-        df.groupBy(partition_attr)
-        if partition_attr
-        else df.withColumn("_g", F.lit(1)).groupBy("_g")
-    )
-    return grouped.transformWithStateInPandas(
-        statefulProcessor=_LengthBatchProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
 
 
 def length_window_stream(

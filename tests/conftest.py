@@ -15,8 +15,8 @@ os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
 
 @pytest.fixture(scope="session")
 def spark():
-    # the shipped session factory (RocksDB state store, ICU off,
-    # worker lifecycle tuning) IS part of what the tests must cover
+    # the shipped session factory (RocksDB state store, ICU off)
+    # IS part of what the tests must cover
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     s = get_spark(
         app_name="siddhi-unique-spark-tests",

@@ -259,60 +259,6 @@ def test_length_batch_stream_fires_at_n_distinct(spark, workdir):
     assert not any(r["channel"] == "expired" for r in rows)  # no prior batch yet
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_length_batch_v2_plan_builds(spark, workdir):
-    """State-API-v2 shim (VERDICT r09 item 2): the
-    transformWithStateInPandas twin must PLAN on this pyspark — a
-    drop-in migration is wiring, not semantics (the fire chain is the
-    shared _length_batch_walk). Plan construction needs no protobuf;
-    only query start does."""
-    write_batch(workdir / "in", "001.parquet", [(1000, 1, "a", 1.0)])
-    out = stw.length_batch_stream_v2(
-        read_stream(spark, workdir / "in"), "k", 3, ts="ts"
-    )
-    assert out.isStreaming
-    names = [f.name for f in out.schema.fields]
-    assert names[-2:] == ["batch_seq", "channel"]
-    # same output surface as the certified v1 twin
-    v1 = stw.length_batch_stream(read_stream(spark, workdir / "in"), "k", 3, ts="ts")
-    assert out.schema == v1.schema
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="container lacks google.protobuf: transformWithStateInPandas' "
-    "Python state-server protocol cannot start (SURVEY §2j, re-checked "
-    "r10 — query start fails with STREAMING_PYTHON_RUNNER_INITIALIZATION_"
-    "FAILURE). This parity test auto-activates once protobuf exists.",
-)
-def test_length_batch_v2_matches_v1(spark, workdir):
-    """End-to-end v1↔v2 parity on the same two-file replay: identical
-    emissions (ids, batch_seq, channel) through both state APIs."""
-    write_batch(workdir / "in", "001.parquet",
-                [(1000, 1, "a", 1.0), (2000, 2, "a", 2.0), (3000, 3, "b", 3.0)])
-    write_batch(workdir / "in", "002.parquet",
-                [(4000, 4, "c", 4.0), (5000, 5, "d", 5.0), (6000, 6, "e", 6.0)])
-
-    def emissions(fn, tag):
-        out = fn(read_stream(spark, workdir / "in"), "k", 3, ts="ts")
-        res = run_available(spark, out, f"lbv2_{tag}", workdir / f"ckpt_{tag}")
-        return sorted(
-            (r["event_id"], r["batch_seq"], r["channel"]) for r in res.collect()
-        )
-
-    assert emissions(stw.length_batch_stream_v2, "v2") == emissions(
-        stw.length_batch_stream, "v1"
-    )
-
-
 def test_length_batch_stream_checkpoint_resume_emits_expired(spark, workdir):
     outdir = workdir / "out"
 
