@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
-from siddhi_execution_unique_spark.session import get_spark
+from siddhi_execution_unique_spark.session import get_spark, launch_record
 
 
 def force(df) -> None:
@@ -346,6 +346,9 @@ def main() -> None:
     except (OSError, ValueError):
         pass
     payload["contended"] = _detect_contention(payload, prev)
+    # how the driver JVM started (class-data sharing used, dumped or off):
+    # the full payload says which start-up the run measured
+    payload["session"] = launch_record()
     # every run lands in BENCH_LAST_RUN.json; only a CLEAN run may
     # replace the committed solo artifact (VERDICT r12 #2: a
     # contended driver run clobbered the committed solo payload)
@@ -388,6 +391,7 @@ def _tail_budgeted(payload: dict, priority: list[str],
         n for n in sorted(timings) if n not in set(priority)
     ]
     out = dict(payload)
+    out.pop("session", None)  # the full file keeps the launch record
     # the reasons list can be long — the flag is the tail-line signal,
     # the full file keeps the evidence
     if isinstance(out.get("contended"), dict):
