@@ -10,13 +10,14 @@ The driver JVM starts from a cached class-data-sharing archive (JDK
 dynamic CDS, ``_cds``): most of a fresh JVM's start-up is loading
 Spark's classes, and the archive maps them from one file instead. On a
 4-core host that takes ``get_spark`` from 6-7 s to 3-4 s and the
-first Python stage from 5 s to 3.5 s. The archive (140-170 MB) lives
+first Python stage from 5 s to 3.5 s. The archive (about 146 MB) lives
 in ``${XDG_CACHE_HOME:-~/.cache}/siddhi_execution_unique_spark/cds/``,
 one per JDK, Spark jar set, pyspark version and driver classpath. The
-first process on a host without one pays for writing it: a few seconds
-more at start-up, and 12-14 s when it exits, while it waits for the
-JVM to write and publish the archive. Deleting the directory resets the
-cache. :func:`launch_record` tells how this process's JVM started.
+first process on a host without one starts as it would without the
+cache; when it exits, it writes the archive in a child process and
+waits for it (a one-time cost of about 40 s at exit, never inside the
+session's own work). Deleting the directory resets the cache.
+:func:`launch_record` tells how this process's JVM started.
 """
 
 from __future__ import annotations

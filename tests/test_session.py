@@ -1,12 +1,13 @@
 """The driver JVM's class-data-sharing archive (`_cds`): when `get_spark`
-dumps, maps or skips it, how it publishes one, and that the JVM's CDS
-logging stays off the Python process's stdout."""
+maps or skips it, how a process without one writes it at exit and
+publishes it, and that the JVM's CDS logging stays off stdout."""
 
 import json
 import os
 import shutil
 import subprocess
 import sys
+import time
 
 import pytest
 from pyspark import SparkContext
@@ -75,38 +76,71 @@ def test_user_cds_flags_win(fake_home):
 
 def test_changed_jar_gives_new_key(fake_home):
     first = _plan()
-    _cds._discard(first)
     with open(fake_home / "jars" / "core.jar", "ab") as f:
         f.write(b"more")
     second = _plan()
-    _cds._discard(second)
     assert first.mode == second.mode == "dump"
     assert first.key != second.key
+
+
+def _fake_archive(key, size=64):
+    """A file that passes for a published archive of ``key``."""
+    path = os.path.join(_cds.cache_root(), f"{key}.{size}.jsa")
+    with open(path, "wb") as f:
+        f.write(_cds._DYNAMIC_MAGIC + b"\0" * (size - 4))
+    return path
 
 
 def test_caller_default_java_options_are_merged(fake_home):
     conf = session.spark_conf(extra_conf={"spark.driver.defaultJavaOptions": "-Dcaller=1",
                                           "spark.driver.extraJavaOptions": "-Dextra=1"})
+    archive = _fake_archive(_cds.plan(conf).key)
     p = _cds.plan(conf)
+    assert p.mode == "use" and p.archive == archive
     merged = _cds.with_java_opts(conf, p)
-    _cds._discard(p)
     opts = merged["spark.driver.defaultJavaOptions"].split()
-    assert "-Dcaller=1" in opts and "-Xlog:cds*=off" in opts
-    assert any(o.startswith("-XX:ArchiveClassesAtExit=") for o in opts)
+    assert opts == [f"-XX:SharedArchiveFile={archive}", "-Xlog:cds*=off", "-Dcaller=1"]
     assert merged["spark.driver.extraJavaOptions"] == "-Dextra=1"
 
 
+def test_a_session_without_archive_starts_without_cds_flags(fake_home):
+    conf = session.spark_conf()
+    p = _cds.plan(conf)
+    assert p.mode == "dump" and p.java_opts == "" and p.conf_dir is None
+    assert _cds.with_java_opts(conf, p) == conf
+    assert p.keyed_conf == {"spark.driver.memory": conf["spark.driver.memory"]}
+
+
 def test_lock_of_dead_pid_is_taken_over(fake_home):
-    p = _plan()
-    _cds._discard(p)
-    with open(p.lock, "w") as f:
+    lock = os.path.join(_cds.cache_root(), "k.lock")
+    os.makedirs(os.path.dirname(lock), exist_ok=True)
+    with open(lock, "w") as f:
         f.write(str(_dead_pid()))
-    taken = _plan()
-    assert taken.mode == "dump" and _cds._read_pid(taken.lock) == os.getpid()
+    assert _cds._take_lock(lock) and _cds._read_pid(lock) == os.getpid()
     # a live holder keeps its lock
-    with open(p.lock, "w") as f:
+    with open(lock, "w") as f:
         f.write(str(os.getppid()))
-    assert _plan().mode == "off"
+    assert not _cds._take_lock(lock)
+
+
+def test_lock_of_reused_pid_is_taken_over(fake_home):
+    """A lock left by a holder that died without cleaning up, whose pid
+    now belongs to a process started after the lock was written."""
+    lock = os.path.join(_cds.cache_root(), "k.lock")
+    os.makedirs(os.path.dirname(lock), exist_ok=True)
+    later = subprocess.Popen([sys.executable, "-c", "import sys; sys.stdin.read()"],
+                             stdin=subprocess.PIPE)
+    try:
+        with open(lock, "w") as f:
+            f.write(str(later.pid))
+        assert _cds._holder_alive(lock)
+        written = time.time() - 3600
+        os.utime(lock, (written, written))
+        assert not _cds._holder_alive(lock)
+        assert _cds._take_lock(lock) and _cds._read_pid(lock) == os.getpid()
+    finally:
+        later.stdin.close()
+        later.wait()
 
 
 def _gateway_stand_in(code):
@@ -116,30 +150,42 @@ def _gateway_stand_in(code):
 
 
 def test_publish_only_after_clean_exit(fake_home):
-    p = _plan()
-    with open(p.archive, "wb") as f:
-        f.write(_cds._DYNAMIC_MAGIC + b"\0" * 60)
-    assert _cds.publish(p, _gateway_stand_in(1)) is None
-    root = os.path.dirname(p.archive)
-    assert os.listdir(root) == ["conf"]
+    key = _plan().key
+    root = _cds.cache_root()
 
-    for stale in (f"{'0' * 16}.64.jsa", f"{'1' * 16}.{_dead_pid()}.dump"):
+    def dump():
+        path = os.path.join(root, f"{key}.{os.getpid()}.dump")
+        with open(path, "wb") as f:
+            f.write(_cds._DYNAMIC_MAGIC + b"\0" * 60)
+        return path
+
+    assert _cds.publish(dump(), key, _gateway_stand_in(1)) is None
+    assert _plan().mode == "dump"
+
+    for stale in (f"{'0' * 16}.64.jsa", f"{'1' * 16}.{_dead_pid()}.dump", f"{key}.failed"):
         with open(os.path.join(root, stale), "wb") as f:
             f.write(_cds._DYNAMIC_MAGIC + b"\0" * 60)
-    p = _plan()
-    with open(p.archive, "wb") as f:
-        f.write(_cds._DYNAMIC_MAGIC + b"\0" * 60)
-    final = _cds.publish(p, _gateway_stand_in(0))
-    # published under its key and length; another key's archive and a
-    # dead process's dump are gone
-    assert set(os.listdir(root)) == {"conf", f"{p.key}.64.jsa"}
+    final = _cds.publish(dump(), key, _gateway_stand_in(0))
+    # published under its key and length; another key's archive, a
+    # dead process's dump and a failure mark are gone
+    assert set(os.listdir(root)) == {"conf", f"{key}.64.jsa"}
     assert _plan().archive == final
     # a truncated archive is never handed to the JVM
     with open(final, "r+b") as f:
         f.truncate(10)
+    assert _plan().mode == "dump" and not os.path.exists(final)
+
+
+def test_failed_write_is_not_retried(fake_home):
+    """The fake `SPARK_HOME` cannot start a JVM, so the writer fails:
+    the key is marked, and later sessions start without trying again."""
+    p = _plan()
+    assert _cds.write(p) is None
+    root = _cds.cache_root()
+    assert os.path.exists(os.path.join(root, f"{p.key}.failed"))
+    assert not [n for n in os.listdir(root) if n.endswith((".lock", ".dump")) or n.startswith("write-")]
     again = _plan()
-    _cds._discard(again)
-    assert again.mode == "dump" and not os.path.exists(final)
+    assert again.mode == "off" and "failed before" in again.reason
 
 
 def test_bench_keeps_the_launch_record_out_of_the_tail_line():
@@ -190,7 +236,7 @@ def _log_opt(path):
 
 @pytest.fixture(scope="module")
 def dumped(tmp_path_factory):
-    """A cache primed by one dumping run."""
+    """A cache primed by one run that found no archive."""
     cache = tmp_path_factory.mktemp("cds_cache")
     result, stdout = _run_child(cache)
     return cache, result, stdout
@@ -201,9 +247,14 @@ def test_first_run_publishes_the_archive(dumped):
     assert result["record"]["cds"] == "dump"
     assert result["rows"] == EVER_ROWS
     assert "[cds" not in stdout
-    names = set(os.listdir(_cds_root(cache))) - {"conf"}
+    # the archive was written at exit by a child whose output went to
+    # train.log: no temp, lock or work file is left
+    root = _cds_root(cache)
+    names = set(os.listdir(root)) - {"conf", "train.log"}
     assert len(names) == 1 and _cds._ARCHIVE.fullmatch(names.pop()), names
-    assert not os.listdir(os.path.join(_cds_root(cache), "conf"))
+    assert not os.listdir(os.path.join(root, "conf"))
+    log = open(os.path.join(root, "train.log")).read()
+    assert "published " in log and "[cds" not in log
 
 
 def test_second_run_maps_the_archive(dumped, tmp_path):
@@ -247,5 +298,5 @@ def test_truncated_archive_falls_back(dumped, tmp_path):
     assert result["record"]["cds"] == "dump"
     assert result["rows"] == EVER_ROWS
     assert "[cds" not in stdout
-    # the run dumped a whole archive again
+    # the run wrote a whole archive again at exit
     assert _cds._cached(root, archive[:16]) is not None
