@@ -10,7 +10,9 @@ value-hash comparison is precision- and timezone-proof.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import time
 from collections.abc import Callable
 
@@ -779,38 +781,21 @@ def q_streaming_dedup_parity(spark, sf_dir):
     The oracle is the batch ``unique:deduplicate`` recursive SQL —
     the two engines must agree row-for-row on the kept chain
     (DeduplicateStreamProcessor.java:155-178 semantics)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
-    from siddhi_execution_unique_spark.streaming.sources import stream_table
 
     work = _stream_work(prefix="sgraft_dedup_stream_")
-    indir = os.path.join(work, "in")
-    os.makedirs(indir)
-    schema = _stage_replay_file(
-        spark, sf_dir, "events", os.path.join(indir, "events.parquet"))
-    sdf = stream_table(spark, indir, schema)
+    sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.deduplicate_exact_stream(sdf, "user_id", HOUR, ts="ts")
-    outdir = os.path.join(work, "out")
     # project epoch-millis BEFORE the sink: parquet round-trips of
     # timestamp columns come back TIMESTAMP_NTZ under Spark 4's
     # inference, and reinterpreting the naive value is only correct in
     # a UTC session — a bigint is timezone-proof in any driver session
-    q = (
-        out.select(
-            "event_id",
-            F.unix_millis("ts").alias("ts_ms"),
-            "user_id", "event_type", "value", "props",
-        )
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    out = out.select(
+        "event_id",
+        F.unix_millis("ts").alias("ts_ms"),
+        "user_id", "event_type", "value", "props",
     )
-    q.awaitTermination()
-    return spark.read.parquet(outdir).select(*_EVENT_COLS)
+    return _drain(spark, out, work).select(*_EVENT_COLS)
 
 
 def q_streaming_length_parity(spark, sf_dir):
@@ -821,60 +806,61 @@ def q_streaming_length_parity(spark, sf_dir):
     and checked against the batch emission-log CLOSED FORM oracle
     (`_length_emissions_oracle`) — the twin's per-arrival walk and the
     window+join algebra must produce the identical emission multiset."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
-    from siddhi_execution_unique_spark.streaming.sources import stream_table
 
     work = _stream_work(prefix="sgraft_length_stream_")
-    indir = os.path.join(work, "in")
-    os.makedirs(indir)
-    schema = _stage_replay_file(
-        spark, sf_dir, "events", os.path.join(indir, "events.parquet"))
-    sdf = stream_table(spark, indir, schema)
+    sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.length_window_stream(sdf, "user_id", 100, ts="ts")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.select("event_id", "user_id", "channel")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out.select("event_id", "user_id", "channel"), work)
 
 
 _REPLAY_SORT = {"events": ("ts", "event_id"), "documents": ("doc_id",),
                 "embeddings": ("vec_id",)}
 
-# Streaming-certification work dirs are reaped LAZILY (r14, guide §1.4
-# applied to the harness): the old shape materialized every sink
-# read-back through an eager localCheckpoint purely so the temp
-# input/checkpoint/output dirs could be deleted before returning —
-# a second full copy of every result (measured 4.6 s -> 3.3 s on the
-# dedup twin certification). Now the entry returns the LAZY parquet
-# read of its own sink and the dirs survive until a later entry
-# invocation reaps them (each result is consumed — hashed, benched, or
-# compared — before the next entry runs in every harness: bench.py,
-# the driver, the parity suites). Nothing is cached across runs: every
-# invocation stages fresh inputs, runs the stream, and reads its own
-# run's sink.
 _STREAM_WORK_DIRS: list[str] = []
 
 
 def _stream_work(prefix: str) -> str:
-    import shutil
-    import tempfile
-
+    """A fresh work dir for one entry invocation. The oldest dirs
+    beyond the last five are deleted here, not by the entry that made
+    them: its result may still read from the dir (see :func:`_drain`)."""
     while len(_STREAM_WORK_DIRS) > 4:
         shutil.rmtree(_STREAM_WORK_DIRS.pop(0), ignore_errors=True)
     work = tempfile.mkdtemp(prefix=prefix)
     _STREAM_WORK_DIRS.append(work)
     return work
+
+
+def _drain(spark, out: DataFrame, work: str, sink: str = "parquet",
+           mode: str = "append", name: str | None = None) -> DataFrame:
+    """Run the streaming query ``out`` over all its available input
+    (``trigger(availableNow=True)``) and return what its sink holds.
+
+    The query checkpoints to ``work/ckpt``, so a second call over the
+    same ``work`` resumes the same query. A ``parquet`` or ``evtlog``
+    sink writes to ``work/out`` and the result is the lazy batch read
+    of that directory; a ``memory`` sink registers the table ``name``
+    and the result is ``spark.table(name)``.
+
+    The result is not copied before returning, so the work dir must
+    outlive the call: :func:`_stream_work` deletes it a few
+    certifications later. That is safe because every caller of
+    ``queries()`` (bench.py, the correctness gate, the parity suites)
+    consumes an entry's result before the next entry runs, and it
+    saves an eager second copy of every result. Nothing is cached across runs: each invocation stages fresh
+    inputs, runs the stream and reads its own sink."""
+    w = (
+        out.writeStream.format(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+    )
+    if sink == "memory":
+        w.queryName(name).start().awaitTermination()
+        return spark.table(name)
+    path = os.path.join(work, "out")
+    w.option("path", path).start().awaitTermination()
+    return spark.read.format(sink).option("path", path).load()
 
 
 def _stage_replay_file(spark, sf_dir: str, table: str, dest: str):
@@ -885,9 +871,6 @@ def _stage_replay_file(spark, sf_dir: str, table: str, dest: str):
     single-partition file sorted by the replay convention's arrival
     order (the same (ts, tiebreak) the oracles replay) so the
     certification feeds at any scale. Returns the table schema."""
-    import shutil
-    import tempfile
-
     src = os.path.join(sf_dir, table + ".parquet")
     if not os.path.isdir(src):
         shutil.copy(src, dest)
@@ -896,7 +879,7 @@ def _stage_replay_file(spark, sf_dir: str, table: str, dest: str):
     sort_cols = _REPLAY_SORT.get(table)
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    tmp = tempfile.mkdtemp(prefix="sgraft_consol_")
+    tmp = dest + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
     part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
     shutil.move(os.path.join(tmp, part), dest)
@@ -961,33 +944,18 @@ def _write_sentinel_row(staged: str, dest: str) -> None:
     papq.write_table(one, dest)
 
 
-def _stream_events_replay(spark, sf_dir: str, work: str):
-    """File-stream replay of the events table for the streaming-twin
-    driver certifications: one parquet file -> one micro-batch."""
-    import shutil
-
+def _stream_events_replay(spark, sf_dir: str, work: str, table: str = "events"):
+    """File-stream replay of one table for the streaming-twin
+    certifications: one parquet file -> one micro-batch. Only the
+    events table carries an event-time column."""
     from siddhi_execution_unique_spark.streaming.sources import stream_table
 
     indir = os.path.join(work, "in")
     os.makedirs(indir)
     schema = _stage_replay_file(
-        spark, sf_dir, "events", os.path.join(indir, "events.parquet"))
-    return stream_table(spark, indir, schema)
-
-
-def _run_memory_complete(spark, out, name: str, work: str):
-    """Drive a complete-mode aggregation twin to a memory sink with an
-    availableNow trigger and return the final table, materialized."""
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).localCheckpoint(eager=True)
+        spark, sf_dir, table, os.path.join(indir, table + ".parquet"))
+    return stream_table(spark, indir, schema,
+                        ts="ts" if table == "events" else None)
 
 
 def q_streaming_ever_parity(spark, sf_dir):
@@ -997,20 +965,16 @@ def q_streaming_ever_parity(spark, sf_dir):
     the keyed max_by aggregation; the complete-mode final state must
     equal batch ``unique:ever`` row-for-row (oracle: the same
     _EVER_SQL the batch entry certifies against)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
-    work = tempfile.mkdtemp(prefix="sgraft_ever_stream_")
+    work = _stream_work(prefix="sgraft_ever_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.ever_stream(sdf, "user_id", ts="ts").select(
         "event_id", F.unix_millis("ts").alias("ts_ms"),
         "user_id", "event_type", "value", "props",
     )
-    res = _run_memory_complete(spark, out, "sgraft_ever_parity_sink", work)
-    shutil.rmtree(work, ignore_errors=True)
-    return res
+    return _drain(spark, out, work, sink="memory", mode="complete",
+                  name="sgraft_ever_parity_sink")
 
 
 def q_streaming_time_batch_parity(spark, sf_dir):
@@ -1019,21 +983,17 @@ def q_streaming_time_batch_parity(spark, sf_dir):
     aggregation over a file-stream replay; the complete-mode final
     state must equal the batch hourly-grid operator (oracle: the
     unique_time_batch SQL)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
-    work = tempfile.mkdtemp(prefix="sgraft_tbatch_stream_")
+    work = _stream_work(prefix="sgraft_tbatch_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.tumbling_batch_stream(sdf, "user_id", HOUR, ts="ts").select(
         "event_id", F.unix_millis("ts").alias("ts_ms"),
         "user_id", "event_type", "value", "props",
         "batch_start_ms", "batch_end_ms",
     )
-    res = _run_memory_complete(spark, out, "sgraft_tbatch_parity_sink", work)
-    shutil.rmtree(work, ignore_errors=True)
-    return res
+    return _drain(spark, out, work, sink="memory", mode="complete",
+                  name="sgraft_tbatch_parity_sink")
 
 
 def q_streaming_length_batch_parity(spark, sf_dir):
@@ -1044,26 +1004,13 @@ def q_streaming_length_batch_parity(spark, sf_dir):
     a file-stream and checked against the batch recursive fire-chain
     oracle: current = every fired batch, expired = every batch with a
     successor fire, at its own batch_seq."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_lbatch_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.length_batch_stream(sdf, "user_id", 50, ts="ts")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.select("event_id", "user_id", "batch_seq", "channel")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(
+        spark, out.select("event_id", "user_id", "batch_seq", "channel"), work)
 
 
 def q_siddhiql_streaming_agg_parity(spark, sf_dir):
@@ -1074,9 +1021,6 @@ def q_siddhiql_streaming_agg_parity(spark, sf_dir):
     (siddhiql.run_app_streaming_aggregates) and must land on the batch
     engine's final state — the oracle is the identical SQL the batch
     siddhiql_group_having entry certifies against."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import siddhiql as sq
 
     app = """
@@ -1086,11 +1030,9 @@ def q_siddhiql_streaming_agg_parity(spark, sf_dir):
     having n > 20
     insert into agg;
     """
-    work = tempfile.mkdtemp(prefix="sgraft_sql_agg_parity_")
+    work = _stream_work(prefix="sgraft_sql_agg_parity_")
     sdf = _stream_events_replay(spark, sf_dir, work)
-    res = sq.run_app_streaming_aggregates(app, {"events": sdf})["agg"]
-    shutil.rmtree(work, ignore_errors=True)
-    return res
+    return sq.run_app_streaming_aggregates(app, {"events": sdf})["agg"]
 
 
 def q_streaming_time_length_batch_parity(spark, sf_dir):
@@ -1101,9 +1043,6 @@ def q_streaming_time_length_batch_parity(spark, sf_dir):
     (oracle: _time_length_batch_oracle with the same per-type filter).
     Filtered to one event_type to bound the single-state-group cost —
     the semantics under certification are identical."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_tlb_stream_")
@@ -1111,19 +1050,9 @@ def q_streaming_time_length_batch_parity(spark, sf_dir):
         F.col("event_type") == "purchase"
     )
     out = stw.time_length_batch_stream(sdf, "user_id", 6 * HOUR, 20, ts="ts")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.filter(F.col("channel") == "current")
-        .select("event_id", "user_id", "batch_seq", "fired_at_ms", "fire_reason")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    out = out.filter(F.col("channel") == "current").select(
+        "event_id", "user_id", "batch_seq", "fired_at_ms", "fire_reason")
+    return _drain(spark, out, work)
 
 
 _RT_SCHEMA = (
@@ -1141,9 +1070,6 @@ def _q_source_roundtrip(spark, sf_dir, fmt: str):
     oracle's own representation) so text serialization can't lose
     sub-millisecond precision; doubles and JSON-bearing props survive
     quoting round-trip exactly."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import sources as src
 
     work = _stream_work(prefix=f"sgraft_{fmt}_src_")
@@ -1154,11 +1080,9 @@ def _q_source_roundtrip(spark, sf_dir, fmt: str):
     )
     src.write_table(flat, path, fmt)
     back = src.load_path(spark, path, fmt, _RT_SCHEMA)
-    out = ops.ever(back, "user_id", ts="ts_ms", tiebreak="event_id").select(
+    return ops.ever(back, "user_id", ts="ts_ms", tiebreak="event_id").select(
         "event_id", "ts_ms", "user_id", "event_type", "value", "props"
     )
-    res = out
-    return res
 
 
 def q_source_python_datasource(spark, sf_dir):
@@ -1171,9 +1095,6 @@ def q_source_python_datasource(spark, sf_dir):
     certified against the same _EVER_SQL oracle as the parquet and
     csv/jsonl source paths (sources/eventlog.py; the reference's
     custom-io extension surface, SURVEY.md §2b)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark.sources.eventlog import register_eventlog
 
     register_eventlog(spark)
@@ -1185,11 +1106,9 @@ def q_source_python_datasource(spark, sf_dir):
     )
     flat.write.format("evtlog").mode("overwrite").option("path", path).save()
     back = spark.read.format("evtlog").option("path", path).load()
-    out = ops.ever(back, "user_id", ts="ts_ms", tiebreak="event_id").select(
+    return ops.ever(back, "user_id", ts="ts_ms", tiebreak="event_id").select(
         "event_id", "ts_ms", "user_id", "event_type", "value", "props"
     )
-    res = out
-    return res
 
 
 def q_streaming_python_sink_parity(spark, sf_dir):
@@ -1204,9 +1123,6 @@ def q_streaming_python_sink_parity(spark, sf_dir):
     evtlog batch reader must hash-match the same batch
     recursive-chain oracle as ``streaming_dedup_parity``
     (sources/eventlog.py)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
     from siddhi_execution_unique_spark.sources.eventlog import register_eventlog
 
@@ -1217,18 +1133,7 @@ def q_streaming_python_sink_parity(spark, sf_dir):
         "event_id", F.unix_millis("ts").alias("ts_ms"),
         "user_id", "event_type", "value", "props",
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("evtlog")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    back = spark.read.format("evtlog").option("path", outdir).load()
-    res = back.select(*_EVENT_COLS)
-    return res
+    return _drain(spark, out, work, sink="evtlog").select(*_EVENT_COLS)
 
 
 def q_streaming_python_source_parity(spark, sf_dir):
@@ -1244,9 +1149,6 @@ def q_streaming_python_source_parity(spark, sf_dir):
     (sources/eventlog.py). With the batch entry, the stream sink, and
     this, all four quadrants of the Python DataSource API
     (batch/stream x read/write) are oracle-certified."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
     from siddhi_execution_unique_spark.sources.eventlog import (
         EVENTLOG_SCHEMA,
@@ -1268,10 +1170,8 @@ def q_streaming_python_source_parity(spark, sf_dir):
         .load()
     )
     out = stw.ever_stream(sdf, "user_id", ts="ts_ms")
-    res = _run_memory_complete(spark, out, "pysrc_ever", work).select(
-        *_EVENT_COLS
-    )
-    return res
+    return _drain(spark, out, work, sink="memory", mode="complete",
+                  name="pysrc_ever").select(*_EVENT_COLS)
 
 
 def q_streaming_python_source_partitioned_parity(spark, sf_dir):
@@ -1283,9 +1183,6 @@ def q_streaming_python_source_partitioned_parity(spark, sf_dir):
     width, not driver memory. The exact-dedup twin consumes the
     custom stream and must hash-match the batch recursive-chain
     oracle (sources/eventlog.py)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
     from siddhi_execution_unique_spark.sources.eventlog import (
         EVENTLOG_SCHEMA,
@@ -1308,20 +1205,7 @@ def q_streaming_python_source_partitioned_parity(spark, sf_dir):
         .load()
     )
     out = stw.deduplicate_exact_stream(sdf, "user_id", HOUR, ts="ts_ms")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.select(*_EVENT_COLS)
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # lazy sink read-back (r14): _stream_work reaps the dir later, so
-    # no eager second copy of the result is needed
-    res = spark.read.parquet(outdir).select(*_EVENT_COLS)
-    return res
+    return _drain(spark, out.select(*_EVENT_COLS), work).select(*_EVENT_COLS)
 
 
 def q_source_csv_roundtrip(spark, sf_dir):
@@ -1341,9 +1225,6 @@ def q_streaming_join_parity(spark, sf_dir):
     file-stream replay, checked pair-for-pair against the plain batch
     interval join (DuckDB oracle with the identical epoch-ms
     predicate)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_join_stream_")
@@ -1351,17 +1232,7 @@ def q_streaming_join_parity(spark, sf_dir):
     out = stw.interval_join_stream(
         sdf, "click", "purchase", 30 * 60 * 1000, key="user_id", ts="ts"
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_outer_join_parity(spark, sf_dir):
@@ -1373,9 +1244,6 @@ def q_streaming_outer_join_parity(spark, sf_dir):
     ``l_ms + within <= least(max_click_ms, max_purchase_ms) - delay``
     (boundary inequality and min-watermark policy both empirically
     pinned; see tests/test_streaming.py)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_ojoin_stream_")
@@ -1384,17 +1252,7 @@ def q_streaming_outer_join_parity(spark, sf_dir):
         sdf, "click", "purchase", 30 * 60 * 1000,
         key="user_id", ts="ts", how="left_outer",
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_source_bucketed_join(spark, sf_dir):
@@ -1406,14 +1264,12 @@ def q_source_bucketed_join(spark, sf_dir):
     reuses its grouping column so the distribution carries into the
     join. Pay the shuffle once at ingest; every later keyed pass is
     co-located. Oracle: the same result as the broadcast-join entry."""
-    import shutil
-    import tempfile
     import uuid
 
     from siddhi_execution_unique_spark.sources import write_bucketed
 
     tag = uuid.uuid4().hex[:8]
-    work = tempfile.mkdtemp(prefix="sgraft_bucketed_")
+    work = _stream_work(prefix="sgraft_bucketed_")
     te, tc = f"ev_bucketed_{tag}", f"cust_bucketed_{tag}"
     try:
         be = write_bucketed(
@@ -1438,7 +1294,6 @@ def q_source_bucketed_join(spark, sf_dir):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {te}")
         spark.sql(f"DROP TABLE IF EXISTS {tc}")
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def q_siddhiql_streaming_join_parity(spark, sf_dir):
@@ -1448,9 +1303,6 @@ def q_siddhiql_streaming_join_parity(spark, sf_dir):
     contents, then the batch join lowering over the staged tables;
     Spark cannot join two streaming aggregates in one query). Lands
     bit-for-bit on the batch join's certified oracle."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import siddhiql as sq
 
     app = """
@@ -1479,25 +1331,12 @@ def q_streaming_session_native_parity(spark, sf_dir):
     ``session_end <= max(ts) - delay``, inclusive. The oracle is the
     batch native-semantics gaps-and-islands filtered by that
     watermark rule."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_snb_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.session_window_native_stream(sdf, 2 * HOUR)
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_quantile_parity(spark, sf_dir):
@@ -1507,25 +1346,13 @@ def q_streaming_quantile_parity(spark, sf_dir):
     ``bottomk_sample_quantiles`` bit-for-bit (same JVM md5 hash, same
     integer-ceil rank selection) — certified against the batch
     operator's own DuckDB oracle."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_qsk_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.quantile_sample_stream(sdf)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sgraft_qsk_parity_sink")
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table("sgraft_qsk_parity_sink")
-    return res
+    return _drain(spark, out, work, sink="memory", mode="update",
+                  name="sgraft_qsk_parity_sink")
 
 
 def q_streaming_rate_shape_parity(spark, sf_dir):
@@ -1537,9 +1364,6 @@ def q_streaming_rate_shape_parity(spark, sf_dir):
     ``rate_events`` executes) is driven here by a DETERMINISTIC
     file-stream of (value, timestamp) ticks derived from the events
     table and oracle-checked column-for-column."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark.streaming.sources import shape_rate_events
 
     work = _stream_work(prefix="sgraft_rate_shape_")
@@ -1561,17 +1385,7 @@ def q_streaming_rate_shape_parity(spark, sf_dir):
     out = shape_rate_events(sdf).select(
         "event_id", "user_id", "event_type", "value", "props"
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_external_time_batch_parity(spark, sf_dir):
@@ -1582,9 +1396,6 @@ def q_streaming_external_time_batch_parity(spark, sf_dir):
     time.out, exactly the reference's event-driven behavior — the
     oracle is the batch externalTimeBatch algebra minus the last
     present batch, on the same per-type filter."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_etb_stream_")
@@ -1592,18 +1403,8 @@ def q_streaming_external_time_batch_parity(spark, sf_dir):
         F.col("event_type") == "purchase"
     )
     out = stw.external_time_batch_stream(sdf, "user_id", 2 * HOUR, ts="ts")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.select("event_id", "user_id", "batch_start_ms", "batch_end_ms")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out.select(
+        "event_id", "user_id", "batch_start_ms", "batch_end_ms"), work)
 
 
 def q_streaming_kmv_parity(spark, sf_dir):
@@ -1613,25 +1414,13 @@ def q_streaming_kmv_parity(spark, sf_dir):
     bit (same md5-derived hash, same rounded estimator). Projected to
     (event_type, kmv_estimate) — the twin reports the sketch size
     n_k = min(k, distinct), not the exact count."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_kmv_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.kmv_stream(sdf).select("event_type", "kmv_estimate")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sgraft_kmv_parity_sink")
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table("sgraft_kmv_parity_sink")
-    return res
+    return _drain(spark, out, work, sink="memory", mode="update",
+                  name="sgraft_kmv_parity_sink")
 
 
 def q_streaming_countmin_parity(spark, sf_dir):
@@ -1639,17 +1428,12 @@ def q_streaming_countmin_parity(spark, sf_dir):
     cells merge by SUM, so the complete-mode final (i, cell, c) table
     must equal the batch sketch's cells row-for-row (same md5 cell
     hash on both engines)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
-    work = tempfile.mkdtemp(prefix="sgraft_cm_stream_")
+    work = _stream_work(prefix="sgraft_cm_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
-    out = stw.countmin_stream(sdf)
-    res = _run_memory_complete(spark, out, "sgraft_cm_parity_sink", work)
-    shutil.rmtree(work, ignore_errors=True)
-    return res
+    return _drain(spark, stw.countmin_stream(sdf), work, sink="memory",
+                  mode="complete", name="sgraft_cm_parity_sink")
 
 
 def q_streaming_sessionize_parity(spark, sf_dir):
@@ -1679,21 +1463,7 @@ def q_streaming_sessionize_parity(spark, sf_dir):
     _stamp_arrival_order(indir, ["0_events.parquet", "1_sentinel.parquet"])
     sdf = stream_table(spark, indir, schema)
     out = stw.sessionize_stream(sdf, 2 * HOUR, ts="ts")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = (
-        spark.read.parquet(outdir)
-        .filter(F.col("user_id") >= 0)
-        
-    )
-    return res
+    return _drain(spark, out, work).filter(F.col("user_id") >= 0)
 
 
 def q_streaming_time_window_parity(spark, sf_dir):
@@ -1704,26 +1474,12 @@ def q_streaming_time_window_parity(spark, sf_dir):
     the replay: an event expires iff a later same-key event exists, or
     its ts + T lies strictly below the final watermark
     (max ts - the 10 s delay)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_tw_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.time_window_stream(sdf, "user_id", DAY, ts="ts")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.select("event_id", "user_id", "channel")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out.select("event_id", "user_id", "channel"), work)
 
 
 def q_streaming_first_parity(spark, sf_dir):
@@ -1734,9 +1490,6 @@ def q_streaming_first_parity(spark, sf_dir):
     partition — arrival order is then the reference's canonical
     event-time order and the kept row per key is exactly the batch
     unique:first row (oracle: _FIRST_SQL)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
     from siddhi_execution_unique_spark.streaming.sources import stream_table
 
@@ -1750,21 +1503,11 @@ def q_streaming_first_parity(spark, sf_dir):
     )
     schema = spark.read.parquet(indir).schema
     out = stw.first_stream(stream_table(spark, indir, schema), "user_id")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.select(
-            "event_id", F.unix_millis("ts").alias("ts_ms"),
-            "user_id", "event_type", "value", "props",
-        )
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    out = out.select(
+        "event_id", F.unix_millis("ts").alias("ts_ms"),
+        "user_id", "event_type", "value", "props",
     )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir).select(*_EVENT_COLS)
-    return res
+    return _drain(spark, out, work).select(*_EVENT_COLS)
 
 
 def q_streaming_ever_dual_parity(spark, sf_dir):
@@ -1774,26 +1517,12 @@ def q_streaming_ever_dual_parity(spark, sf_dir):
     current, the replaced event expires immediately, and (ever keeps
     state forever) nothing ever times out. Closed form: expired iff a
     later same-key event exists."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_everdual_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.ever_stream_dual(sdf, "user_id", ts="ts")
-    outdir = os.path.join(work, "out")
-    q = (
-        out.select("event_id", "user_id", "channel")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out.select("event_id", "user_id", "channel"), work)
 
 
 def q_streaming_asof_parity(spark, sf_dir):
@@ -1803,9 +1532,6 @@ def q_streaming_asof_parity(spark, sf_dir):
     stream, purchases emit enriched with the last click at-or-before
     their event time. The oracle is the SAME SQL the batch
     ``events_asof_join`` entry certifies against."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_asof_stream_")
@@ -1822,17 +1548,7 @@ def q_streaming_asof_parity(spark, sf_dir):
         .otherwise(F.unix_millis("ts") - F.col("r_ts_ms"))
         .alias("gap_ms"),
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_range_agg_parity(spark, sf_dir):
@@ -1841,9 +1557,6 @@ def q_streaming_range_agg_parity(spark, sf_dir):
     semantics with O(window) per-key state): every purchase emits the
     count and milli-quantized value sum of its user's clicks in the
     trailing hour. Oracle: the batch ``events_range_join`` SQL."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_range_stream_")
@@ -1860,17 +1573,7 @@ def q_streaming_range_agg_parity(spark, sf_dir):
         F.col("n_in_window").alias("n_clicks_1h"),
         F.col("win_value_sum").alias("click_value_1h"),
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_funnel_parity(spark, sf_dir):
@@ -1880,25 +1583,13 @@ def q_streaming_funnel_parity(spark, sf_dir):
     exactly the batch operator's minimum-anchored chain (ties at equal
     ts are excluded by both engines' strict ``>`` step predicate).
     Oracle: the batch ``events_funnel`` SQL."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_funnel_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.funnel_stream(sdf)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sgraft_funnel_parity_sink")
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table("sgraft_funnel_parity_sink")
-    return res
+    return _drain(spark, out, work, sink="memory", mode="update",
+                  name="sgraft_funnel_parity_sink")
 
 
 def q_streaming_trend_parity(spark, sf_dir):
@@ -1908,12 +1599,9 @@ def q_streaming_trend_parity(spark, sf_dir):
     anchor ``t0_ms`` is the corpus epoch (a 1-row min aggregate —
     constant-size driver collect); the complete-mode final table must
     equal the batch sums bit-for-bit."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
-    work = tempfile.mkdtemp(prefix="sgraft_trend_stream_")
+    work = _stream_work(prefix="sgraft_trend_stream_")
     t0_ms = (
         _events(spark, sf_dir)
         .agg(F.min(F.unix_millis("ts")))
@@ -1921,9 +1609,8 @@ def q_streaming_trend_parity(spark, sf_dir):
     )
     sdf = _stream_events_replay(spark, sf_dir, work)
     out = stw.trend_stream(sdf, int(t0_ms), ts="ts")
-    res = _run_memory_complete(spark, out, "sgraft_trend_parity_sink", work)
-    shutil.rmtree(work, ignore_errors=True)
-    return res
+    return _drain(spark, out, work, sink="memory", mode="complete",
+                  name="sgraft_trend_parity_sink")
 
 
 def q_streaming_anomaly_parity(spark, sf_dir):
@@ -1932,26 +1619,11 @@ def q_streaming_anomaly_parity(spark, sf_dir):
     A replayed corpus closes every hour except each user's final one
     (a stream never sees its own end), so the oracle is the batch
     ``events_hourly_anomalies`` SQL minus each user's maximum hour."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_anom_stream_")
     sdf = _stream_events_replay(spark, sf_dir, work)
-    out = stw.anomaly_stream(sdf)
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, stw.anomaly_stream(sdf), work)
 
 
 def q_streaming_dedup_watermark_parity(spark, sf_dir):
@@ -1966,9 +1638,6 @@ def q_streaming_dedup_watermark_parity(spark, sf_dir):
     every state entry with kept_ts + delay <= watermark (boundary
     evicts — verified empirically); batch 2 then keeps the first
     arrival of every key not still in state."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from siddhi_execution_unique_spark import streaming as stw
@@ -1997,29 +1666,17 @@ def q_streaming_dedup_watermark_parity(spark, sf_dir):
 
     write_half(F.col("rn") <= n // 2, "001")
     schema = spark.read.parquet(indir).schema
-    outdir = os.path.join(work, "out")
 
     def run_once():
         out = stw.deduplicate_stream(
             stream_table(spark, indir, schema), "user_id", HOUR, ts="ts"
         )
-        q = (
-            out.select(
-                "event_id", F.unix_millis("ts").alias("ts_ms"), "user_id"
-            )
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return _drain(spark, out.select(
+            "event_id", F.unix_millis("ts").alias("ts_ms"), "user_id"), work)
 
     run_once()
     write_half(F.col("rn") > n // 2, "002")
-    run_once()
-    res = spark.read.parquet(outdir)
-    return res
+    return run_once()
 
 
 def q_streaming_curation_parity(spark, sf_dir):
@@ -2029,9 +1686,6 @@ def q_streaming_curation_parity(spark, sf_dir):
     first-wins equal the batch min-doc_id representative, so the
     streamed manifest must equal the batch ``corpus_curation`` SQL
     row-for-row."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark.functions import pipeline as fpipe
     from siddhi_execution_unique_spark.streaming.sources import stream_table
 
@@ -2045,17 +1699,7 @@ def q_streaming_curation_parity(spark, sf_dir):
     schema = spark.read.parquet(indir).schema
     sdf = stream_table(spark, indir, schema, ts=None)
     out = fpipe.curation_stream(sdf)
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_lsh_ingest_parity(spark, sf_dir):
@@ -2065,30 +1709,12 @@ def q_streaming_lsh_ingest_parity(spark, sf_dir):
     one micro-batch the bucket rep is the minimum doc_id, so the
     oracle is the signature algebra + a preceding-window min over each
     bucket."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
-    from siddhi_execution_unique_spark.streaming.sources import stream_table
 
     work = _stream_work(prefix="sgraft_lsh_stream_")
-    indir = os.path.join(work, "in")
-    os.makedirs(indir)
-    schema = _stage_replay_file(
-        spark, sf_dir, "documents", os.path.join(indir, "documents.parquet"))
-    sdf = stream_table(spark, indir, schema, ts=None)
+    sdf = _stream_events_replay(spark, sf_dir, work, table="documents")
     out = stw.lsh_ingest_stream(sdf)
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_index_ingest_parity(spark, sf_dir):
@@ -2097,30 +1723,12 @@ def q_streaming_index_ingest_parity(spark, sf_dir):
     (doc_id, term, tf) posting rows whose multiset must equal the
     batch explode of the same tokenizer (``text.SPARK_TOKS``
     semantics, including the empty token of whitespace-only docs)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
-    from siddhi_execution_unique_spark.streaming.sources import stream_table
 
     work = _stream_work(prefix="sgraft_index_stream_")
-    indir = os.path.join(work, "in")
-    os.makedirs(indir)
-    schema = _stage_replay_file(
-        spark, sf_dir, "documents", os.path.join(indir, "documents.parquet"))
-    sdf = stream_table(spark, indir, schema, ts=None)
+    sdf = _stream_events_replay(spark, sf_dir, work, table="documents")
     out = stw.index_ingest_stream(sdf)
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_streaming_pq_encode_parity(spark, sf_dir):
@@ -2129,31 +1737,13 @@ def q_streaming_pq_encode_parity(spark, sf_dir):
     rows replayed as a file-stream encode to (vec_id, m, code) rows
     that must equal the batch PQ encode bit-for-bit (oracle: the
     shared ``codes`` CTE every PQ oracle builds on)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
-    from siddhi_execution_unique_spark.streaming.sources import stream_table
 
     work = _stream_work(prefix="sgraft_pq_stream_")
-    indir = os.path.join(work, "in")
-    os.makedirs(indir)
-    schema = _stage_replay_file(
-        spark, sf_dir, "embeddings", os.path.join(indir, "embeddings.parquet"))
-    sdf = stream_table(spark, indir, schema, ts=None)
+    sdf = _stream_events_replay(spark, sf_dir, work, table="embeddings")
     corpus = load_table(spark, sf_dir, "embeddings")
     out = stw.pq_encode_stream(sdf, corpus)
-    outdir = os.path.join(work, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    return _drain(spark, out, work)
 
 
 def q_running_distinct_users(spark, sf_dir):
@@ -2443,9 +2033,6 @@ def q_streaming_partitioned_time_length_batch_parity(spark, sf_dir):
     over a file-stream, current channel checked against the
     per-instance interval algebra (the same oracle the batch
     partitioned entry certifies)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_ptlb_stream_")
@@ -2453,20 +2040,10 @@ def q_streaming_partitioned_time_length_batch_parity(spark, sf_dir):
     out = stw.time_length_batch_stream(
         sdf, "user_id", 6 * HOUR, 20, ts="ts", partition_attr="event_type"
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.filter(F.col("channel") == "current")
-        .select("event_type", "user_id", "event_id", "batch_seq",
-                "fired_at_ms", "fire_reason")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    out = out.filter(F.col("channel") == "current").select(
+        "event_type", "user_id", "event_id", "batch_seq",
+        "fired_at_ms", "fire_reason")
+    return _drain(spark, out, work)
 
 
 def q_streaming_partitioned_length_batch_parity(spark, sf_dir):
@@ -2476,9 +2053,6 @@ def q_streaming_partitioned_length_batch_parity(spark, sf_dir):
     distributes across executors. Replayed over a file-stream and
     checked against the per-instance recursive fire-chain oracle
     (the same algebra the batch partitioned entry certifies)."""
-    import shutil
-    import tempfile
-
     from siddhi_execution_unique_spark import streaming as stw
 
     work = _stream_work(prefix="sgraft_plb_stream_")
@@ -2486,19 +2060,9 @@ def q_streaming_partitioned_length_batch_parity(spark, sf_dir):
     out = stw.length_batch_stream(
         sdf, "user_id", 50, ts="ts", partition_attr="event_type"
     )
-    outdir = os.path.join(work, "out")
-    q = (
-        out.filter(F.col("channel") == "current")
-        .select("event_type", "user_id", "event_id", "batch_seq")
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(outdir)
-    return res
+    out = out.filter(F.col("channel") == "current").select(
+        "event_type", "user_id", "event_id", "batch_seq")
+    return _drain(spark, out, work)
 
 
 def q_siddhiql_partitioned_join(spark, sf_dir):

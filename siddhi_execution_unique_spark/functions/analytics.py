@@ -60,8 +60,8 @@ def funnel(
     outer left join), and without truncation Spark re-executes the
     whole earlier chain per reference — 2^(S-1) copies of step 1's
     aggregation in the worst case. The stored frame is at most one
-    row per converting user — the same size-bounded trade the join
-    lowerings' ``_materialize`` documents.
+    row per converting user — the same size-bounded trade the SiddhiQL
+    join lowerings make with their lazy ``_checkpointed`` artifacts.
     """
     if len(steps) < 2:
         raise ValueError(f"funnel needs >= 2 steps, got {len(steps)}")

@@ -18,7 +18,6 @@ from pyspark.sql.window import Window
 
 from siddhi_execution_unique_spark.functions.text import (  # noqa: F401
     checkpointed as _checkpointed,
-    materialized as _materialized,
     DUCK_TOKS,
     NORM_DUCK,
     NORM_SPARK,
@@ -191,7 +190,7 @@ def lsh_candidate_pairs(
     band (4 bands × 3 rows). Self-join on the band key — at scale this
     is a hash join on a high-cardinality key, never a cross join. The
     band table (shingle → signature pipeline) materializes once and
-    feeds both join sides (see :func:`_materialized`)."""
+    feeds both join sides (see :func:`_checkpointed`)."""
     sig = minhash_signatures(docs, shingle_rows=shingle_rows)
     bands = _band_keys(sig)
     if shingle_rows is None:
@@ -199,7 +198,7 @@ def lsh_candidate_pairs(
         # both self-join sides — materialize it once. When the caller
         # passes a (materialized) shingle frame, bands are two cheap
         # aggregations over it and need no checkpoint of their own.
-        bands = _materialized(bands, materialize)
+        bands = _checkpointed(bands) if materialize else bands
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
@@ -226,11 +225,10 @@ def near_dup_pairs(
     the join condition and re-evaluate per row, interpreted). A
     candidate pair with zero shared shingles drops out of the inner
     join — exactly the jaccard=0 < threshold case."""
-    ex = (
-        shingle_rows
-        if shingle_rows is not None
-        else _materialized(_distinct_shingles(docs), materialize)
-    )
+    ex = shingle_rows
+    if ex is None:
+        ex = _distinct_shingles(docs)
+        ex = _checkpointed(ex) if materialize else ex
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     pairs = lsh_candidate_pairs(
         docs, materialize=materialize,
@@ -536,7 +534,7 @@ def char_ngram_jaccard_pairs(docs: DataFrame, materialize: bool = True) -> DataF
         .filter(F.col("df") <= GRAM_DF_CAP)
         .drop("df")
     )
-    posts = _materialized(posts, materialize)
+    posts = _checkpointed(posts) if materialize else posts
     sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_g"))
     a, b = posts.alias("a"), posts.alias("b")
     inter = (
@@ -797,7 +795,7 @@ def minhash_accuracy(docs: DataFrame) -> DataFrame:
     used by :func:`near_dup_pairs`. Candidates whose shingle sets are
     disjoint have exact jaccard 0 (LEFT join + coalesce keeps them —
     precisely the false-positive rows the report exists to expose)."""
-    ex = _materialized(_distinct_shingles(docs), True)
+    ex = _checkpointed(_distinct_shingles(docs))
     sig = minhash_signatures(docs, shingle_rows=ex)
     pairs = lsh_candidate_pairs(docs, shingle_rows=ex)
     a = sig.select(
@@ -1003,7 +1001,7 @@ def incremental_near_dup(new_docs: DataFrame, manifest_sigs: DataFrame) -> DataF
     high-cardinality values (band_key, doc ids); the whole check is
     3 joins + 1 distinct regardless of manifest size. Signature
     agreement counting is 12 codegen comparisons, no Python."""
-    new_sigs = _materialized(minhash_signatures(new_docs))
+    new_sigs = _checkpointed(minhash_signatures(new_docs))
     new_bands = _band_keys(new_sigs)
     old_bands = _band_keys(manifest_sigs).select(
         F.col("doc_id").alias("old_id"), "band_key"

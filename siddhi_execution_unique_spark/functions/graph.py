@@ -32,7 +32,7 @@ from siddhi_execution_unique_spark.functions.dedup import (
     near_dup_pairs,
     near_dup_pairs_oracle,
 )
-from siddhi_execution_unique_spark.functions.text import materialized
+from siddhi_execution_unique_spark.functions.text import checkpointed
 
 N_ITERS = 3
 _Q = 1_000_000_000_000  # picounit quantization for rank contributions
@@ -57,7 +57,7 @@ def near_dup_pagerank(docs: DataFrame, n_iters: int = N_ITERS) -> DataFrame:
     if n_iters < 1:
         raise ValueError(f"near_dup_pagerank needs n_iters >= 1, got {n_iters}")
     pairs = near_dup_pairs(docs).select("doc_id_1", "doc_id_2")
-    edges = materialized(
+    edges = checkpointed(
         pairs.select(
             F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
         ).unionByName(
@@ -68,7 +68,7 @@ def near_dup_pagerank(docs: DataFrame, n_iters: int = N_ITERS) -> DataFrame:
     )
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     n = deg.agg(F.count("*").alias("n_nodes"))
-    nodes = materialized(deg.crossJoin(F.broadcast(n)))
+    nodes = checkpointed(deg.crossJoin(F.broadcast(n)))
     ranks = nodes.select(
         F.col("src").alias("node"), "deg", "n_nodes",
         F.expr("1 / cast(n_nodes as double)").alias("pr"),
@@ -120,7 +120,7 @@ def near_dup_triangles(docs: DataFrame) -> DataFrame:
     pivot, closure join), all on high-cardinality keys; no windows,
     nothing collected or broadcast beyond the 1-row degree bounds."""
     pairs = near_dup_pairs(docs).select("doc_id_1", "doc_id_2")
-    und = materialized(
+    und = checkpointed(
         pairs.select(
             F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
         ).unionByName(
@@ -130,7 +130,7 @@ def near_dup_triangles(docs: DataFrame) -> DataFrame:
         )
     )
     deg = und.groupBy("src").agg(F.count("*").alias("deg"))
-    oriented = materialized(
+    oriented = checkpointed(
         und.join(deg.select(F.col("src"), F.col("deg").alias("sdeg")), "src")
         .join(
             deg.select(F.col("src").alias("dst"), F.col("deg").alias("ddeg")),

@@ -131,9 +131,9 @@ def tfidf_cosine_pairs(
 
     The pruned weight table feeds FOUR consumers (both join sides of
     the dot product and both norm lookups); it is materialized once
-    (``text.materialized`` — at 100 TB: write the index to parquet
+    (``text.checkpointed`` — at 100 TB: write the index to parquet
     once, read it everywhere)."""
-    from siddhi_execution_unique_spark.functions.text import materialized
+    from siddhi_execution_unique_spark.functions.text import checkpointed
 
     toks = docs.select("doc_id", F.explode(F.expr(SPARK_TOKS)).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -152,7 +152,7 @@ def tfidf_cosine_pairs(
             ).alias("wq"),
         )
     )
-    weights = materialized(weights, materialize)
+    weights = checkpointed(weights) if materialize else weights
     norms = weights.groupBy("doc_id").agg(F.sum(F.expr("wq * wq")).alias("n2"))
     a = weights.select(
         F.col("doc_id").alias("doc_id_1"), "term", F.col("wq").alias("w1")
@@ -290,15 +290,15 @@ def phrase_search(docs: DataFrame, n_phrases: int = N_PHRASES) -> DataFrame:
     self-join shape parity-proven in ``text.bigram_logprob``."""
     if n_phrases < 1:
         raise ValueError(f"phrase_search needs n_phrases >= 1, got {n_phrases}")
-    from siddhi_execution_unique_spark.functions.text import materialized
+    from siddhi_execution_unique_spark.functions.text import checkpointed
 
-    toks = materialized(
+    toks = checkpointed(
         docs.select("doc_id", F.posexplode(F.expr(SPARK_TOKS)).alias("pos", "term"))
     )
     nxt = toks.select(
         "doc_id", (F.col("pos") - 1).alias("pos"), F.col("term").alias("w2")
     )
-    bigrams = materialized(
+    bigrams = checkpointed(
         toks.join(nxt, ["doc_id", "pos"]).select(
             "doc_id", "pos", F.col("term").alias("w1"), "w2"
         )

@@ -408,12 +408,12 @@ def embedding_near_dup_pairs(
     width ~100x at a 64-dim corpus). Mirrors the reference's
     key-based blocking philosophy (unique:ever key maps) applied to
     vector space."""
-    from siddhi_execution_unique_spark.functions.text import materialized
+    from siddhi_execution_unique_spark.functions.text import checkpointed
 
     # norm2 is an interpreted 64-element fold (see the module NOTE);
     # base feeds the band-keying pass and BOTH verification sides —
     # materialize it once instead of re-folding the corpus 3x
-    base = materialized(_with_norm2(emb).select("vec_id", "embedding", "norm2"))
+    base = checkpointed(_with_norm2(emb).select("vec_id", "embedding", "norm2"))
     bit = lambda p: (  # noqa: E731
         f"(CASE WHEN {_DOT_SPARK.format(a='embedding', b=_plane_literal_spark(p))}"
         f" >= 0 THEN 1 ELSE 0 END)"

@@ -42,6 +42,14 @@ def checkpointed(df: DataFrame, eager: bool = True) -> DataFrame:
     engine routes through here, so the mechanism is one switch, not a
     code audit.
 
+    Catalyst does not reuse exchanges across the different shuffle
+    keys a corpus-sized intermediate fans out into (measured: the gram
+    posting list is re-scanned 4x in the jaccard verifier without
+    this), so recomputing it dominates at scale. The checkpoint is the
+    local stand-in for what a 100 TB pipeline does explicitly: write
+    the posting/signature/token table out once and let every consumer
+    read the stored form.
+
     ``SPARK_GRAFT_MATERIALIZE`` selects it:
 
     - ``local`` (default): ``df.localCheckpoint(eager)``. Blocks live
@@ -70,22 +78,6 @@ def checkpointed(df: DataFrame, eager: bool = True) -> DataFrame:
             f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected 'local' or "
             "'reliable'")
     return df.localCheckpoint(eager=eager)
-
-
-def materialized(df: DataFrame, enabled: bool = True) -> DataFrame:
-    """Compute a shared corpus-sized intermediate ONCE and reuse it.
-
-    Catalyst does not reuse exchanges across the different shuffle keys
-    these pipelines fan out into (measured: the gram posting list is
-    re-scanned 4x in the jaccard verifier without this), so recomputing
-    the projection dominates at scale. The checkpoint is the
-    local-mode stand-in for what a 100 TB pipeline does explicitly:
-    write the posting/signature/token table to parquet once, then let
-    every consumer (join sides, size aggregates, verification) read
-    the materialized form. ``enabled=False`` keeps the full logical
-    pipeline visible for plan assertions. Mechanism per
-    :func:`checkpointed` (fault-tolerance configurable)."""
-    return checkpointed(df, eager=True) if enabled else df
 
 
 def _in_list_sql(var: str, words: tuple[str, ...]) -> str:
@@ -335,7 +327,7 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     total rides in as a one-ROW frame via a broadcast cross join —
     O(1) payload, legitimately broadcast at any corpus size (unlike
     per-document frames, which are never hinted)."""
-    rows = materialized(
+    rows = checkpointed(
         docs.select("doc_id", F.explode(F.expr(SPARK_TOKS)).alias("x"))
     )
     counts = rows.groupBy("x").agg(F.count("*").alias("n_x"))
@@ -371,7 +363,7 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     counts. Conditional probabilities divide two counts from the SAME
     aggregation tree, so both engines compute identical doubles before
     the round(6)."""
-    toks = materialized(
+    toks = checkpointed(
         docs.select(
             "doc_id", F.posexplode(F.expr(SPARK_TOKS)).alias("pos", "x")
         )
@@ -379,7 +371,7 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     nxt = toks.select(
         "doc_id", (F.col("pos") - 1).alias("pos"), F.col("x").alias("x2")
     )
-    pairs = materialized(
+    pairs = checkpointed(
         toks.join(nxt, ["doc_id", "pos"]).select("doc_id", "x", "x2")
     )
     pair_n = pairs.groupBy("x", "x2").agg(F.count("*").alias("n_xy"))

@@ -84,7 +84,7 @@ def spark_conf(
         # production-recommended RocksDB mode — checkpoint cost tracks
         # the batch's CHANGES, not total state size — and measured
         # ~10% off every streaming certification locally (r14 A/B,
-        # tools/exp_stream_conf2.py).
+        # OPTIMIZATION_r14.md).
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
         # Python workers: nothing to set. The factory reaps a worker
         # idle for a minute (PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS,

@@ -344,26 +344,15 @@ def _tag(df: DataFrame, channel: str) -> DataFrame:
     return df.withColumn(CHANNEL, F.lit(channel))
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Truncate a mixed-channel join side's shared artifact chain.
-
-    The instant-space lowerings reference each side's window-chain
-    artifacts from several places at once — the current∪expired probe
-    union, the other direction's interval side, and the fire-count
-    scalars — and Spark does NOT reuse exchanges across union
-    branches, so every reference re-executes the whole multi-window
-    sort chain from the source scan (measured: 64 parquet scans / 184
-    Exchange nodes for one tlb⋈tb all-channel query). An eager local
-    checkpoint materializes the chain exactly ONCE per ``run_app``
-    invocation and every consumer reads the stored rows; nothing
-    survives the invocation, so repeated runs recompute from the
-    source (no cross-run caching). At scale this trades one
-    data-sized block-store write for 2-3 re-executions of a
-    shuffle-heavy window cascade — the same discipline the iterative
-    operators (BPE, connected components) already apply. Mechanism
-    (localCheckpoint vs fault-tolerant reliable checkpoint) per
-    :func:`..functions.text.checkpointed`."""
-    return _checkpointed(df, eager=False)
+# The mixed-channel join lowerings reference each side's window-chain
+# artifacts from several places at once (the current∪expired probe
+# union, the other direction's interval side, the fire-count scalars),
+# and Spark does not reuse exchanges across union branches, so each
+# reference re-executes the whole sort chain from the scan (measured:
+# 64 parquet scans / 184 Exchange nodes for one tlb⋈tb all-channel
+# query). They checkpoint those artifacts lazily, with
+# ``_checkpointed(df, eager=False)``: computed once per ``run_app``
+# call, never cached across calls.
 
 
 def _need_tiebreak(window: str, tiebreak: str | None) -> str:
@@ -1286,7 +1275,7 @@ def _x_instant_artifacts(side, df, ts, tiebreak, channel):
         raise SiddhiQLError(f"unique:{win} has no mixed-channel lowering")
     # the interval log feeds the probe union AND the other join
     # direction — materialize the window chain once (guide §3.3)
-    a_iv = _materialize(a_iv)
+    a_iv = _checkpointed(a_iv, eager=False)
     cur = (
         a_iv.withColumn("__mx_pms", F.col("__mx_ems"))
         .withColumn("__mx_ptb", F.col("__mx_etb"))
@@ -1350,10 +1339,10 @@ def _tb_instant_artifacts(side, df, ts, tiebreak, channel, _tail_consts):
     keep = "first" if side["window"] == "firstTimeBatch" else "last"
     tb = _need_tiebreak(side["window"], tiebreak)
     tb_type = df.schema[tb].dataType
-    batched = _materialize(ops.time_batch(
+    batched = _checkpointed(ops.time_batch(
         df, ta[0], t_b, ts=ts, tiebreak=tiebreak,
         start_time_ms=anchor, keep=keep,
-    ))
+    ), eager=False)
     last_end = batched.agg(F.max("batch_end_ms").alias("__mx_lastend"))
     a_iv = (
         batched.crossJoin(F.broadcast(last_end))
@@ -1519,7 +1508,8 @@ def _tlb_instant_artifacts(side, df, ts, tiebreak, channel):
     # union, the other direction, AND the fire count — materialize it
     # once with the batch id still attached so n_fires is a cheap
     # distinct over stored rows instead of a chain re-execution
-    a_iv_k = _materialize(kept.select(*payload).join(fire_log, "__mx_k"))
+    a_iv_k = _checkpointed(
+        kept.select(*payload).join(fire_log, "__mx_k"), eager=False)
     a_iv = a_iv_k.drop("__mx_k")
     cur = (
         a_iv.withColumn("__mx_pms", F.col("__mx_ems"))
@@ -1826,10 +1816,10 @@ def _tb_side_artifacts(side, df, ts, tiebreak, channel, _tail_consts):
     anchor = (int(tc[1]) % t_b) if len(tc) > 1 else 0
     keep_b = "first" if side["window"] == "firstTimeBatch" else "last"
     # feeds find-state, the slot extents, and both probe branches
-    batched_b = _materialize(ops.time_batch(
+    batched_b = _checkpointed(ops.time_batch(
         df, key_b, t_b, ts=ts, tiebreak=tiebreak,
         start_time_ms=anchor, keep=keep_b,
-    ))
+    ), eager=False)
     slot_of_end = f"cast((batch_end_ms - {anchor}) div {t_b} as long)"
     b_find = batched_b.withColumn("__mx_fslot", F.expr(slot_of_end))
     m_agg = batched_b.agg(
@@ -2068,10 +2058,10 @@ def _run_join_mixed_tt(
         anchor = (int(consts[1]) % t_ms) if len(consts) > 1 else 0
         keep = "first" if side["window"] == "firstTimeBatch" else "last"
         df = _bind_stream({**side, "channel": "current"}, streams)
-        batched = _materialize(ops.time_batch(
+        batched = _checkpointed(ops.time_batch(
             df, args[0], t_ms, ts=ts, tiebreak=tiebreak,
             start_time_ms=anchor, keep=keep,
-        ))
+        ), eager=False)
         last = batched.agg(F.max("batch_end_ms").alias("__mx_lastend"))
         # exit = end + T for every batch but the last (NULL = forever)
         framed = (

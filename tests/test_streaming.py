@@ -1680,3 +1680,257 @@ def test_stream_work_dirs_reaped_lazily():
     while entry_mod._STREAM_WORK_DIRS:
         import shutil
         shutil.rmtree(entry_mod._STREAM_WORK_DIRS.pop(), ignore_errors=True)
+
+
+# Output types of every applyInPandasWithState twin, pinned.
+# pyspark's applyInPandasWithState serializer pads each Arrow batch
+# with an all-NA frame whenever a batch has more group states than
+# output rows, and concatenates it with the rows (serializers.py,
+# construct_record_batch); pandas warns that the dtypes of that concat
+# will change. Each twin below replays two micro-batches; in the second
+# some groups with state emit nothing, so the padded path runs, and the
+# sink must keep the twin's declared types and the pinned rows.
+
+_T0 = 1_704_067_200_000  # 2024-01-01 00:00 UTC
+_MIN = 60_000
+_HOUR = 60 * _MIN
+
+# (event_id, minute, user_id, event_type, value)
+_TYPED_EVENTS = (
+    [(1, 0, 1, "view", 1.0), (2, 5, 2, "view", 2.0), (3, 10, 1, "click", 3.0),
+     (4, 15, 3, "click", 4.0), (5, 20, 2, "click", 5.0),
+     (6, 25, 1, "purchase", 6.0), (10, 70, 2, "view", 10.0)],
+    [(7, 30, 1, "view", 7.0), (8, 130, 2, "purchase", 8.0),
+     (9, 135, 4, "view", 9.0), (11, 190, 2, "click", 11.0)],
+)
+_EVENT_COLUMNS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+_TYPED_DOCS = (
+    [(1, "the quick brown fox jumps over the lazy dog"),
+     (2, "lorem ipsum dolor sit amet consectetur")],
+    [(3, "the quick brown fox jumps over the lazy dog"),
+     (4, "a completely different sentence about cats")],
+)
+
+
+def _with_ref(s):
+    from pyspark.sql import functions as F
+
+    return s.withColumn("is_ref", F.col("event_type") == "click")
+
+
+# twin -> (build(stream), sink output mode)
+_TYPED_TWINS = {
+    "deduplicate_exact_stream": (
+        lambda s: stw.deduplicate_exact_stream(s, "user_id", _HOUR), "append"),
+    "time_window_stream": (
+        lambda s: stw.time_window_stream(s, "user_id", _HOUR), "append"),
+    "length_batch_stream": (
+        lambda s: stw.length_batch_stream(s, "user_id", 2), "append"),
+    "length_window_stream": (
+        lambda s: stw.length_window_stream(s, "user_id", 2), "append"),
+    "time_length_batch_stream": (
+        lambda s: stw.time_length_batch_stream(s, "user_id", _HOUR, 3),
+        "append"),
+    "external_time_batch_stream": (
+        lambda s: stw.external_time_batch_stream(s, "user_id", _HOUR),
+        "append"),
+    "asof_stream": (
+        lambda s: stw.asof_stream(_with_ref(s), "user_id", "is_ref"),
+        "append"),
+    "kmv_stream": (lambda s: stw.kmv_stream(s, k=2), "update"),
+    "range_agg_stream": (
+        lambda s: stw.range_agg_stream(
+            _with_ref(s), "user_id", "is_ref", _HOUR, value_col="value"),
+        "append"),
+    "sessionize_stream": (
+        lambda s: stw.sessionize_stream(s, 30 * _MIN), "append"),
+    "lsh_ingest_stream": (stw.lsh_ingest_stream, "append"),
+    "funnel_stream": (
+        lambda s: stw.funnel_stream(s, step_window_ms=_HOUR), "update"),
+    "anomaly_stream": (
+        lambda s: stw.anomaly_stream(s, cohort=10, hist=2, min_n=2),
+        "append"),
+    "quantile_sample_stream": (
+        lambda s: stw.quantile_sample_stream(s, k=2), "update"),
+    # the processing-time twins: a processing-time timeout always asks
+    # for another batch, so their queries never end by themselves, and
+    # ``at_ms`` is the wall clock at emission
+    "time_window_proc_stream": (
+        lambda s: stw.time_window_proc_stream(s, "user_id", _HOUR),
+        "update"),
+    "deduplicate_proc_stream": (
+        lambda s: stw.deduplicate_proc_stream(s, "user_id", _HOUR),
+        "append"),
+}
+
+# rows as the sink holds them, sorted; a twin whose output starts with
+# the six input event columns has each row's first six values written
+# as its event_id alone
+_TYPED_EXPECTED = {
+    "anomaly_stream": [(2, 473354, 8000, 2, 0)],
+    "asof_stream": [(1, False, -1, -1), (2, False, -1, -1),
+        (6, False, 1704067800000, 3), (7, False, 1704067800000, 3),
+        (8, False, 1704068400000, 5), (9, False, -1, -1),
+        (10, False, 1704068400000, 5)],
+    "deduplicate_exact_stream": [(1,), (2,), (4,), (9,), (10,), (11,)],
+    "deduplicate_proc_stream": [(1,), (2,), (4,), (9,)],
+    "external_time_batch_stream": [
+        (4, 1704067200000, 1704070800000, "boundary"),
+        (5, 1704067200000, 1704070800000, "boundary"),
+        (6, 1704067200000, 1704070800000, "boundary"),
+        (7, 1704070800000, 1704074400000, "boundary"),
+        (8, 1704074400000, 1704078000000, "boundary"),
+        (9, 1704074400000, 1704078000000, "boundary"),
+        (10, 1704070800000, 1704074400000, "boundary")],
+    "funnel_stream": [(1, 3, 1704067200000, 1704067800000, 1704068700000),
+        (2, 2, 1704067500000, 1704068400000, -1),
+        (4, 1, 1704075300000, -1, -1)],
+    "kmv_stream": [("click", 2, 6.303), ("click", 2, 6.303),
+        ("purchase", 1, 1.0), ("purchase", 2, 1.28), ("view", 2, 1.28),
+        ("view", 2, 2.803)],
+    "length_batch_stream": [(1, 0, "current"), (1, 0, "expired"),
+        (2, 0, "current"), (2, 0, "expired"), (3, 1, "current"),
+        (3, 1, "expired"), (4, 1, "current"), (4, 1, "expired"),
+        (5, 2, "current"), (5, 2, "expired"), (6, 2, "current"),
+        (6, 2, "expired"), (7, 3, "current"), (7, 3, "expired"),
+        (8, 4, "current"), (9, 4, "current"), (10, 3, "current"),
+        (10, 3, "expired")],
+    "length_window_stream": [(1, "current"), (1, "expired"), (2, "current"),
+        (2, "expired"), (3, "current"), (3, "expired"), (4, "current"),
+        (4, "expired"), (5, "current"), (5, "expired"), (6, "current"),
+        (6, "expired"), (7, "current"), (7, "expired"), (8, "current"),
+        (8, "expired"), (9, "current"), (10, "current"), (10, "expired"),
+        (11, "current")],
+    "lsh_ingest_stream": [(3, "0:114900759:66377743:16392026", 1),
+        (3, "1:91666261:88883692:199436981", 1),
+        (3, "2:261842119:104847848:57313582", 1),
+        (3, "3:60201637:79658165:32519642", 1)],
+    "quantile_sample_stream": [("click", 2, 3.0, 5.0, 5.0),
+        ("click", 2, 3.0, 5.0, 5.0), ("purchase", 1, 6.0, 6.0, 6.0),
+        ("purchase", 2, 6.0, 8.0, 8.0), ("view", 2, 1.0, 2.0, 2.0),
+        ("view", 2, 1.0, 9.0, 9.0)],
+    "range_agg_stream": [(1, False, 0, 0.0), (2, False, 0, 0.0),
+        (6, False, 1, 3.0), (7, False, 1, 3.0), (8, False, 0, 0.0),
+        (9, False, 0, 0.0), (10, False, 1, 5.0)],
+    "sessionize_stream": [(1, 1, 1704067200000, 1704069000000, 4, 3),
+        (2, 1, 1704067500000, 1704068400000, 2, 2),
+        (2, 2, 1704071400000, 1704071400000, 1, 1),
+        (2, 3, 1704075000000, 1704075000000, 1, 1),
+        (3, 1, 1704068100000, 1704068100000, 1, 1),
+        (4, 1, 1704075300000, 1704075300000, 1, 1)],
+    "time_length_batch_stream": [(2, 0, 1704068100000, "length", "current"),
+        (2, 0, 1704074400000, "time", "expired"),
+        (3, 0, 1704068100000, "length", "current"),
+        (3, 0, 1704074400000, "time", "expired"),
+        (4, 0, 1704068100000, "length", "current"),
+        (4, 0, 1704074400000, "time", "expired"),
+        (7, 1, 1704074400000, "time", "current"),
+        (7, 1, 1704078000000, "time", "expired"),
+        (8, 2, 1704078000000, "time", "current"),
+        (9, 2, 1704078000000, "time", "current"),
+        (10, 1, 1704074400000, "time", "current"),
+        (10, 1, 1704078000000, "time", "expired")],
+    "time_window_proc_stream": [(1, "current"), (1, "expired"), (2, "current"),
+        (2, "expired"), (3, "current"), (3, "expired"), (4, "current"),
+        (5, "current"), (5, "expired"), (6, "current"), (6, "expired"),
+        (7, "current"), (8, "current"), (8, "expired"), (9, "current"),
+        (10, "current"), (10, "expired"), (11, "current")],
+    "time_window_stream": [(1, "current"), (1, "expired"), (2, "current"),
+        (2, "expired"), (3, "current"), (3, "expired"), (4, "current"),
+        (4, "expired"), (5, "current"), (5, "expired"), (6, "current"),
+        (6, "expired"), (7, "current"), (7, "expired"), (8, "current"),
+        (8, "expired"), (9, "current"), (10, "current"), (10, "expired"),
+        (11, "current")],
+}
+
+
+def test_typed_twins_cover_every_apply_in_pandas_with_state_twin():
+    import ast
+
+    with open(stw.__file__) as f:
+        tree = ast.parse(f.read())
+    twins = {
+        fn.name for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and any(
+            isinstance(n, ast.Attribute) and n.attr == "applyInPandasWithState"
+            for n in ast.walk(fn))
+    }
+    assert twins == set(_TYPED_TWINS)
+
+
+def _write_typed_batch(indir, name, rows, docs):
+    if docs:
+        table = pa.table({
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": pa.array([r[1] for r in rows], pa.string()),
+        })
+    else:
+        table = pa.table({
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([(_T0 + r[1] * _MIN) * 1000 for r in rows],
+                           pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array([r[3] for r in rows], pa.string()),
+            "value": pa.array([r[4] for r in rows], pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        })
+    pq.write_table(table, os.path.join(indir, name))
+    stamp_arrival(indir, name)
+
+
+@pytest.mark.parametrize("twin", sorted(_TYPED_TWINS))
+def test_apply_in_pandas_twin_output_types_pinned(spark, workdir, twin):
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampType
+
+    build, mode = _TYPED_TWINS[twin]
+    docs = twin == "lsh_ingest_stream"
+    batches = _TYPED_DOCS if docs else _TYPED_EVENTS
+    indir = str(workdir / "in")
+    for i, rows in enumerate(batches):
+        _write_typed_batch(indir, f"{i:03d}.parquet", rows, docs)
+    schema = spark.read.parquet(indir).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(indir)
+    )
+    out = build(stream)
+    sink = f"typed_{twin}"
+    proc = twin.endswith("_proc_stream")
+    if proc:
+        # processAllAvailable never returns either; the sink is whole
+        # once both files' rows are in (no timer fires within the hour)
+        q = (
+            out.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .option("checkpointLocation", str(workdir / "ckpt"))
+            .trigger(processingTime="500 milliseconds")
+            .start()
+        )
+        n_rows = sum(len(rows) for rows in batches)
+        deadline = time.time() + 120
+        try:
+            while sum(p["numInputRows"] for p in q.recentProgress) < n_rows:
+                assert time.time() < deadline, q.recentProgress
+                time.sleep(0.2)
+        finally:
+            q.stop()
+        res = spark.table(sink)
+    else:
+        res = run_available(spark, out, sink, workdir / "ckpt", mode)
+    assert [(f.name, f.dataType) for f in res.schema] == [
+        (f.name, f.dataType) for f in out.schema]
+    cols = [
+        F.unix_millis(f.name).alias(f.name)
+        if isinstance(f.dataType, TimestampType) else F.col(f.name)
+        for f in res.schema if not (proc and f.name == "at_ms")
+    ]
+    got = sorted((tuple(r) for r in res.select(*cols).collect()), key=repr)
+    want = _TYPED_EXPECTED[twin]
+    if res.columns[:6] == _EVENT_COLUMNS:
+        events = {r[0]: (r[0], _T0 + r[1] * _MIN, r[2], r[3], r[4], "{}")
+                  for rows in _TYPED_EVENTS for r in rows}
+        want = [events[r[0]] + r[1:] for r in want]
+    assert got == sorted(want, key=repr)

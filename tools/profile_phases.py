@@ -122,8 +122,8 @@ def main() -> None:
             "event_id", F.unix_millis("ts").alias("ts_ms"),
             "user_id", "event_type", "value", "props",
         )
-        res = entry_mod._run_memory_complete(
-            spark, out, f"prof_ever_{trial}", work)
+        res = entry_mod._drain(spark, out, work, sink="memory",
+                               mode="complete", name=f"prof_ever_{trial}")
         mark(f"[t{trial}] run memory complete")
         force(res)
         mark(f"[t{trial}] noop force")
