@@ -2389,9 +2389,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # distributes better than the global chain (one groupBy(attr)
         # replay, bounded by the largest instance)
         "unique_length_emissions_partitioned": lambda s, d: (
-            ops.length_window_emissions_indexed_partitioned(
-                _events(s, d), "event_type", "user_id", 20,
-                ts="ts", tiebreak="event_id",
+            ops.length_window_emissions_indexed(
+                _events(s, d), "user_id", 20, ts="ts", tiebreak="event_id",
+                partition_attr="event_type",
             ).select("event_type", "event_id", "user_id", "channel", "emission_idx")
         ),
         # -- (0a) new in round 7: batch expired/all-events channels for
@@ -2943,7 +2943,8 @@ FROM outp o JOIN ev e ON e.event_id = o.event_id
 
 def _length_emissions_indexed_partitioned_oracle(n: int) -> str:
     """Per-instance variant of :func:`_length_emissions_indexed_oracle`
-    (operators/length.py:length_window_emissions_indexed_partitioned):
+    (operators/length.py:length_window_emissions_indexed with
+    ``partition_attr=``):
     every clause is re-scoped to the partition attribute — positions,
     the same-key chain, the n-th-distinct-other-key eviction join, and
     the emission-index prefix sum all run within each event_type's own
@@ -3204,7 +3205,7 @@ def _time_length_batch_expired_partitioned_oracle(t_ms: int, n: int) -> str:
     oracle: each event_type instance applies the corrected drain rule
     (min of its own next fire and B+T·[length fire]) against its own
     anchor and witness clock — mirroring
-    operators/replay.py:time_length_batch_expired_partitioned."""
+    operators/replay.py:time_length_batch_expired with ``partition_attr=``."""
     return f"""
 WITH base AS ({_time_length_batch_partitioned_oracle(t_ms, n)}),
 a AS (SELECT event_type, min(epoch_ms(ts)) AS anchor,

@@ -10,14 +10,30 @@ key, ranked by that latest event's time, top ``N``. That is what
 :func:`length_window` computes — ``max_by`` per key (one shuffle), then
 a global top-N, which Spark executes as TakeOrderedAndProject (per-
 partition heaps + merge, no global sort materialization).
+
+The ordered forms (:func:`length_window_emissions`,
+:func:`length_window_emissions_indexed`, :func:`length_exit_instants`)
+replay the FIFO chain ``replay._UniqueFifo`` through the replay
+drivers.
 """
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from siddhi_execution_unique_spark.operators.keyed import ever
+from siddhi_execution_unique_spark.operators.replay import (
+    _TS_MS,
+    _UniqueFifo,
+    _check_chain_args,
+    _replay,
+    _sorted_stream_replay,
+)
+from siddhi_execution_unique_spark.operators.time_batch import channel_tags
 from siddhi_execution_unique_spark.operators.validation import (
     require_column,
     require_keys,
@@ -31,42 +47,28 @@ def length_window(
     window_length: int,
     ts: str = "ts",
     tiebreak: str | None = None,
+    partition_attr: str | None = None,
 ) -> DataFrame:
     """Final contents of ``unique:length``: the ``N`` most recent
-    distinct keys' latest events."""
-    keys = require_keys(keys)
-    require_column(df, ts, "ts")
-    n = require_pos_int(window_length, "window.length")
-    latest = ever(df, keys, ts=ts, tiebreak=tiebreak)
-    order = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
-    return latest.orderBy(*order).limit(n)
+    distinct keys' latest events.
 
-
-def length_window_partitioned(
-    df: DataFrame,
-    partition_attr: str,
-    keys,
-    window_length: int,
-    ts: str = "ts",
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """``partition with (attr of S) begin ... unique:length(key, N)``:
-    an independent last-N-distinct-keys FIFO per partition value. The
-    final contents per instance are the N most-recently-occurring
-    distinct keys' latest events WITHIN that partition — the same
-    buffer invariant as :func:`length_window`, ranked per partition
-    instead of globally. Plan shape: one (partition, key) hash-agg
-    shuffle + a ranked window keyed on the partition attribute — fully
-    distributed, no single-group funnel (a partitioned unique:length
+    ``partition_attr`` (``partition with (attr of S)``): an independent
+    FIFO per value, ranked per partition instead of globally — one
+    (partition, key) hash-agg shuffle + a ranked window keyed on the
+    attribute, fully distributed (a partitioned unique:length
     distributes BETTER than the global one)."""
     from pyspark.sql.window import Window
 
-    require_column(df, partition_attr, "partition attribute")
+    if partition_attr:
+        require_column(df, partition_attr, "partition attribute")
     keys = require_keys(keys)
     require_column(df, ts, "ts")
     n = require_pos_int(window_length, "window.length")
-    latest = ever(df, [partition_attr] + list(keys), ts=ts, tiebreak=tiebreak)
+    gcols = [partition_attr] if partition_attr else []
+    latest = ever(df, gcols + list(keys), ts=ts, tiebreak=tiebreak)
     order = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
+    if not partition_attr:
+        return latest.orderBy(*order).limit(n)
     w = Window.partitionBy(partition_attr).orderBy(*order)
     return (
         latest.withColumn("_rnk", F.row_number().over(w))
@@ -80,16 +82,18 @@ CHANNEL = "channel"
 
 def length_window_emissions_distributed(
     df: DataFrame,
-    key: str,
+    key,
     window_length: int,
     ts: str = "ts",
     *,
     tiebreak: str,
+    partition_attr: str | None = None,
 ) -> DataFrame:
     """Set-semantics emission log of ``unique:length``, fully
     distributed (no single-group replay): every arrival emits on
     ``current``, and an event emits on ``expired`` iff it is NOT in
-    the window's final contents. That equivalence holds because a
+    the window's final contents (its instance's, with
+    ``partition_attr``). That equivalence holds because a
     duplicate key moves to the back of the FIFO
     (UniqueLengthWindowProcessor.java:153-157), so the buffer is
     always exactly the ``N`` most-recently-occurring distinct keys'
@@ -104,24 +108,19 @@ def length_window_emissions_distributed(
     represented here; use :func:`length_window_emissions` for the
     ordered replay or ``streaming.length_window_stream`` for the live
     log."""
-    require_column(df, key, "unique.key")
+    keys = require_keys(key, "unique.key")
+    for k in keys:
+        require_column(df, k, "unique.key")
     require_column(df, ts, "ts")
     require_column(df, tiebreak, "tiebreak")
     n = require_pos_int(window_length, "window.length")
-    retained = length_window(df, key, n, ts=ts, tiebreak=tiebreak)
-    on = [key, ts, tiebreak]
+    retained = length_window(df, keys, n, ts=ts, tiebreak=tiebreak,
+                             partition_attr=partition_attr)
+    on = ([partition_attr] if partition_attr else []) + keys + [ts, tiebreak]
     marker = retained.select(*on).withColumn("_keep", F.lit(1))
     return (
         df.join(marker, on, "left")
-        .withColumn(
-            CHANNEL,
-            F.explode(
-                F.when(
-                    F.col("_keep").isNull(),
-                    F.array(F.lit("current"), F.lit("expired")),
-                ).otherwise(F.array(F.lit("current")))
-            ),
-        )
+        .withColumn(CHANNEL, channel_tags(F.col("_keep").isNull()))
         .drop("_keep")
     )
 
@@ -133,6 +132,7 @@ def length_window_emissions_indexed(
     ts: str = "ts",
     *,
     tiebreak: str,
+    partition_attr: str | None = None,
 ) -> DataFrame:
     """Ordered emission log of ``unique:length`` with an explicit
     ``emission_idx`` (0-based position in the reference's emission
@@ -151,19 +151,15 @@ def length_window_emissions_indexed(
     row ceiling — and it sees ONLY (key, ts, tiebreak); the (tiebreak,
     channel, emission_idx) assignment joins back to the full rows in a
     normal distributed hash join, so payload columns never ride the
-    single-partition exchange."""
-    import numpy as np
-    import pandas as pd
+    single-partition exchange.
 
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from siddhi_execution_unique_spark.operators.replay import _sorted_stream_replay
-
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
+    ``partition_attr``: every value owns an independent FIFO and a
+    0-based ``emission_idx``; this DISTRIBUTES — one shuffle keyed on
+    the attribute, each instance's chain walking its own pandas group
+    (bounded by the largest partition, not the corpus)."""
+    n = _check_chain_args(df, key, ts, window_length,
+                          partition_attr=partition_attr)
     require_column(df, tiebreak, "tiebreak")
-    n = require_pos_int(window_length, "window.length")
-
     assign_schema = StructType(
         [
             StructField(tiebreak, df.schema[tiebreak].dataType),
@@ -172,42 +168,17 @@ def length_window_emissions_indexed(
         ]
     )
 
-    def scan(batches):
-        buffer: dict = {}  # insertion-ordered: key -> tiebreak value
-        idx = 0
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            key_arr = pdf[key].to_numpy()
-            tb_arr = pdf[tiebreak].to_numpy()
-            out_tb: list = []
-            out_ch: list = []
-            for i in range(len(pdf)):
-                k = key_arr[i]
-                if k in buffer:
-                    out_tb.append(buffer.pop(k))
-                    out_ch.append("expired")  # replaced: expires now
-                elif len(buffer) == n:
-                    oldest = next(iter(buffer))
-                    out_tb.append(buffer.pop(oldest))
-                    out_ch.append("expired")  # FIFO eviction
-                buffer[k] = tb_arr[i]
-                out_tb.append(tb_arr[i])
-                out_ch.append("current")
-            if out_tb:
-                yield pd.DataFrame(
-                    {
-                        tiebreak: pd.Series(out_tb),
-                        CHANNEL: pd.Series(out_ch, dtype="object"),
-                        "emission_idx": np.arange(
-                            idx, idx + len(out_tb), dtype=np.int64
-                        ),
-                    }
-                )
-                idx += len(out_tb)
+    def shape(st, fed, rows, chunk):
+        refs, chans, idx = st.log(*fed)
+        out = rows(refs)
+        out[CHANNEL] = chans
+        out["emission_idx"] = idx
+        return out
 
-    assignment = _sorted_stream_replay(
-        df.select(key, ts, tiebreak), ts, tiebreak, assign_schema, scan
+    gcols = [partition_attr] if partition_attr else []
+    assignment = _replay(
+        df.select(*gcols, key, ts, tiebreak), partition_attr, key, ts,
+        tiebreak, assign_schema, [tiebreak], lambda: _UniqueFifo(n), shape,
     )
     return df.join(assignment, tiebreak)
 
@@ -232,123 +203,21 @@ def length_window_emissions(
     :func:`length_window` for the fully distributable final-contents
     form.
     """
-    import pandas as pd
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from siddhi_execution_unique_spark.operators.replay import (
-        _CarryScan,
-        _sorted_stream_replay,
-    )
-    from siddhi_execution_unique_spark.operators.validation import require_pos_int
-
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
-    n = require_pos_int(window_length, "window.length")
-    out_cols = list(df.columns)
+    n = _check_chain_args(df, key, ts, window_length)
     out_schema = StructType(
         list(df.schema.fields) + [StructField(CHANNEL, StringType())]
     )
 
-    def scan(batches) -> "pd.DataFrame":
-        buf = _CarryScan(out_cols, [(CHANNEL, "object")])
-        buffer: dict = {}  # insertion-ordered: key -> row ref
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            buf.begin(pdf)
-            key_arr = pdf[key].to_numpy()
-            for i in range(len(pdf)):
-                k = key_arr[i]
-                if k in buffer:
-                    buf.emit(buffer.pop(k), "expired")  # replaced: expires now
-                elif len(buffer) == n:
-                    oldest = next(iter(buffer))
-                    buf.emit(buffer.pop(oldest), "expired")  # FIFO eviction
-                buffer[k] = (1, i)
-                buf.emit((1, i), "current")
-            out, new_refs = buf.flush(list(buffer.values()))
-            buffer = dict(zip(buffer.keys(), new_refs))
-            if out is not None:
-                yield out
+    def shape(st, fed, rows, chunk):
+        refs, chans, _ = st.log(*fed)
+        out = rows(refs)
+        out[CHANNEL] = chans
+        return out
 
-    return _sorted_stream_replay(df, ts, tiebreak, out_schema, scan)
-
-
-def length_window_emissions_indexed_partitioned(
-    df: DataFrame,
-    partition_attr: str,
-    key: str,
-    window_length: int,
-    ts: str = "ts",
-    *,
-    tiebreak: str,
-) -> DataFrame:
-    """Ordered emission log of a PARTITIONED ``unique:length`` with a
-    per-instance ``emission_idx``: every partition value owns an
-    independent FIFO (Siddhi partitioned execution), and within each
-    instance the reference's per-arrival order holds — the replaced or
-    FIFO-evicted event emits on ``expired`` FIRST, then the arrival
-    emits on ``current`` (UniqueLengthWindowProcessor.java:148-157,
-    158-166). ``emission_idx`` is 0-based within the instance.
-
-    Scale shape: DISTRIBUTES BETTER than the global ordered log — one
-    shuffle keyed on the partition attribute, each instance's chain
-    walks its own pandas group (bounded by the largest partition, not
-    the corpus), and the chain sees only (attr, key, ts, tiebreak);
-    payload columns join back in a normal distributed hash join."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from siddhi_execution_unique_spark.operators.replay import _partitioned_replay
-
-    require_column(df, partition_attr, "partition attribute")
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
-    require_column(df, tiebreak, "tiebreak")
-    n = require_pos_int(window_length, "window.length")
-
-    assign_schema = StructType(
-        [
-            StructField(tiebreak, df.schema[tiebreak].dataType),
-            StructField(CHANNEL, StringType()),
-            StructField("emission_idx", LongType()),
-        ]
+    return _sorted_stream_replay(
+        df, key, ts, tiebreak, out_schema, list(df.columns),
+        lambda: _UniqueFifo(n), shape,
     )
-
-    def walk(pdf):
-        buffer: dict = {}  # insertion-ordered: key -> tiebreak value
-        key_arr = pdf[key].to_numpy()
-        tb_arr = pdf[tiebreak].to_numpy()
-        out_tb: list = []
-        out_ch: list = []
-        for i in range(len(pdf)):
-            k = key_arr[i]
-            if k in buffer:
-                out_tb.append(buffer.pop(k))
-                out_ch.append("expired")  # replaced: expires now
-            elif len(buffer) == n:
-                oldest = next(iter(buffer))
-                out_tb.append(buffer.pop(oldest))
-                out_ch.append("expired")  # FIFO eviction
-            buffer[k] = tb_arr[i]
-            out_tb.append(tb_arr[i])
-            out_ch.append("current")
-        return pd.DataFrame(
-            {
-                tiebreak: pd.Series(out_tb, dtype=tb_arr.dtype),
-                CHANNEL: pd.Series(out_ch, dtype="object"),
-                "emission_idx": np.arange(len(out_tb), dtype=np.int64),
-            }
-        )
-
-    assignment = _partitioned_replay(
-        df.select(partition_attr, key, ts, tiebreak),
-        partition_attr, ts, tiebreak, assign_schema, walk,
-    )
-    return df.join(assignment, tiebreak)
 
 
 def length_exit_instants(
@@ -377,21 +246,8 @@ def length_exit_instants(
     BOUNDED state (N buffered refs); only (key, ts, tiebreak) ride
     the single-partition exchange and the result joins back to full
     rows distributively."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from siddhi_execution_unique_spark.operators.replay import (
-        _TS_MS,
-        _sorted_stream_replay,
-    )
-
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
+    n = _check_chain_args(df, key, ts, window_length)
     require_column(df, tiebreak, "tiebreak")
-    n = require_pos_int(window_length, "window.length")
-
     out_schema = StructType(
         [
             StructField(tiebreak, df.schema[tiebreak].dataType),
@@ -400,46 +256,21 @@ def length_exit_instants(
         ]
     )
 
-    def scan(batches):
-        fifo: dict = {}  # insertion-ordered: key -> tiebreak value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            key_arr = pdf[key].to_numpy()
-            tb_arr = pdf[tiebreak].to_numpy()
-            ms_arr = pdf[_TS_MS].to_numpy()
-            out_tb: list = []
-            out_ms: list = []
-            out_rtb: list = []  # the REMOVING arrival's tiebreak
-            for i in range(len(pdf)):
-                k = key_arr[i]
-                if k in fifo:
-                    out_tb.append(fifo.pop(k))
-                    out_ms.append(ms_arr[i])
-                    out_rtb.append(tb_arr[i])
-                elif len(fifo) == n:
-                    oldest = next(iter(fifo))
-                    out_tb.append(fifo.pop(oldest))
-                    out_ms.append(ms_arr[i])
-                    out_rtb.append(tb_arr[i])
-                fifo[k] = tb_arr[i]
-            if out_tb:
-                yield pd.DataFrame(
-                    {
-                        tiebreak: pd.Series(out_tb),
-                        "__mx_to": np.array(out_ms, dtype=np.int64),
-                        "__mx_totb": pd.Series(out_rtb),
-                    }
-                )
-        if fifo:  # still buffered at end of stream: exit = NULL
-            yield pd.DataFrame(
-                {
-                    tiebreak: pd.Series(list(fifo.values())),
-                    "__mx_to": pd.array([None] * len(fifo), dtype="Int64"),
-                    "__mx_totb": pd.Series([None] * len(fifo)),
-                }
-            )
+    def shape(st, fed, rows, chunk):
+        expired, _ = fed
+        has = expired >= 0  # the arrival itself is the remover
+        out = rows(expired[has])
+        out["__mx_to"] = chunk[_TS_MS].to_numpy()[has]
+        out["__mx_totb"] = chunk[tiebreak].to_numpy()[has]
+        return out
+
+    def final(st, rows):  # still buffered at end of stream: exit = NULL
+        out = rows(list(st.held.values()))
+        out["__mx_to"] = pd.array([None] * len(out), dtype="Int64")
+        out["__mx_totb"] = pd.Series([None] * len(out), index=out.index)
+        return out
 
     return _sorted_stream_replay(
-        df.select(key, ts, tiebreak), ts, tiebreak, out_schema, scan
+        df.select(key, ts, tiebreak), key, ts, tiebreak, out_schema,
+        [tiebreak], lambda: _UniqueFifo(n), shape, final,
     )

@@ -131,6 +131,33 @@ def first_time_batch(
     return time_batch(df, keys, window_time, ts, tiebreak, start_time_ms, keep="first")
 
 
+def channel_tags(expires: Column) -> Column:
+    """``explode`` each row into its channel tags for a single-pass
+    `insert all events into` derivation: 'current' always, plus
+    'expired' where ``expires`` holds. One pass matters: a
+    current∪expired UNION recomputes the whole batched subtree — Spark
+    does not reuse exchanges across union branches (measured: every
+    source scanned twice)."""
+    return F.explode(
+        F.when(expires, F.array(F.lit("current"), F.lit("expired")))
+        .otherwise(F.array(F.lit("current")))
+    )
+
+
+def _instance_anchor(df: DataFrame, timestamp: str, partition_attr: str | None):
+    """``df`` with ``_anchor_ms``: the first event's time, per instance
+    when ``partition_attr`` is given (the reference seeds the grid from
+    the first event the instance sees,
+    UniqueExternalTimeBatchWindowProcessor.java:261-332). Globally one
+    broadcast scalar; per instance a tiny ``groupBy(attr).agg(min)``
+    joined back on the attribute (AQE broadcasts it when it fits)."""
+    ms = event_ms(df, timestamp)
+    if partition_attr:
+        anchors = df.groupBy(partition_attr).agg(F.min(ms).alias("_anchor_ms"))
+        return df.join(anchors, partition_attr)
+    return df.crossJoin(F.broadcast(df.agg(F.min(ms).alias("_anchor_ms"))))
+
+
 def external_time_batch(
     df: DataFrame,
     keys,
@@ -140,6 +167,7 @@ def external_time_batch(
     start_time_ms: int | None = None,
     replace_timestamp_with_batch_end: bool = False,
     tiebreak: str | None = None,
+    partition_attr: str | None = None,
 ) -> DataFrame:
     """``unique:externalTimeBatch`` — tumbling batches driven by the
     event's own ``timestamp`` attribute (long millis or timestamp).
@@ -151,24 +179,31 @@ def external_time_batch(
     timestamp — computed with a broadcast scalar aggregate, so the
     anchor costs one tiny extra stage, not a second full shuffle.
 
+    ``partition_attr`` (``partition with (attr of S)``) gives every
+    value its own window instance: the grouping key becomes
+    ``(batch, attr, key)`` and, without ``start.time``, each instance
+    anchors at ITS OWN first event — still one partial-agg shuffle, no
+    per-instance funnel.
+
     ``replace_timestamp_with_batch_end`` mirrors the optional
     timestamp rewrite (:460-469). The reference's ``time.out`` idle
     flush is a wall-clock concern that only exists in streaming — see
     :mod:`siddhi_execution_unique_spark.streaming`.
     """
     keys = require_keys(keys)
+    if partition_attr:
+        require_column(df, partition_attr, "partition attribute")
     require_column(df, timestamp, "time.stamp")
     window_ms = parse_time_ms(window_time, "window.time")
-    ts = ts or timestamp
 
     if start_time_ms is None:
-        anchor = df.agg(F.min(event_ms(df, timestamp)).alias("_anchor_ms"))
-        df = df.crossJoin(F.broadcast(anchor))
+        df = _instance_anchor(df, timestamp, partition_attr)
         start: Column | int = F.col("_anchor_ms")
     else:
         start = start_time_ms
 
-    out = _batched_retain(df, keys, timestamp, window_ms, start, tiebreak, keep="last")
+    gkeys = ([partition_attr] if partition_attr else []) + list(keys)
+    out = _batched_retain(df, gkeys, timestamp, window_ms, start, tiebreak, keep="last")
     if "_anchor_ms" in out.columns:
         out = out.drop("_anchor_ms")
     if replace_timestamp_with_batch_end:
@@ -178,287 +213,6 @@ def external_time_batch(
         else:
             out = out.withColumn(timestamp, F.col(BATCH_END).cast(dt))
     return out
-
-
-def external_time_batch_partitioned(
-    df: DataFrame,
-    partition_attr: str,
-    keys,
-    timestamp: str,
-    window_time: int | str,
-    start_time_ms: int | None = None,
-    replace_timestamp_with_batch_end: bool = False,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """``partition with (attr of S) begin ... unique:externalTimeBatch
-    (key, ts, T, ...)``: an independent window instance per partition
-    value (Siddhi partitioned execution).
-
-    With ``start.time`` the batch grid is absolute
-    (``endTime = ts + (T - (ts - start) % T)``,
-    UniqueExternalTimeBatchWindowProcessor.java:454-458) — identical
-    for every instance — so the lowering is the composite grouping key
-    ``(batch, attr, key)``. Without it, each instance anchors at ITS
-    OWN first event (the reference seeds the grid from the first event
-    the instance sees, :261-332): the per-instance anchor is a tiny
-    ``groupBy(attr).agg(min(ts))`` joined back on the attribute (AQE
-    broadcasts it when it fits), then the same single hash-aggregation
-    shape as the global form — one partial-agg shuffle keyed on
-    (batch, attr, key), no per-instance funnel."""
-    keys = require_keys(keys)
-    require_column(df, partition_attr, "partition attribute")
-    require_column(df, timestamp, "time.stamp")
-    window_ms = parse_time_ms(window_time, "window.time")
-
-    if start_time_ms is None:
-        anchors = df.groupBy(partition_attr).agg(
-            F.min(event_ms(df, timestamp)).alias("_anchor_ms")
-        )
-        df = df.join(anchors, partition_attr)
-        start: Column | int = F.col("_anchor_ms")
-    else:
-        start = start_time_ms
-
-    out = _batched_retain(
-        df, [partition_attr] + list(keys), timestamp, window_ms, start,
-        tiebreak, keep="last",
-    )
-    if "_anchor_ms" in out.columns:
-        out = out.drop("_anchor_ms")
-    if replace_timestamp_with_batch_end:
-        dt = out.schema[timestamp].dataType
-        if isinstance(dt, (TimestampType, TimestampNTZType)):
-            out = out.withColumn(timestamp, F.timestamp_millis(F.col(BATCH_END)))
-        else:
-            out = out.withColumn(timestamp, F.col(BATCH_END).cast(dt))
-    return out
-
-
-def external_time_batch_expired(
-    df: DataFrame,
-    keys,
-    timestamp: str,
-    window_time: int | str,
-    start_time_ms: int | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """The EXPIRED channel of ``unique:externalTimeBatch``. The
-    reference flushes ONLY on event arrival (no scheduler unless
-    ``time.out``): when the first event beyond the forming batch's end
-    arrives, the forming batch emits as current and the PREVIOUS
-    batch's retained events re-emit as expired, timestamps rewritten
-    to ``lastCurrentEventTime`` — which that triggering arrival has
-    just advanced to its own timestamp
-    (UniqueExternalTimeBatchWindowProcessor.java:304-318,363-366).
-
-    So among the batches PRESENT in the data, ordered by start: batch
-    rank ``r``'s current flushes at the first event of rank ``r+1``,
-    and its expired re-emits at the next flush after that — the first
-    event of rank ``r+2``. A batch expires within the stream iff rank
-    ``r+2`` exists, with ``expired_at_ms`` = that event's timestamp
-    (the last two batches never expire; the current channel keeps the
-    all-batches end-of-stream convention already certified for
-    :func:`external_time_batch`).
-
-    Plan shape: the batched aggregation plus a one-row-per-present-
-    batch aggregate with ``lead(_, 2)`` over it (tiny at any scale)
-    joined back on ``batch_start_ms``; AQE broadcasts it when it
-    fits."""
-    from pyspark.sql.window import Window
-
-    window_ms = parse_time_ms(window_time, "window.time")
-    batched = external_time_batch(
-        df, keys, timestamp, window_ms,
-        start_time_ms=start_time_ms, tiebreak=tiebreak,
-    )
-    ms = event_ms(df, timestamp)
-    if start_time_ms is None:
-        anchor = df.agg(F.min(ms).alias("_anchor_ms"))
-        src = df.crossJoin(F.broadcast(anchor))
-        start: Column = F.col("_anchor_ms")
-    else:
-        src = df
-        start = F.lit(start_time_ms)
-    batch_start = (
-        F.floor((ms - start) / window_ms).cast("long") * window_ms + start
-    )
-    log = (
-        src.select(batch_start.alias(BATCH_START), ms.alias("_ms"))
-        .groupBy(BATCH_START)
-        .agg(F.min("_ms").alias("_first_ms"))
-    )
-    exp_log = (
-        log.withColumn(
-            "expired_at_ms",
-            F.lead("_first_ms", 2).over(Window.orderBy(BATCH_START)),
-        )
-        .filter(F.col("expired_at_ms").isNotNull())
-        .select(BATCH_START, "expired_at_ms")
-    )
-    return batched.join(exp_log, BATCH_START)
-
-
-def expired_channel(batched: DataFrame, window_ms: int | str) -> DataFrame:
-    """The EXPIRED emission channel for any tumbling-batch operator
-    output: the reference re-emits each fired batch as EXPIRED when the
-    *next* batch fires, timestamps overwritten to that flush time
-    (UniqueTimeBatchWindowProcessor.java:235-266). Given a batched
-    result, the expired stream is the same rows tagged with
-    ``expired_at_ms = batch_end_ms + T`` — every batch except the last
-    (no successor fire ever flushes it).
-    """
-    window_ms = parse_time_ms(window_ms, "window.time")
-    last_batch = batched.agg(F.max(F.col(BATCH_END)).alias("_last_end"))
-    return (
-        batched.crossJoin(F.broadcast(last_batch))
-        .filter(F.col(BATCH_END) < F.col("_last_end"))
-        .drop("_last_end")
-        .withColumn("expired_at_ms", F.col(BATCH_END) + F.lit(window_ms))
-    )
-
-
-def expired_channel_partitioned(
-    batched: DataFrame, window_ms: int | str, partition_attr: str
-) -> DataFrame:
-    """Per-instance EXPIRED channel for a partitioned tumbling-batch
-    output (``partition with``): every partition value owns a window
-    instance whose clock is its own event stream — the same
-    per-instance-edge convention the partitioned ``unique:time``
-    lowering uses — so a batch expires iff ITS instance fired a later
-    batch, at ``batch_end_ms + T``. Plan shape: a tiny
-    ``groupBy(attr).agg(max)`` joined back on the attribute (AQE
-    broadcasts when it fits), instead of the global one-row scalar the
-    unpartitioned :func:`expired_channel` cross-joins."""
-    window_ms = parse_time_ms(window_ms, "window.time")
-    last_per_instance = batched.groupBy(partition_attr).agg(
-        F.max(F.col(BATCH_END)).alias("_last_end")
-    )
-    return (
-        batched.join(last_per_instance, partition_attr)
-        .filter(F.col(BATCH_END) < F.col("_last_end"))
-        .drop("_last_end")
-        .withColumn("expired_at_ms", F.col(BATCH_END) + F.lit(window_ms))
-    )
-
-
-def external_time_batch_expired_partitioned(
-    df: DataFrame,
-    partition_attr: str,
-    keys,
-    timestamp: str,
-    window_time: int | str,
-    start_time_ms: int | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Per-instance EXPIRED channel of a PARTITIONED
-    ``unique:externalTimeBatch``. The reference's flush protocol runs
-    only on event arrival (UniqueExternalTimeBatchWindowProcessor
-    .java:304-318,363-366) and in partitioned execution each instance
-    runs its own processor — so the rank+2 rule certified for the
-    global :func:`external_time_batch_expired` applies PER INSTANCE:
-    among the batches instance ``p``'s own events form (ordered by
-    start), batch rank ``r`` re-emits as expired at the first event of
-    ``p``'s rank ``r+2`` batch, with ``expired_at_ms`` = that event's
-    timestamp; each instance's last two batches never expire. Without
-    ``start.time`` each instance anchors its grid at its own first
-    event (same as :func:`external_time_batch_partitioned`).
-
-    Plan shape: the partitioned batch aggregation plus a one-row-per-
-    (instance, present-batch) aggregate with ``lead(_, 2)`` over each
-    instance's own batch order, joined back on (attr, batch_start) —
-    the log is tiny at any scale and AQE broadcasts it."""
-    from pyspark.sql.window import Window
-
-    window_ms = parse_time_ms(window_time, "window.time")
-    batched = external_time_batch_partitioned(
-        df, partition_attr, keys, timestamp, window_ms,
-        start_time_ms=start_time_ms, tiebreak=tiebreak,
-    )
-    ms = event_ms(df, timestamp)
-    if start_time_ms is None:
-        anchors = df.groupBy(partition_attr).agg(F.min(ms).alias("_anchor_ms"))
-        src = df.join(anchors, partition_attr)
-        start: Column = F.col("_anchor_ms")
-    else:
-        src = df
-        start = F.lit(start_time_ms)
-    batch_start = (
-        F.floor((ms - start) / window_ms).cast("long") * window_ms + start
-    )
-    log = (
-        src.select(
-            F.col(partition_attr), batch_start.alias(BATCH_START),
-            ms.alias("_ms"),
-        )
-        .groupBy(partition_attr, BATCH_START)
-        .agg(F.min("_ms").alias("_first_ms"))
-    )
-    exp_log = (
-        log.withColumn(
-            "expired_at_ms",
-            F.lead("_first_ms", 2).over(
-                Window.partitionBy(partition_attr).orderBy(BATCH_START)
-            ),
-        )
-        .filter(F.col("expired_at_ms").isNotNull())
-        .select(partition_attr, BATCH_START, "expired_at_ms")
-    )
-    return batched.join(exp_log, [partition_attr, BATCH_START])
-
-
-def _channel_explode(window_ms: int) -> tuple[Column, Column]:
-    """(channel, expired_at_ms) expressions for a single-pass
-    `insert all events into` derivation: a row whose batch precedes
-    its witness's last flush explodes into current + expired tags.
-    One pass matters: a current∪expired UNION recomputes the whole
-    batched subtree — Spark does not reuse exchanges across union
-    branches (measured: every source scanned twice)."""
-    ch = F.explode(
-        F.when(
-            F.col(BATCH_END) < F.col("_last_end"),
-            F.array(F.lit("current"), F.lit("expired")),
-        ).otherwise(F.array(F.lit("current")))
-    )
-    exp_at = F.when(
-        F.col("channel") == "expired", F.col(BATCH_END) + F.lit(window_ms)
-    ).cast("long")
-    return ch, exp_at
-
-
-def all_channel(batched: DataFrame, window_ms: int | str) -> DataFrame:
-    """Single-pass ALL-events channel for a tumbling-batch output:
-    the rows of :func:`expired_channel` tagged 'expired' plus every
-    batched row tagged 'current', computed by ONE crossJoin with the
-    one-row last-flush aggregate and an explode — the batched
-    aggregation runs once instead of once per union branch."""
-    window_ms = parse_time_ms(window_ms, "window.time")
-    last_batch = batched.agg(F.max(F.col(BATCH_END)).alias("_last_end"))
-    ch, exp_at = _channel_explode(window_ms)
-    return (
-        batched.crossJoin(F.broadcast(last_batch))
-        .withColumn("channel", ch)
-        .withColumn("expired_at_ms", exp_at)
-        .drop("_last_end")
-    )
-
-
-def all_channel_partitioned(
-    batched: DataFrame, window_ms: int | str, partition_attr: str
-) -> DataFrame:
-    """Single-pass ALL-events channel with the PER-INSTANCE witness of
-    :func:`expired_channel_partitioned`: one tiny groupBy(attr) max
-    joined back, then the channel explode."""
-    window_ms = parse_time_ms(window_ms, "window.time")
-    last_per_instance = batched.groupBy(partition_attr).agg(
-        F.max(F.col(BATCH_END)).alias("_last_end")
-    )
-    ch, exp_at = _channel_explode(window_ms)
-    return (
-        batched.join(last_per_instance, partition_attr)
-        .withColumn("channel", ch)
-        .withColumn("expired_at_ms", exp_at)
-        .drop("_last_end")
-    )
 
 
 def _external_expiry_log(
@@ -476,13 +230,7 @@ def _external_expiry_log(
     ms = event_ms(df, timestamp)
     gcols = [partition_attr] if partition_attr else []
     if start_time_ms is None:
-        if partition_attr:
-            anchors = df.groupBy(partition_attr).agg(
-                F.min(ms).alias("_anchor_ms"))
-            src = df.join(anchors, partition_attr)
-        else:
-            anchor = df.agg(F.min(ms).alias("_anchor_ms"))
-            src = df.crossJoin(F.broadcast(anchor))
+        src = _instance_anchor(df, timestamp, partition_attr)
         start: Column = F.col("_anchor_ms")
     else:
         src = df
@@ -495,12 +243,56 @@ def _external_expiry_log(
         .groupBy(*gcols, BATCH_START)
         .agg(F.min("_ms").alias("_first_ms"))
     )
-    w = (Window.partitionBy(*gcols) if gcols else Window.partitionBy()).orderBy(
-        BATCH_START)
+    w = Window.partitionBy(*gcols).orderBy(BATCH_START)
     return (
         log.withColumn("expired_at_ms", F.lead("_first_ms", 2).over(w))
         .select(*gcols, BATCH_START, "expired_at_ms")
     )
+
+
+def external_time_batch_expired(
+    df: DataFrame,
+    keys,
+    timestamp: str,
+    window_time: int | str,
+    start_time_ms: int | None = None,
+    tiebreak: str | None = None,
+    partition_attr: str | None = None,
+) -> DataFrame:
+    """The EXPIRED channel of ``unique:externalTimeBatch``. The
+    reference flushes ONLY on event arrival (no scheduler unless
+    ``time.out``): when the first event beyond the forming batch's end
+    arrives, the forming batch emits as current and the PREVIOUS
+    batch's retained events re-emit as expired, timestamps rewritten
+    to ``lastCurrentEventTime`` — which that triggering arrival has
+    just advanced to its own timestamp
+    (UniqueExternalTimeBatchWindowProcessor.java:304-318,363-366).
+
+    So among the batches PRESENT in the data, ordered by start: batch
+    rank ``r``'s current flushes at the first event of rank ``r+1``,
+    and its expired re-emits at the next flush after that — the first
+    event of rank ``r+2``. A batch expires within the stream iff rank
+    ``r+2`` exists, with ``expired_at_ms`` = that event's timestamp
+    (the last two batches never expire; the current channel keeps the
+    all-batches end-of-stream convention already certified for
+    :func:`external_time_batch`). With ``partition_attr`` each
+    instance runs its own processor, so the rule applies per instance
+    over the batches that instance's own events form.
+
+    Plan shape: the batched aggregation plus a one-row-per-present-
+    batch aggregate with ``lead(_, 2)`` over it (tiny at any scale)
+    joined back on ``batch_start_ms``; AQE broadcasts it when it
+    fits."""
+    window_ms = parse_time_ms(window_time, "window.time")
+    batched = external_time_batch(
+        df, keys, timestamp, window_ms, start_time_ms=start_time_ms,
+        tiebreak=tiebreak, partition_attr=partition_attr,
+    )
+    log = _external_expiry_log(
+        df, timestamp, window_ms, start_time_ms, partition_attr
+    ).filter(F.col("expired_at_ms").isNotNull())
+    gcols = [partition_attr] if partition_attr else []
+    return batched.join(log, gcols + [BATCH_START])
 
 
 def external_time_batch_all(
@@ -510,70 +302,85 @@ def external_time_batch_all(
     window_time: int | str,
     start_time_ms: int | None = None,
     tiebreak: str | None = None,
+    partition_attr: str | None = None,
 ) -> DataFrame:
     """Single-pass ALL-events channel of ``unique:externalTimeBatch``:
     the batched aggregation runs ONCE, left-joined with the rank+2
-    expiry log (:func:`external_time_batch_expired`'s rule), each row
-    exploding into its channel tags. Matches the union of the current
-    and expired channels row-for-row."""
+    expiry log (:func:`external_time_batch_expired`'s rule, per
+    instance with ``partition_attr``), each row exploding into its
+    channel tags. Matches the union of the current and expired
+    channels row-for-row."""
     window_ms = parse_time_ms(window_time, "window.time")
     batched = external_time_batch(
-        df, keys, timestamp, window_ms,
-        start_time_ms=start_time_ms, tiebreak=tiebreak,
-    )
-    log = _external_expiry_log(df, timestamp, window_ms, start_time_ms, None)
-    return (
-        batched.join(log, BATCH_START, "left")
-        .withColumn(
-            "channel",
-            F.explode(
-                F.when(
-                    F.col("expired_at_ms").isNotNull(),
-                    F.array(F.lit("current"), F.lit("expired")),
-                ).otherwise(F.array(F.lit("current")))
-            ),
-        )
-        .withColumn(
-            "expired_at_ms",
-            F.when(F.col("channel") == "expired", F.col("expired_at_ms"))
-            .cast("long"),
-        )
-    )
-
-
-def external_time_batch_all_partitioned(
-    df: DataFrame,
-    partition_attr: str,
-    keys,
-    timestamp: str,
-    window_time: int | str,
-    start_time_ms: int | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Single-pass ALL-events channel of a PARTITIONED
-    ``unique:externalTimeBatch`` (per-instance anchors + per-instance
-    rank+2 drain, as in :func:`external_time_batch_expired_partitioned`)."""
-    window_ms = parse_time_ms(window_time, "window.time")
-    batched = external_time_batch_partitioned(
-        df, partition_attr, keys, timestamp, window_ms,
-        start_time_ms=start_time_ms, tiebreak=tiebreak,
+        df, keys, timestamp, window_ms, start_time_ms=start_time_ms,
+        tiebreak=tiebreak, partition_attr=partition_attr,
     )
     log = _external_expiry_log(
         df, timestamp, window_ms, start_time_ms, partition_attr)
+    gcols = [partition_attr] if partition_attr else []
     return (
-        batched.join(log, [partition_attr, BATCH_START], "left")
-        .withColumn(
-            "channel",
-            F.explode(
-                F.when(
-                    F.col("expired_at_ms").isNotNull(),
-                    F.array(F.lit("current"), F.lit("expired")),
-                ).otherwise(F.array(F.lit("current")))
-            ),
-        )
+        batched.join(log, gcols + [BATCH_START], "left")
+        .withColumn("channel", channel_tags(F.col("expired_at_ms").isNotNull()))
         .withColumn(
             "expired_at_ms",
             F.when(F.col("channel") == "expired", F.col("expired_at_ms"))
             .cast("long"),
         )
+    )
+
+
+def _with_last_end(batched: DataFrame, partition_attr: str | None) -> DataFrame:
+    """``batched`` with ``_last_end``: the end of the last fired batch —
+    the witness of every earlier batch's flush. Per instance with
+    ``partition_attr`` (each instance's clock is its own event stream,
+    the same per-instance-edge convention the partitioned
+    ``unique:time`` lowering uses): a tiny ``groupBy(attr).agg(max)``
+    joined back on the attribute (AQE broadcasts when it fits);
+    globally a one-row scalar cross-joined."""
+    last = F.max(F.col(BATCH_END)).alias("_last_end")
+    if partition_attr:
+        return batched.join(batched.groupBy(partition_attr).agg(last), partition_attr)
+    return batched.crossJoin(F.broadcast(batched.agg(last)))
+
+
+def expired_channel(
+    batched: DataFrame, window_ms: int | str, partition_attr: str | None = None
+) -> DataFrame:
+    """The EXPIRED emission channel for any tumbling-batch operator
+    output: the reference re-emits each fired batch as EXPIRED when the
+    *next* batch fires, timestamps overwritten to that flush time
+    (UniqueTimeBatchWindowProcessor.java:235-266). Given a batched
+    result, the expired stream is the same rows tagged with
+    ``expired_at_ms = batch_end_ms + T`` — every batch except the last
+    (no successor fire ever flushes it); with ``partition_attr``, every
+    batch except its own instance's last.
+    """
+    window_ms = parse_time_ms(window_ms, "window.time")
+    return (
+        _with_last_end(batched, partition_attr)
+        .filter(F.col(BATCH_END) < F.col("_last_end"))
+        .drop("_last_end")
+        .withColumn("expired_at_ms", F.col(BATCH_END) + F.lit(window_ms))
+    )
+
+
+def all_channel(
+    batched: DataFrame, window_ms: int | str, partition_attr: str | None = None
+) -> DataFrame:
+    """Single-pass ALL-events channel for a tumbling-batch output:
+    the rows of :func:`expired_channel` tagged 'expired' plus every
+    batched row tagged 'current', computed by ONE join with the
+    last-flush aggregate and an explode — the batched aggregation runs
+    once instead of once per union branch."""
+    window_ms = parse_time_ms(window_ms, "window.time")
+    return (
+        _with_last_end(batched, partition_attr)
+        .withColumn("channel", channel_tags(F.col(BATCH_END) < F.col("_last_end")))
+        .withColumn(
+            "expired_at_ms",
+            F.when(
+                F.col("channel") == "expired", F.col(BATCH_END) + F.lit(window_ms)
+            ).cast("long"),
+        )
+        .drop("_last_end")
     )

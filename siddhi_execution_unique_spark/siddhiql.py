@@ -391,12 +391,16 @@ def _dual_channel(
     ts: str,
     tiebreak: str | None,
     channel: str,
+    partition_attr: str | None = None,
 ) -> DataFrame:
     """Build the expired channel, or the reference's `insert all events
     into` protocol (current ∪ expired, tagged on a ``channel`` column —
     e.g. UniqueLengthWindowTestCase.java:65,95 consume both chunks of
     one output stream). Raises SiddhiQLError for windows whose expired
-    channel has no batch form — never silently returns current-only."""
+    channel has no batch form — never silently returns current-only.
+    ``partition_attr`` scopes each channel rule to its instance (the
+    composite-key windows already carry it as their leading key)."""
+    p = partition_attr
     if window == "ever":
         if channel == "expired":
             return ever_expired(df, keys, ts=ts, tiebreak=tiebreak)
@@ -416,7 +420,8 @@ def _dual_channel(
     elif window == "length":
         tb = _need_tiebreak(window, tiebreak)
         emissions = ops.length_window_emissions_distributed(
-            df, keys, kwargs["window_length"], ts=ts, tiebreak=tb
+            df, keys, kwargs["window_length"], ts=ts, tiebreak=tb,
+            partition_attr=p,
         )
         if channel == "expired":
             return emissions.filter(F.col(CHANNEL) == "expired").drop(CHANNEL)
@@ -424,26 +429,26 @@ def _dual_channel(
     elif window == "timeBatch":
         batched = ops.time_batch(df, keys, ts=ts, tiebreak=tiebreak, **kwargs)
         if channel == "expired":
-            return ops.expired_channel(batched, kwargs["window_time"])
+            return ops.expired_channel(batched, kwargs["window_time"], p)
         # single pass: a current∪expired union recomputes the batched
         # aggregation per branch (no exchange reuse across a union)
-        return ops.all_channel(batched, kwargs["window_time"])
+        return ops.all_channel(batched, kwargs["window_time"], p)
     elif window == "lengthBatch":
         batched = ops.length_batch(
-            df, keys, kwargs["window_length"], ts=ts, tiebreak=tiebreak
+            df, keys, kwargs["window_length"], ts=ts, tiebreak=tiebreak,
+            partition_attr=p,
         )
+        # each instance's fire chain drains its own previous batch
+        gcols = (p,) if p else ()
         if channel == "expired":
-            return ops.length_batch_expired(batched)
-        return ops.length_batch_all(batched)
+            return ops.length_batch_expired(batched, group_cols=gcols)
+        return ops.length_batch_all(batched, group_cols=gcols)
     elif window == "timeLengthBatch":
-        if channel == "expired":
-            return ops.time_length_batch_expired(
-                df, keys, kwargs["window_time"], kwargs["window_length"],
-                ts=ts, tiebreak=tiebreak,
-            )
-        return ops.time_length_batch_all(
+        fn = (ops.time_length_batch_expired if channel == "expired"
+              else ops.time_length_batch_all)
+        return fn(
             df, keys, kwargs["window_time"], kwargs["window_length"],
-            ts=ts, tiebreak=tiebreak,
+            ts=ts, tiebreak=tiebreak, partition_attr=p,
         )
     else:
         raise SiddhiQLError(
@@ -455,7 +460,28 @@ def _dual_channel(
     return _tag(cur, "current").unionByName(_tag(exp, "expired"))
 
 
+# windows where "independent instance per partition value" is exactly
+# "prepend the partition attribute to the unique keys": per-key state
+# (ever/first) or an absolute epoch-aligned tumbling grid (timeBatch's
+# start.time modulo alignment is partition-independent)
+_PARTITION_COMPOSITE = frozenset({"ever", "first", "timeBatch", "firstTimeBatch"})
+
+
 def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> DataFrame:
+    """Lower one window clause onto the operators. Inside `partition
+    with (attr of Stream)` (``q["partition"]``) every attribute value
+    runs its own window instance (Siddhi partitioned execution). The
+    arguments parse and validate the same either way; the instance
+    scoping is the operators' ``partition_attr=``, except where the
+    lowering itself depends on it: the per-key / absolute-grid windows
+    take the attribute as a leading key, deduplicate a staged
+    composite key, and unique:time a per-instance event-time edge."""
+    p = q.get("partition")
+    if p is not None and p not in df.columns:
+        raise SiddhiQLError(
+            f"partition attribute {p!r} is not in stream {q['stream']!r} "
+            f"({df.columns})"
+        )
     window, args = q["window"], list(q["args"])
     channel = q["channel"]
     if channel == "all" and window in _NEVER_EXPIRES:
@@ -468,7 +494,9 @@ def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> Data
                 "batch.end.time]]])"
             )
         key, ts_attr, wtime = args[0], args[1], _const(args[2])
-        kwargs: dict = {"tiebreak": tiebreak}
+        # start.time fixes an absolute grid shared by every instance;
+        # without it each instance anchors at its own first event
+        kwargs: dict = {"tiebreak": tiebreak, "partition_attr": p}
         if len(args) >= 4:
             if not _INT_RE.match(args[3]):
                 raise SiddhiQLError(
@@ -553,15 +581,60 @@ def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> Data
                 "expired channel or the function API"
             )
         args = [a if _IDENT_RE.fullmatch(a) else F.expr(a) for a in args]
-    keys = args if len(args) > 1 else (args[0] if args else None)
-    if keys is None:
+    if not args:
         raise SiddhiQLError(f"unique:{window} needs at least a unique key attribute")
     kwargs = dict(zip(trailing or [], consts))
+    part: dict = {}
+    if p is not None:
+        if window == "deduplicate" and channel == "current":
+            if len(args) != 1:
+                raise SiddhiQLError("unique:deduplicate takes exactly one key attribute")
+            # the distributed replay keys state by one column value:
+            # stage a composite string key (partition-attr is non-null
+            # in any meaningful partitioned app; the unit separator
+            # avoids accidental concat collisions)
+            staged = df.withColumn(
+                "_pkey",
+                F.concat_ws(
+                    "\x1f", F.col(p).cast("string"), F.col(args[0]).cast("string")
+                ),
+            )
+            return fn(staged, "_pkey", ts=ts, tiebreak=tiebreak, **kwargs).drop("_pkey")
+        if window == "time":
+            # each instance's timer is driven by its own stream's front,
+            # so the live set is ts > max(ts) OVER (PARTITION BY attr) - T,
+            # not the global max
+            window_ms = parse_time_ms(kwargs["window_time"], "window.time")
+            ms = event_ms(df, ts)
+            live = (
+                df.withColumn("_edge", F.max(ms).over(SqlWindow.partitionBy(p)))
+                .filter(ms > F.col("_edge") - F.lit(window_ms))
+                .drop("_edge")
+            )
+            cur = ops.ever(live, [p] + args, ts=ts, tiebreak=tiebreak)
+            if channel == "current":
+                return cur
+            # per-instance expired: the complement of the instance's
+            # final contents — timer-evicted (per-instance edge) or
+            # replaced — the partitioned analog of time_window_expired
+            on = [p] + args + [ts, _need_tiebreak(window, tiebreak)]
+            if channel == "expired":
+                return df.join(cur.select(*on), on, "left_anti")
+            return _complement_channels(df, cur, on)
+        if window in _PARTITION_COMPOSITE:
+            args = [p] + args
+        else:
+            part = {"partition_attr": p}
+            if window == "timeLengthBatch":
+                # per-instance fire chains replay per value; the
+                # distributed form's interval algebra is global
+                fn = ops.time_length_batch
+    keys = args if len(args) > 1 else args[0]
     if channel == "expired" and expired_fn is not None:
         return expired_fn(df, keys, ts=ts, tiebreak=tiebreak, **kwargs)
     if channel in ("expired", "all"):
-        return _dual_channel(window, df, keys, kwargs, ts, tiebreak, channel)
-    return fn(df, keys, ts=ts, tiebreak=tiebreak, **kwargs)
+        return _dual_channel(window, df, keys, kwargs, ts, tiebreak, channel, p)
+    return fn(df, keys, ts=ts, tiebreak=tiebreak, **kwargs, **part)
 
 
 def _bind_stream(q: dict, streams: dict[str, DataFrame]) -> DataFrame:
@@ -2214,19 +2287,13 @@ def _run_join(
                 raise SiddhiQLError(
                     f"unique:{window} needs (key, window.length)"
                 )
-            keep = "first" if window == "firstLengthBatch" else "last"
-            if partitioned:
-                # per-instance forming map (each instance its own
-                # probe state), one shuffle on the partition attr
-                sides[p] = ops.length_batch_forming_partitioned(
-                    df, side["partition"], args[0], consts[0], ts=ts,
-                    tiebreak=_need_tiebreak(window, tiebreak), keep=keep,
-                )
-            else:
-                sides[p] = ops.length_batch_forming(
-                    df, args[0], consts[0], ts=ts,
-                    tiebreak=_need_tiebreak(window, tiebreak), keep=keep,
-                )
+            # partitioned: each instance its own forming map
+            sides[p] = ops.length_batch_forming(
+                df, args[0], consts[0], ts=ts,
+                tiebreak=_need_tiebreak(window, tiebreak),
+                keep="first" if window == "firstLengthBatch" else "last",
+                partition_attr=side.get("partition"),
+            )
             continue
         if window == "timeLengthBatch":
             # timeLengthBatch find() probes eventsToBeExpired — the
@@ -2234,8 +2301,8 @@ def _run_join(
             # Processor.java:377-384); fires reset the clock, so no
             # cross-batch grid exists to align on. Partitioned: each
             # instance's own last batch (per-instance max batch_seq).
+            batched = _build_window(side, df, ts, tiebreak)
             if partitioned:
-                batched = _build_partitioned(side, df, ts, tiebreak)
                 pcol = side["partition"]
                 w = SqlWindow.partitionBy(pcol)
                 sides[p] = (
@@ -2245,7 +2312,6 @@ def _run_join(
                     .drop("_last_seq")
                 )
             else:
-                batched = _build_window(side, df, ts, tiebreak)
                 last = batched.agg(F.max("batch_seq").alias("_last_seq"))
                 sides[p] = (
                     batched.crossJoin(F.broadcast(last))
@@ -2253,279 +2319,15 @@ def _run_join(
                     .drop("_last_seq")
                 )
             continue
-        built = (
-            _build_partitioned(side, df, ts, tiebreak)
-            if partitioned else _build_window(side, df, ts, tiebreak)
-        )
+        built = _build_window(side, df, ts, tiebreak)
         if not aligned and window in (
             "timeBatch", "firstTimeBatch", "externalTimeBatch"
         ):
             # mixed pair: probe this side's find() state, not its full
             # batch history (which only aligned pairs may pin batchwise)
-            built = _batch_find_state(
-                window, built, side["partition"] if partitioned else None
-            )
+            built = _batch_find_state(window, built, side.get("partition"))
         sides[p] = built
     return _join_channels(q, sides, cond, partitioned, lattr, rattr)
-
-
-# windows where "independent instance per partition value" is exactly
-# "prepend the partition attribute to the unique keys": per-key state
-# (ever/first) or an absolute epoch-aligned tumbling grid (timeBatch's
-# start.time modulo alignment is partition-independent)
-_PARTITION_COMPOSITE = frozenset({"ever", "first", "timeBatch", "firstTimeBatch"})
-
-
-def _build_partitioned(
-    q: dict, df: DataFrame, ts: str, tiebreak: str | None
-) -> DataFrame:
-    """`partition with (attr of Stream)`: every partition-key value
-    runs its own window instance (Siddhi partitioned execution). For
-    the per-key/absolute-grid windows that is a composite groupBy key;
-    unique:time additionally needs a PER-PARTITION event-time edge
-    (each instance's timer is driven by its own stream's front, so
-    the live set is ts > max(ts) OVER (PARTITION BY attr) - T, not
-    the global max). The length families lower to per-instance
-    forms: unique:length to a per-partition ranked top-N (distributes
-    BETTER than the global window), the lengthBatch/timeLengthBatch
-    chains to a keyed ``groupBy(attr).applyInPandas`` replay — each
-    instance's fire chain runs independently in its own group, so the
-    partitioned form has no single-group funnel at all."""
-    p = q["partition"]
-    if p not in df.columns:
-        raise SiddhiQLError(
-            f"partition attribute {p!r} is not in stream {q['stream']!r} "
-            f"({df.columns})"
-        )
-    window = q["window"]
-    channel = q["channel"]
-    if channel == "all" and window in _NEVER_EXPIRES:
-        channel = "current"
-    if channel != "current" and window not in (
-        "ever", "first", "time", "length", "timeBatch", "lengthBatch",
-        "timeLengthBatch", "externalTimeBatch"
-    ):
-        raise SiddhiQLError(
-            f"the expired/all-events channel of a partitioned "
-            f"unique:{window} is not wired; use the function API"
-        )
-    if channel != "current" and window == "length":
-        # per-instance set-semantics emission log: every arrival emits
-        # current; an event emits expired iff it is NOT in its
-        # instance's final FIFO contents (the same buffer invariant as
-        # the global length_window_emissions_distributed, ranked per
-        # instance)
-        args = list(q["args"])
-        consts: list = []
-        while args and _is_const(args[-1]):
-            consts.insert(0, _const(args.pop()))
-        if len(consts) != 1 or not args:
-            raise SiddhiQLError("unique:length needs (key, window.length)")
-        tb = _need_tiebreak(window, tiebreak)
-        retained = ops.length_window_partitioned(
-            df, p, args, consts[0], ts=ts, tiebreak=tb
-        )
-        on = [p] + args + [ts, tb]
-        if channel == "expired":
-            return df.join(retained.select(*on), on, "left_anti")
-        # single pass (one source scan): left-join the per-instance
-        # retained set and explode the channel tags
-        marker = retained.select(*on).withColumn("_keep", F.lit(1))
-        return (
-            df.join(marker, on, "left")
-            .withColumn(
-                "channel",
-                F.explode(
-                    F.when(
-                        F.col("_keep").isNull(),
-                        F.array(F.lit("current"), F.lit("expired")),
-                    ).otherwise(F.array(F.lit("current")))
-                ),
-            )
-            .drop("_keep")
-        )
-    if channel != "current" and window == "timeLengthBatch":
-        args = list(q["args"])
-        consts: list = []
-        while args and _is_const(args[-1]):
-            consts.insert(0, _const(args.pop()))
-        if len(consts) != 2 or len(args) != 1:
-            raise SiddhiQLError(
-                "unique:timeLengthBatch needs (key, window.time, window.length)"
-            )
-        # per-instance drain rule: batch k of instance p re-emits at
-        # p's own next flush, witnessed by p's own clock
-        if channel == "expired":
-            return ops.time_length_batch_expired_partitioned(
-                df, p, args[0], consts[0], consts[1], ts=ts, tiebreak=tiebreak
-            )
-        # single pass (no union recompute of the per-instance chains)
-        return ops.time_length_batch_all_partitioned(
-            df, p, args[0], consts[0], consts[1], ts=ts, tiebreak=tiebreak
-        )
-    if channel != "current" and window == "timeBatch":
-        # per-instance dual channel (VERDICT r07 item 7): the
-        # composite-key lowering is reused for the batched rows, but
-        # the expired witness must be PER INSTANCE — a batch expires
-        # iff its own instance fired a later batch, not any instance
-        args = list(q["args"])
-        consts: list = []
-        while args and _is_const(args[-1]):
-            consts.insert(0, _const(args.pop()))
-        if len(consts) not in (1, 2) or not args:
-            raise SiddhiQLError(
-                "unique:timeBatch needs (key, window.time[, start.time])"
-            )
-        kwargs = {"window_time": consts[0]}
-        if len(consts) == 2:
-            kwargs["start_time_ms"] = int(consts[1])
-        batched = ops.time_batch(df, [p] + args, ts=ts, tiebreak=tiebreak, **kwargs)
-        if channel == "expired":
-            return ops.expired_channel_partitioned(batched, consts[0], p)
-        # single pass (no union recompute of the batched aggregation)
-        return ops.all_channel_partitioned(batched, consts[0], p)
-    if channel != "current" and window == "lengthBatch":
-        args = list(q["args"])
-        consts = []
-        while args and _is_const(args[-1]):
-            consts.insert(0, _const(args.pop()))
-        if len(consts) != 1 or len(args) != 1:
-            raise SiddhiQLError("unique:lengthBatch needs (key, window.length)")
-        batched = ops.length_batch_partitioned(
-            df, p, args[0], consts[0], ts=ts, tiebreak=tiebreak
-        )
-        # each instance's fire chain drains its own previous batch
-        if channel == "expired":
-            return ops.length_batch_expired(batched, group_cols=(p,))
-        return ops.length_batch_all(batched, group_cols=(p,))
-    if window in _PARTITION_COMPOSITE:
-        return _build_window({**q, "args": [p] + list(q["args"])}, df, ts, tiebreak)
-    if window == "deduplicate":
-        # the distributed replay keys state by one column value: stage
-        # a composite string key (partition-attr is non-null in any
-        # meaningful partitioned app; the unit separator avoids
-        # accidental concat collisions)
-        key, interval = q["args"][0], _const(q["args"][1])
-        staged = df.withColumn(
-            "_pkey",
-            F.concat_ws(
-                "\x1f", F.col(p).cast("string"), F.col(key).cast("string")
-            ),
-        )
-        return ops.deduplicate(
-            staged, "_pkey", interval, ts=ts, tiebreak=tiebreak
-        ).drop("_pkey")
-    if window == "time":
-        args = list(q["args"])
-        window_ms = parse_time_ms(_const(args.pop()), "window.time")
-        ms = event_ms(df, ts)
-        live = (
-            df.withColumn("_edge", F.max(ms).over(SqlWindow.partitionBy(p)))
-            .filter(ms > F.col("_edge") - F.lit(window_ms))
-            .drop("_edge")
-        )
-        cur = ops.ever(live, [p] + args, ts=ts, tiebreak=tiebreak)
-        if channel == "current":
-            return cur
-        # per-instance expired: the complement of the instance's final
-        # contents — timer-evicted (per-instance edge) or replaced —
-        # via a left-anti join, the partitioned analog of
-        # time_window_expired's global derivation
-        tb = _need_tiebreak(window, tiebreak)
-        on = [p] + args + [ts, tb]
-        if channel == "expired":
-            return df.join(cur.select(*on), on, "left_anti")
-        return _complement_channels(df, cur, on)
-    if window == "externalTimeBatch":
-        args = list(q["args"])
-        if len(args) < 3 or len(args) > 6:
-            raise SiddhiQLError(
-                "unique:externalTimeBatch needs (key, timestamp, window.time"
-                " [, start.time [, time.out [, replace.time.stamp.with."
-                "batch.end.time]]])"
-            )
-        key, ts_attr, wtime = args[0], args[1], _const(args[2])
-        kwargs: dict = {"tiebreak": tiebreak}
-        if len(args) >= 4:
-            if not _INT_RE.match(args[3]):
-                raise SiddhiQLError(
-                    f"externalTimeBatch start.time must be an int constant, "
-                    f"got {args[3]!r}"
-                )
-            # start.time fixes an absolute grid shared by every
-            # instance; without it each instance anchors at its own
-            # first event (both lowered by the partitioned op)
-            kwargs["start_time_ms"] = int(args[3])
-        if len(args) >= 5 and not (_INT_RE.match(args[4]) or _TIME_RE.match(args[4])):
-            raise SiddhiQLError(
-                f"externalTimeBatch time.out must be an int/time constant, "
-                f"got {args[4]!r}"
-            )
-        if len(args) == 6:
-            if not _BOOL_RE.match(args[5]):
-                raise SiddhiQLError(
-                    "externalTimeBatch replace.time.stamp.with.batch.end.time "
-                    f"must be true/false, got {args[5]!r}"
-                )
-            kwargs["replace_timestamp_with_batch_end"] = (
-                args[5].lower() == "true"
-            )
-        if channel != "current":
-            # per-instance rank+2 flush rule (the expired derivation
-            # has no ts-rewrite knob, same as the global channel)
-            exp_kwargs = {
-                k: v for k, v in kwargs.items()
-                if k != "replace_timestamp_with_batch_end"
-            }
-            if channel == "expired":
-                return ops.external_time_batch_expired_partitioned(
-                    df, p, [key], ts_attr, wtime, **exp_kwargs
-                )
-            if kwargs.get("replace_timestamp_with_batch_end"):
-                cur = ops.external_time_batch_partitioned(
-                    df, p, [key], ts_attr, wtime, **kwargs
-                ).withColumn("expired_at_ms", F.lit(None).cast("long"))
-                exp = ops.external_time_batch_expired_partitioned(
-                    df, p, [key], ts_attr, wtime, **exp_kwargs
-                )
-                return _tag(cur, "current").unionByName(_tag(exp, "expired"))
-            return ops.external_time_batch_all_partitioned(
-                df, p, [key], ts_attr, wtime, **exp_kwargs
-            )
-        return ops.external_time_batch_partitioned(
-            df, p, [key], ts_attr, wtime, **kwargs
-        )
-    if window in ("length", "lengthBatch", "firstLengthBatch", "timeLengthBatch"):
-        args = list(q["args"])
-        consts: list = []
-        while args and _is_const(args[-1]):
-            consts.insert(0, _const(args.pop()))
-        if window == "length":
-            if len(consts) != 1:
-                raise SiddhiQLError("unique:length needs (key, window.length)")
-            return ops.length_window_partitioned(
-                df, p, args, consts[0], ts=ts, tiebreak=tiebreak
-            )
-        if len(args) != 1:
-            raise SiddhiQLError(f"unique:{window} takes exactly one key column")
-        if window == "timeLengthBatch":
-            if len(consts) != 2:
-                raise SiddhiQLError(
-                    "unique:timeLengthBatch needs (key, window.time, window.length)"
-                )
-            return ops.time_length_batch_partitioned(
-                df, p, args[0], consts[0], consts[1], ts=ts, tiebreak=tiebreak
-            )
-        if len(consts) != 1:
-            raise SiddhiQLError(f"unique:{window} needs (key, window.length)")
-        return ops.length_batch_partitioned(
-            df, p, args[0], consts[0], ts=ts, tiebreak=tiebreak,
-            keep="first" if window == "firstLengthBatch" else "last",
-        )
-    raise SiddhiQLError(
-        f"partitioned unique:{window} is not wired through SiddhiQL; "
-        "use the function API"
-    )
 
 
 def run_app(
@@ -2553,9 +2355,6 @@ def run_app(
                 out[q["out"]] = res
                 avail[q["out"]] = res
                 continue
-        elif q.get("partition"):
-            df = _bind_stream(q, avail)
-            res = _app_error_boundary(_build_partitioned, q, df, ts, tiebreak)
         else:
             df = _bind_stream(q, avail)
             res = _app_error_boundary(_build_window, q, df, ts, tiebreak)

@@ -40,6 +40,7 @@ from siddhi_execution_unique_spark.operators.validation import (
     parse_time_ms,
     require_column,
     require_keys,
+    require_pos_int,
     stage_keys,
 )
 
@@ -382,9 +383,7 @@ def length_batch_stream(
     require_column(df, ts, "ts")
     if keep not in ("last", "first"):
         raise ValueError(f"keep must be 'last' or 'first', got {keep!r}")
-    n = int(window_length)
-    if n <= 0:
-        raise ValueError(f"window.length must be a positive int, got {window_length!r}")
+    n = require_pos_int(window_length, "window.length")
     is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
     columns = [f.name for f in df.schema.fields]
     out_schema = StructType(
@@ -490,9 +489,7 @@ def length_window_stream(
 
     require_column(df, key, "unique.key")
     require_column(df, ts, "ts")
-    n = int(window_length)
-    if n <= 0:
-        raise ValueError(f"window.length must be a positive int, got {window_length!r}")
+    n = require_pos_int(window_length, "window.length")
     is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
     columns = [f.name for f in df.schema.fields]
     out_schema = StructType(df.schema.fields + [StructField("channel", StringType())])
@@ -568,9 +565,7 @@ def time_length_batch_stream(
     require_column(df, key, "unique.key")
     require_column(df, ts, "ts")
     t_ms = parse_time_ms(window_time, "window.time")
-    n = int(window_length)
-    if n <= 0:
-        raise ValueError(f"window.length must be a positive int, got {window_length!r}")
+    n = require_pos_int(window_length, "window.length")
     is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
     columns = [f.name for f in df.schema.fields]
     out_schema = StructType(

@@ -1,6 +1,8 @@
-"""Structure checks on ``__spark_entry__.py`` (stdlib ``ast`` only, no
-Spark): every streaming certification drains through the one runner,
-and no query function carries imports it does not use."""
+"""Structure checks that start no Spark session: in
+``__spark_entry__.py`` (stdlib ``ast``) every streaming certification
+drains through the one runner and no query function carries imports
+it does not use; ``operators.__all__`` is exactly the public operators,
+with `partition with` as a parameter rather than twin functions."""
 
 import ast
 import os
@@ -34,3 +36,20 @@ def test_no_unused_function_local_imports():
                     if name not in used:
                         unused.append(f"{fn.name}:{node.lineno} {name}")
     assert unused == []
+
+
+def test_operators_all_lists_public_callables():
+    # every public operator is exported, and `partition with` is the
+    # partition_attr= parameter, never a *_partitioned twin
+    from siddhi_execution_unique_spark import operators as ops
+
+    public = {n for n, v in vars(ops).items()
+              if callable(v) and not n.startswith("_")}
+    assert sorted(ops.__all__) == sorted(public)
+    assert [n for n in ops.__all__ if n.endswith("_partitioned")] == []
+
+
+def test_siddhiql_has_one_window_builder():
+    from siddhi_execution_unique_spark import siddhiql
+
+    assert not hasattr(siddhiql, "_build_partitioned")

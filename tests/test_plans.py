@@ -876,12 +876,13 @@ def test_partitioned_replay_is_one_keyed_exchange(spark):
     number of partition values)."""
     events = load_table(spark, SF_DIR, "events")
     for df in (
-        ops.length_batch_partitioned(
-            events, "event_type", "user_id", 40, ts="ts", tiebreak="event_id"
+        ops.length_batch(
+            events, "user_id", 40, ts="ts", tiebreak="event_id",
+            partition_attr="event_type",
         ),
-        ops.time_length_batch_partitioned(
-            events, "event_type", "user_id", 21_600_000, 20,
-            ts="ts", tiebreak="event_id",
+        ops.time_length_batch(
+            events, "user_id", 21_600_000, 20,
+            ts="ts", tiebreak="event_id", partition_attr="event_type",
         ),
     ):
         plan = plan_of(df)
@@ -1291,8 +1292,9 @@ def test_partitioned_external_time_batch_plan_shape(spark):
     key) hash aggregation — no window function over the fact table,
     no cartesian product."""
     events = load_table(spark, SF_DIR, "events")
-    out = ops.external_time_batch_partitioned(
-        events, "event_type", "user_id", "ts", 7_200_000, tiebreak="event_id"
+    out = ops.external_time_batch(
+        events, "user_id", "ts", 7_200_000, tiebreak="event_id",
+        partition_attr="event_type",
     )
     p = plan_of(out)
     assert "Join Cross" not in p and "CartesianProduct" not in p

@@ -451,12 +451,14 @@ def test_partitioned_length_families(streams):
     end
     """
     out = sq.run_app(app, streams, tiebreak="event_id")
-    want1 = ops.length_window_partitioned(
-        streams["events"], "event_type", "user_id", 50, ts="ts", tiebreak="event_id"
+    want1 = ops.length_window(
+        streams["events"], "user_id", 50, ts="ts", tiebreak="event_id",
+        partition_attr="event_type",
     ).select("event_type", "user_id", "event_id")
     assert rows(out["contents"]) == rows(want1)
-    want2 = ops.length_batch_partitioned(
-        streams["events"], "event_type", "user_id", 40, ts="ts", tiebreak="event_id"
+    want2 = ops.length_batch(
+        streams["events"], "user_id", 40, ts="ts", tiebreak="event_id",
+        partition_attr="event_type",
     ).select("event_type", "user_id", "event_id", "batch_seq")
     assert rows(out["batches"]) == rows(want2)
 
@@ -900,8 +902,9 @@ def test_partitioned_join_length_batch_and_tlb_probe_per_instance(streams):
     got = sq.run_app(app, two, tiebreak="event_id")["joined"]
 
     def forming(df):
-        return ops.length_batch_forming_partitioned(
-            df, "event_type", "user_id", 5, ts="ts", tiebreak="event_id")
+        return ops.length_batch_forming(
+            df, "user_id", 5, ts="ts", tiebreak="event_id",
+            partition_attr="event_type")
 
     l, r = forming(two["lefties"]), forming(two["righties"])
     want = l.alias("l").join(
@@ -925,9 +928,9 @@ def test_partitioned_join_length_batch_and_tlb_probe_per_instance(streams):
     def last_per_instance(df):
         from pyspark.sql.window import Window as W
 
-        b = ops.time_length_batch_partitioned(
-            df, "event_type", "user_id", 6 * 3600 * 1000, 20,
-            ts="ts", tiebreak="event_id")
+        b = ops.time_length_batch(
+            df, "user_id", 6 * 3600 * 1000, 20,
+            ts="ts", tiebreak="event_id", partition_attr="event_type")
         return (b.withColumn("_m", F.max("batch_seq").over(
                     W.partitionBy("event_type")))
                 .filter("batch_seq = _m").drop("_m"))
@@ -1226,9 +1229,9 @@ def test_partitioned_length_batch_expired_per_instance_chain(streams):
     end
     """
     got = sq.run_app(app, streams, tiebreak="event_id")["exp"]
-    batched = ops.length_batch_partitioned(
-        streams["events"], "event_type", "user_id", 10,
-        ts="ts", tiebreak="event_id")
+    batched = ops.length_batch(
+        streams["events"], "user_id", 10,
+        ts="ts", tiebreak="event_id", partition_attr="event_type")
     want = ops.length_batch_expired(batched, group_cols=("event_type",)).select(
         "event_type", "user_id", "event_id", "batch_seq", "expired_at_ms")
     assert rows(got) == rows(want) and want.count() > 0
@@ -1502,6 +1505,16 @@ def test_partitioned_outside_queries_coexist(streams):
     # unknown partition attribute
     "partition with (ghost_col of events) begin "
     "from events#window.unique:ever(user_id) select * insert into x; end",
+    # bad window arguments are rejected by the same parser as the
+    # global form: a missing interval, a stray trailing constant
+    "partition with (event_type of events) begin "
+    "from events#unique:deduplicate(user_id) select * insert into x; end",
+    "partition with (event_type of events) begin "
+    "from events#unique:deduplicate(user_id, 1 sec, 5) select * "
+    "insert into x; end",
+    "partition with (event_type of events) begin "
+    "from events#window.unique:time(user_id, 1 sec, 5) select * "
+    "insert into x; end",
 ])
 def test_partitioned_validation_errors(streams, bad):
     with pytest.raises(sq.SiddhiQLError):

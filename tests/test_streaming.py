@@ -427,6 +427,21 @@ def test_time_length_batch_stream_checkpoint_resume(spark, workdir):
     assert all(r["fire_reason"] == "length" for r in rows)
 
 
+@pytest.mark.parametrize("twin", [
+    lambda df, n: stw.length_batch_stream(df, "k", n, ts="ts"),
+    lambda df, n: stw.length_window_stream(df, "k", n, ts="ts"),
+    lambda df, n: stw.time_length_batch_stream(df, "k", 10_000, n, ts="ts"),
+], ids=["length_batch_stream", "length_window_stream", "time_length_batch_stream"])
+@pytest.mark.parametrize("bad", [2.9, True, 0], ids=["float", "bool", "zero"])
+def test_length_twins_reject_bad_window_length(spark, twin, bad):
+    # the same constant-positive-int rule as the batch operators: a
+    # float must not truncate to N=2, nor a bool count as N=1
+    df = spark.createDataFrame([(1000, 1, "a", 1.0)],
+                               "ts long, event_id long, k string, v double")
+    with pytest.raises(ValueError, match="window.length"):
+        twin(df, bad)
+
+
 def test_external_time_batch_stream_boundary_flush(spark, workdir):
     # event at 12s crosses the 10s boundary anchored at 1s -> first
     # batch [1s,11s) flushes with keep-latest 'a'

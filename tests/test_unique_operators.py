@@ -6,6 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from siddhi_execution_unique_spark import operators as ops
 from siddhi_execution_unique_spark import (
     deduplicate,
     ever,
@@ -501,68 +502,90 @@ def test_length_batch_streams_one_million_rows(spark):
 PSCHEMA = "ts long, event_id long, k string, v double, p string"
 
 
-def test_length_batch_partitioned_independent_chains(spark):
-    # two partition values with interleaved arrivals: each value runs
-    # its own N=2 chain — a global chain would fire at (a,x) crossing
-    # partitions, the partitioned form must not
-    from siddhi_execution_unique_spark.operators.replay import (
-        length_batch,
-        length_batch_partitioned,
-    )
+def _with_p(p, *keys):
+    return ([p] if p else []) + list(keys)
 
-    rows = [(1, 1, "a", 1.0, "P"), (2, 2, "x", 2.0, "Q"),
-            (3, 3, "b", 3.0, "P"), (4, 4, "a", 4.0, "Q"),
-            (5, 5, "x", 5.0, "Q"), (6, 6, "c", 6.0, "P")]
+
+_TB = {"ts": "ts", "tiebreak": "event_id"}
+# every operator taking partition_attr=, as fn(df, partition_attr)
+PARTITION_CASES = {
+    "length_window": lambda d, p: ops.length_window(
+        d, "k", 2, partition_attr=p, **_TB),
+    "length_window_emissions_indexed": lambda d, p: (
+        ops.length_window_emissions_indexed(d, "k", 2, partition_attr=p, **_TB)),
+    "length_window_emissions_distributed": lambda d, p: (
+        ops.length_window_emissions_distributed(d, "k", 2, partition_attr=p, **_TB)),
+    "length_batch": lambda d, p: ops.length_batch(
+        d, "k", 2, partition_attr=p, **_TB),
+    "length_batch_no_tiebreak": lambda d, p: ops.length_batch(
+        d, "k", 3, ts="ts", partition_attr=p),
+    "first_length_batch": lambda d, p: ops.first_length_batch(
+        d, "k", 3, partition_attr=p, **_TB),
+    "length_batch_forming": lambda d, p: ops.length_batch_forming(
+        d, "k", 4, partition_attr=p, **_TB),
+    "time_length_batch": lambda d, p: ops.time_length_batch(
+        d, "k", 100, 3, partition_attr=p, **_TB),
+    "time_length_batch_expired": lambda d, p: ops.time_length_batch_expired(
+        d, "k", 100, 3, partition_attr=p, **_TB),
+    "time_length_batch_all": lambda d, p: ops.time_length_batch_all(
+        d, "k", 100, 3, partition_attr=p, **_TB),
+    "external_time_batch": lambda d, p: ops.external_time_batch(
+        d, "k", "ts", 100, tiebreak="event_id", partition_attr=p),
+    "external_time_batch_start_time": lambda d, p: ops.external_time_batch(
+        d, "k", "ts", 100, start_time_ms=50, tiebreak="event_id",
+        partition_attr=p),
+    "external_time_batch_expired": lambda d, p: ops.external_time_batch_expired(
+        d, "k", "ts", 100, tiebreak="event_id", partition_attr=p),
+    "external_time_batch_all": lambda d, p: ops.external_time_batch_all(
+        d, "k", "ts", 100, tiebreak="event_id", partition_attr=p),
+    "expired_channel": lambda d, p: ops.expired_channel(
+        ops.time_batch(d, _with_p(p, "k"), 100, **_TB), 100, partition_attr=p),
+    "all_channel": lambda d, p: ops.all_channel(
+        ops.time_batch(d, _with_p(p, "k"), 100, **_TB), 100, partition_attr=p),
+}
+# hand-derived per-instance results, on top of the filtered-replay check
+PARTITION_HAND = {
+    # P: a@0 b@37 -> fire 0 at 37; a@74 c@111 -> fire 1 at 111 ...
+    # Q: x@13 y@66 -> fire 0 at 66 — a global chain would mix them
+    "length_batch": (("p", "batch_seq", "k", "ts"), {
+        ("P", 0, "a", 0), ("P", 0, "b", 37), ("P", 1, "a", 74),
+        ("P", 1, "c", 111), ("P", 2, "d", 148), ("P", 2, "b", 185),
+        ("P", 3, "e", 222), ("P", 3, "a", 259), ("P", 4, "c", 296),
+        ("P", 4, "f", 333), ("P", 5, "g", 370), ("P", 5, "a", 407),
+        ("Q", 0, "x", 13), ("Q", 0, "y", 66), ("Q", 1, "x", 119),
+        ("Q", 1, "z", 172), ("Q", 2, "w", 225), ("Q", 2, "y", 278),
+        ("Q", 3, "v", 331), ("Q", 3, "u", 384),
+    }),
+    # each instance's buffer(2) holds its last two distinct keys
+    "length_window": (("p", "k", "ts"), {
+        ("P", "g", 370), ("P", "a", 407), ("Q", "u", 384), ("Q", "x", 437),
+    }),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PARTITION_CASES))
+def test_partition_attr_equals_per_value_union(spark, name):
+    # `partition with`: the partitioned call must equal the union, over
+    # partition values, of the unpartitioned call on that value's rows
+    # (two interleaved instances with different first events, so a
+    # shared chain, anchor or witness clock would show)
+    rows = [(i * 37, i + 1, k, float(i), "P")
+            for i, k in enumerate("a b a c d b e a c f g a".split())]
+    rows += [(13 + i * 53, 100 + i, k, float(i), "Q")
+             for i, k in enumerate("x y x z w y v u x".split())]
     df = spark.createDataFrame(rows, PSCHEMA)
-    out = length_batch_partitioned(df, "p", "k", 2, ts="ts", tiebreak="event_id")
-    got = rows_set(out, "p", "batch_seq", "k", "ts")
-    # P: a@1, b@3 -> fire seq0 at 3; c@6 partial. Q: x@2, a@4 -> fire
-    # seq0 at 4; x@5 partial.
-    assert got == {("P", 0, "a", 1), ("P", 0, "b", 3),
-                   ("Q", 0, "x", 2), ("Q", 0, "a", 4)}
-    # the partitioned instance must equal the global replay run on the
-    # filtered stream, for every partition value
+    fn = PARTITION_CASES[name]
+    got = fn(df, "p")
+    want: set = set()
     for v in ("P", "Q"):
-        want = length_batch(df.filter(F.col("p") == v), "k", 2,
-                            ts="ts", tiebreak="event_id")
-        sub = out.filter(F.col("p") == v)
-        cols = ("event_id", "k", "batch_seq", "fired_at_ms")
-        assert rows_set(sub, *cols) == rows_set(want, *cols), v
-
-
-def test_time_length_batch_partitioned_matches_filtered_replay(spark):
-    from siddhi_execution_unique_spark.operators.replay import (
-        time_length_batch,
-        time_length_batch_partitioned,
-    )
-
-    rows = []
-    for j, (p, keys) in enumerate([("P", "a b c d a e b f"),
-                                   ("Q", "x y x z w y v u")]):
-        for i, k in enumerate(keys.split()):
-            rows.append((i * 37 + j * 5, 100 * j + i, k, float(i), p))
-    df = spark.createDataFrame(rows, PSCHEMA)
-    out = time_length_batch_partitioned(df, "p", "k", 100, 3,
-                                        ts="ts", tiebreak="event_id")
-    cols = ("event_id", "k", "batch_seq", "fired_at_ms", "fire_reason")
-    for v in ("P", "Q"):
-        want = time_length_batch(df.filter(F.col("p") == v), "k", 100, 3,
-                                 ts="ts", tiebreak="event_id")
-        assert rows_set(out.filter(F.col("p") == v), *cols) == rows_set(want, *cols), v
-
-
-def test_length_window_partitioned_top_n_per_value(spark):
-    from siddhi_execution_unique_spark.operators.length import (
-        length_window_partitioned,
-    )
-
-    rows = [(1, 1, "a", 1.0, "P"), (2, 2, "b", 2.0, "P"), (3, 3, "a", 3.0, "P"),
-            (4, 4, "c", 4.0, "P"),  # P buffer(2): {a@3 replaced->back, c@4} -> b evicted
-            (5, 5, "x", 5.0, "Q")]  # Q buffer(2): {x@5}
-    df = spark.createDataFrame(rows, PSCHEMA)
-    out = length_window_partitioned(df, "p", "k", 2, ts="ts", tiebreak="event_id")
-    assert rows_set(out, "p", "k", "ts") == {("P", "a", 3), ("P", "c", 4),
-                                             ("Q", "x", 5)}
+        sub = fn(df.filter(F.col("p") == v), None)
+        cols = sub.columns
+        want |= rows_set(sub, *cols)
+    assert rows_set(got, *cols) == want
+    assert want, name  # the case produced rows to compare
+    if name in PARTITION_HAND:
+        hand_cols, hand = PARTITION_HAND[name]
+        assert rows_set(got, *hand_cols) == hand
 
 
 # --- validation (negative tests, SURVEY §5 category 4) ---
@@ -664,44 +687,6 @@ def test_length_window_emissions_replace_and_fifo(spark):
         (1, "expired"), (3, "current"),   # replace: old 'a' out first
         (2, "expired"), (4, "current"),   # FIFO: 'b' evicted by 'c'
     ]
-
-
-def test_length_window_emissions_indexed_partitioned_per_instance(spark):
-    # `partition with` + the ordered emission log: each instance owns
-    # its own FIFO and 0-based emission_idx, so every instance's
-    # sequence equals the GLOBAL indexed log run on that instance's
-    # events alone
-    from siddhi_execution_unique_spark.operators.length import (
-        length_window_emissions_indexed,
-        length_window_emissions_indexed_partitioned,
-    )
-
-    seq = [("g1", k) for k in "a b a c d b e a".split()] + [
-        ("g2", k) for k in "x a x y a z".split()
-    ]
-    rows = [(grp, (i + 1) * 1000, i + 1, k) for i, (grp, k) in enumerate(seq)]
-    df = spark.createDataFrame(
-        rows, "grp string, ts long, event_id long, k string"
-    )
-    got = length_window_emissions_indexed_partitioned(
-        df, "grp", "k", 2, ts="ts", tiebreak="event_id"
-    )
-    got_rows = {
-        (r["grp"], r["event_id"], r["channel"], r["emission_idx"])
-        for r in got.collect()
-    }
-    want: set = set()
-    for g in ("g1", "g2"):
-        sub = df.filter(F.col("grp") == g)
-        log = length_window_emissions_indexed(
-            sub, "k", 2, ts="ts", tiebreak="event_id"
-        )
-        want |= {
-            (g, r["event_id"], r["channel"], r["emission_idx"])
-            for r in log.collect()
-        }
-    assert got_rows == want
-    assert len(want) > len(rows)  # replaces/evictions produced expired rows
 
 
 def test_time_length_batch_trailing_window_never_fires(spark):
