@@ -207,17 +207,20 @@ def length_window_emissions(
     out_schema = StructType(
         list(df.schema.fields) + [StructField(CHANNEL, StringType())]
     )
-
-    def shape(st, fed, rows, chunk):
-        refs, chans, _ = st.log(*fed)
-        out = rows(refs)
-        out[CHANNEL] = chans
-        return out
-
     return _sorted_stream_replay(
         df, key, ts, tiebreak, out_schema, list(df.columns),
-        lambda: _UniqueFifo(n), shape,
+        lambda: _UniqueFifo(n), _fifo_channels,
     )
+
+
+def _fifo_channels(st, fed, rows, _):
+    """One fed chunk's FIFO emission log as rows with a channel column
+    (the shape of :func:`length_window_emissions` and its streaming
+    twin)."""
+    refs, chans, _ = st.log(*fed)
+    out = rows(refs)
+    out[CHANNEL] = chans
+    return out
 
 
 def length_exit_instants(

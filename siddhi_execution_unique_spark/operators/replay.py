@@ -29,16 +29,15 @@ that Catalyst cannot express declaratively.
   distinct keys, whichever first; after a length-fire, events are
   **discarded** until the next time boundary.
 
-  Batch-id assignment for these two is inherently sequential over the
-  whole stream (each fire resets a distinct-key set shared by all
-  keys), so the batch API replays one globally ordered SCAN — a JVM
-  external sort (spills at any size) feeding a stateful
-  ``mapInPandas`` whose memory is bounded by the forming batch (the
-  ≤N retained rows carried across Arrow chunks via
-  :class:`_CarryScan`). Throughput of the one serial stage is the
-  remaining scale caveat (SURVEY.md §7); use the time/length-batch
-  pure-Catalyst operators when global arrival order isn't
-  semantically required.
+Each window's state machine is one chain class (:class:`_FormingSet`,
+:class:`_UniqueFifo`, :class:`_TimeLengthBatch`, :class:`_ExternalTimeBatch`).
+``streaming._chain_stream`` runs all four for the streaming twins; the
+batch operators run the first three through :func:`_sorted_stream_replay`
+(one ordered scan) or :func:`_partitioned_replay` (per ``partition with``
+value), while batch externalTimeBatch stays a Catalyst lowering
+(``time_batch.py``). The serial stage's throughput is the remaining scale
+caveat (SURVEY.md §7); use the pure-Catalyst time/length-batch operators
+when global arrival order isn't semantically required.
 """
 
 from __future__ import annotations
@@ -58,6 +57,7 @@ from siddhi_execution_unique_spark.operators.validation import (
     require_column,
     require_keys,
     require_pos_int,
+    require_start_time,
 )
 
 _TS_MS = "_ts_ms"
@@ -136,15 +136,7 @@ def deduplicate(
     return prepared.mapInPandas(scan, schema=schema)
 
 
-class _Sentinel:
-    def __eq__(self, other):  # never equal to any key value
-        return False
-
-    def __ne__(self, other):
-        return True
-
-
-_SENTINEL = _Sentinel()
+_SENTINEL = object()  # equal to no key value
 
 BATCH_SEQ = "batch_seq"
 FIRED_AT = "fired_at_ms"
@@ -152,47 +144,54 @@ FIRE_REASON = "fire_reason"
 
 
 class _Chain:
-    """One replay chain: a step over an arrival-ordered chunk's columns
-    that carries its state across calls. ``feed(keys, ms, base)`` walks
-    the chunk's keys and event-time millis (Python lists: ``tolist()``
-    once per chunk, so the walk hashes plain ints) and refers to the
-    chunk's rows by int refs ``base + i``; ``held`` maps each key whose
-    row the chain still holds to that row's ref, so a driver can carry
-    those rows to the next chunk and renumber them (:class:`_CarryScan`).
-    The output columns are built from the walk's lists with numpy, never
-    per row."""
+    """One replay chain: a step over an arrival-ordered chunk that
+    carries its state across calls. ``feed(keys, ms, base)`` walks the
+    chunk's keys (:func:`_chain_keys`) and event-time millis as Python
+    lists and refers to its rows by int refs ``base + i``. ``held`` maps
+    each key whose row the chain holds to that row's ref and ``last``
+    lists its last fire's refs: the rows a driver carries to the next
+    chunk (:class:`_CarryScan`). ``STATE`` pairs each scalar a streaming
+    driver saves with its state-schema field name, in state-row order.
+    Output columns are built with numpy, never per row."""
+
+    STATE: tuple = ()
 
     def __init__(self):
         self.held: dict = {}
+        self.last: list = []
+
+
+def _anchor(t: int, t_ms: int, start: int | None) -> int:
+    """The first boundary after arrival ``t``: ``t + T``, or on the
+    ``start + k*T`` grid (reference ``endTime = ts + (T - (ts - start) %
+    T)``, UniqueExternalTimeBatchWindowProcessor.java:454-458)."""
+    return t + t_ms if start is None else start + ((t - start) // t_ms + 1) * t_ms
 
 
 class _FormingSet(_Chain):
     """The lengthBatch forming set (UniqueLengthBatchWindowProcessor.
     java:165, replace :210-213): add the key — ``keep='last'`` replaces
     its row, ``'first'`` keeps the first — and at ``n`` distinct keys
-    fire all ``n`` rows and clear.
+    fire all ``n`` rows and clear. A plain dict walk over lists, the
+    fire metadata repeated by numpy, takes 0.06 s of CPU for 200k rows
+    (1k Zipf(1.2) keys, N=50, 10k-row chunks); a fully vectorized form
+    (prev/next same-key indices + chunked cumulative fire scan) ran
+    1.8 s against the walk's 0.54 s at 1M rows, 50k keys, its per-fire
+    numpy dispatch dominating at realistic fire rates. The single
+    task's real cost is the Arrow funnel bytes, which the narrow
+    3-column path bounds."""
 
-    Measured (1M rows, 50k keys, N=50, local): a plain dict walk
-    runs 0.54 s — a fully vectorized alternative (prev/next same-key
-    occurrence indices + chunked cumulative fire scan, verified
-    output-identical) ran 1.8 s because the per-fire Python/numpy
-    dispatch dominates at realistic fire rates, so the simple walk
-    stays. Over lists instead of numpy scalars, with the fire metadata
-    repeated by numpy, this walk and its output take 0.06 s of CPU
-    where that walk took 0.32 s (200k rows, 1k Zipf(1.2) keys, N=50,
-    10k-row chunks). The single task's real cost is the Arrow funnel
-    bytes, which the narrow 3-column path bounds."""
+    STATE = (("seq", "batch_seq"),)
 
     def __init__(self, n: int, keep: str):
         super().__init__()
-        self.n, self.last, self.seq = n, keep == "last", 0
+        self.n, self.keep_last, self.seq = n, keep == "last", 0
 
     def feed(self, keys, ms, base):
         """-> (fired refs, ``n`` per fire; chunk position of each fire;
         ``batch_seq`` of the chunk's first fire)."""
-        held, n, last = self.held, self.n, self.last
-        fired: list = []
-        at: list = []
+        held, n, last = self.held, self.n, self.keep_last
+        fired, at = [], []
         for i, k in enumerate(keys):
             if k in held:
                 if last:
@@ -205,6 +204,8 @@ class _FormingSet(_Chain):
                     at.append(i)
         seq0 = self.seq
         self.seq += len(at)
+        if at:
+            self.last = fired[-n:]
         return fired, at, seq0
 
 
@@ -214,52 +215,105 @@ class _TimeLengthBatch(_Chain):
     :261-271,288-290): fire on ``T`` elapsed or ``n`` distinct keys,
     whichever first; after a length fire, arrivals are discarded until
     the next boundary. Boundaries sit at ``anchor + k*T``, the anchor
-    being ``start_time_ms`` or the first arrival's time (:244-252)."""
+    being ``start_time_ms`` or the first arrival's time (:244-252).
+
+    A boundary clears the skip flag or flushes the forming rows; with
+    none formed it still drains the last fire (``sendEvents`` drains
+    the expired queue on every flush, :304-318): a flush of no rows,
+    dropped by the batch output, kept by the streaming expired channel.
+    ``front`` is the latest arrival fed, the instance's own clock."""
+
+    STATE = (("seq", "batch_seq"), ("next_emit", "next_emit"),
+             ("skip", "event_sent"), ("front", "seen_max"))
 
     def __init__(self, t_ms: int, n: int, start_time_ms: int | None):
         super().__init__()
         self.t_ms, self.n, self.start = t_ms, n, start_time_ms
-        self.seq, self.skip, self.next_emit = 0, False, None
+        self.seq, self.skip, self.next_emit, self.front = 0, False, None, None
 
     def feed(self, keys, ms, base):
-        """-> (fired refs; rows per fire; fire times; fire reasons;
+        """-> (fired refs; rows per flush; flush times; flush reasons;
         ``batch_seq`` of the chunk's first fire)."""
-        held, n, t_ms, start = self.held, self.n, self.t_ms, self.start
-        skip, next_emit = self.skip, self.next_emit
-        fired: list = []
-        counts: list = []
-        at_ms: list = []
-        reasons: list = []
+        log, seq0, held, n = ([], [], [], []), self.seq, self.held, self.n
+        if self.next_emit is None:
+            self.next_emit = _anchor(ms[0], self.t_ms, self.start)
         for i, (k, t) in enumerate(zip(keys, ms)):
-            if next_emit is None:
-                next_emit = (
-                    t + t_ms if start is None
-                    else start + ((t - start) // t_ms + 1) * t_ms
-                )
-            while t >= next_emit:
-                if skip:
-                    skip = False  # the boundary clears the skip flag
-                elif held:
-                    fired.extend(held.values())
-                    counts.append(len(held))
-                    at_ms.append(next_emit)
-                    reasons.append("time")
-                    held.clear()
-                next_emit += t_ms
-            if skip:
+            if t >= self.next_emit:
+                self._cross(t, log)
+            if self.skip:
                 continue  # discarded until the next boundary
             held[k] = base + i
             if len(held) == n:
-                fired.extend(held.values())
-                counts.append(n)
-                at_ms.append(t)
-                reasons.append("length")
-                held.clear()
-                skip = True
-        self.skip, self.next_emit = skip, next_emit
-        seq0 = self.seq
-        self.seq += len(counts)
-        return fired, counts, at_ms, reasons, seq0
+                self._flush(t, "length", log)
+                self.skip = True
+        self.front = max(ms) if self.front is None else max(self.front, max(ms))
+        return (*log, seq0)
+
+    def advance(self, up_to: int):
+        """Cross the boundaries at or before ``up_to`` with no arrival
+        (a streaming event-time timer). -> as :meth:`feed`."""
+        log, seq0 = ([], [], [], []), self.seq
+        self._cross(up_to, log)
+        return (*log, seq0)
+
+    def _cross(self, up_to, log):
+        while up_to >= self.next_emit:
+            if self.skip:
+                self.skip = False  # the boundary clears the skip flag
+            elif self.held or self.last:
+                self._flush(self.next_emit, "time", log)
+            self.next_emit += self.t_ms
+
+    def _flush(self, at, reason, log):
+        fired, counts, at_ms, reasons = log
+        held = self.held
+        self.last = list(held.values())
+        fired.extend(self.last)
+        counts.append(len(held))
+        at_ms.append(at)
+        reasons.append(reason)
+        self.seq += bool(held)
+        held.clear()
+
+
+class _ExternalTimeBatch(_Chain):
+    """The externalTimeBatch chain (UniqueExternalTimeBatchWindow-
+    Processor.java:449-458): the latest row per key; an arrival at or
+    past the batch end flushes the batch, if any row formed, and moves
+    the end to the first boundary after it."""
+
+    STATE = (("end", "end_time"),)
+
+    def __init__(self, t_ms: int, start_time_ms: int | None):
+        super().__init__()
+        self.t_ms, self.start, self.end = t_ms, start_time_ms, None
+
+    def feed(self, keys, ms, base):
+        """-> (flushed refs; rows per flush; each flush's batch end;
+        ``'boundary'``)."""
+        fired, counts, ends = [], [], []
+        if self.end is None:
+            self.end = _anchor(ms[0], self.t_ms, self.start)
+        held, t_ms, end = self.held, self.t_ms, self.end
+        for i, (k, t) in enumerate(zip(keys, ms)):
+            if t >= end:
+                if held:
+                    fired.extend(held.values())
+                    counts.append(len(held))
+                    ends.append(end)
+                    held.clear()
+                end += ((t - end) // t_ms + 1) * t_ms
+            held[k] = base + i
+        self.end = end
+        return fired, counts, ends, "boundary"
+
+    def flush(self):
+        """The ``time.out`` idle flush (:279-298): the forming rows go
+        and the batch window stays open. -> as :meth:`feed`."""
+        refs = list(self.held.values())
+        self.held.clear()
+        n = [len(refs)] if refs else []
+        return refs, n, [self.end] * len(n), "timeout"
 
 
 class _UniqueFifo(_Chain):
@@ -303,27 +357,59 @@ class _UniqueFifo(_Chain):
         return refs, chans, idx
 
 
+_INT_TYPES = ("long", "integer", "short", "byte")
+
+
+def _refuse_inexact_int_keys(col: pd.Series, int_key: bool, what: str) -> None:
+    """An integral key column with nulls reaches pandas as float64,
+    exact only below 2^53: past that distinct keys would merge into one
+    float, so they are refused rather than merged."""
+    if int_key and col.dtype.kind == "f" and col.abs().max() >= 2.0 ** 53:
+        raise ValueError(
+            f"{what}: integer key column holds nulls and |key| >= 2^53; "
+            "float64 conversion cannot represent these keys exactly")
+
+
+def _chain_keys(schema: StructType, key: str):
+    """-> ``keys(col)``: a chunk's key column as the list a chain
+    hashes. Every null is the one key ``None``, as Spark's ``groupBy``
+    groups them (a NaN per null would be a new key each time); integral
+    keys stay ints (:func:`_refuse_inexact_int_keys`)."""
+    int_key = schema[key].dataType.typeName() in _INT_TYPES
+
+    def keys(col: pd.Series) -> list:
+        null = col.isna().to_numpy()
+        if not null.any():
+            return col.to_numpy().tolist()
+        _refuse_inexact_int_keys(col, int_key, "chain replay")
+        out = (col.fillna(0).astype(np.int64) if int_key else col).to_numpy().tolist()
+        for i in np.flatnonzero(null).tolist():
+            out[i] = None
+        return out
+
+    return keys
+
+
 def _fire_rows(rows, fired, counts, at_ms, seq0) -> pd.DataFrame:
-    """The fired rows with ``batch_seq`` and ``fired_at_ms``: fire
-    ``j`` (``batch_seq`` ``seq0 + j``) emitted the next ``counts[j]``
-    refs of ``fired``."""
+    """The fired rows with ``batch_seq`` and ``fired_at_ms``: flush
+    ``j`` emitted the next ``counts[j]`` refs of ``fired``; a flush of
+    no rows (a drain) takes no ``batch_seq``."""
+    counts = np.asarray(counts, dtype=np.int64)
     out = rows(fired)
-    out[BATCH_SEQ] = np.repeat(
-        np.arange(seq0, seq0 + len(counts), dtype=np.int64), counts)
+    out[BATCH_SEQ] = np.repeat(seq0 - 1 + np.cumsum(counts > 0), counts)
     out[FIRED_AT] = np.repeat(np.asarray(at_ms, dtype=np.int64), counts)
     return out
 
 
 class _CarryScan:
-    """The rows a global replay still holds across Arrow chunks. A
-    chain refers to rows by int refs into ``frame``: the carried rows
-    (``0..c-1``) followed by the current chunk (``c..``). After each
-    chunk :meth:`keep` slices only the rows the chain still holds (the
-    forming batch / FIFO buffer — bounded by the window length) into
-    the next carry, once, vectorized, and renumbers the chain's refs.
-    Memory is O(window length + one Arrow batch) at any input size,
-    and the upstream JVM external sort spills — so there is NO
-    single-task row ceiling on the streamed replays."""
+    """The rows a replay still holds across Arrow chunks, referred to by
+    int refs into ``frame``: the carried rows (``0..c-1``), then the
+    current chunk (``c..``). After each chunk :meth:`keep` slices only
+    the chain's held rows and last fire (bounded by the window length)
+    into the next carry, vectorized, and renumbers the chain's refs.
+    Memory is O(window length + one Arrow batch) at any input size, and
+    the upstream JVM external sort spills — so there is NO single-task
+    row ceiling on the streamed replays."""
 
     def __init__(self, cols):
         self.cols = cols
@@ -343,27 +429,27 @@ class _CarryScan:
 
     def keep(self, chain: _Chain) -> None:
         held = chain.held
-        self.frame = self.frame.take(list(held.values()))
+        self.frame = self.frame.take([*held.values(), *chain.last])
         chain.held = dict(zip(held, range(len(held))))
+        chain.last = list(range(len(held), len(self.frame)))
 
 
 def _sorted_stream_replay(df, key, ts, tiebreak, out_schema, cols, chain,
                           shape, final=None):
     """Globally ordered replay WITHOUT the in-memory concat ceiling:
-    ``repartition(1)`` keeps the upstream scan/projection parallel,
-    the JVM sorts the single partition (UnsafeExternalSorter — spills
-    to disk at any size), and one ``chain()`` consumes the Arrow
-    batches in global order, the rows it holds carried across them by
-    :class:`_CarryScan` over ``cols``. ``shape(chain, fed, rows,
-    chunk)`` turns one ``feed`` result into output rows (``rows(refs)``
-    takes ``cols`` of referenced rows); ``final(chain, rows)`` emits at
-    end of stream. Memory is bounded by the chain state plus one Arrow
-    batch — unbounded input streams through."""
+    ``repartition(1)`` keeps the upstream scan/projection parallel, the
+    JVM sorts the single partition (UnsafeExternalSorter — spills to
+    disk at any size), and one ``chain()`` consumes the Arrow batches in
+    global order, its rows carried by :class:`_CarryScan` over ``cols``.
+    ``shape(chain, fed, rows, chunk)`` turns one ``feed`` result into
+    output rows (``rows(refs)`` takes ``cols`` of referenced rows);
+    ``final(chain, rows)`` emits at end of stream."""
     prepared = (
         df.withColumn(_TS_MS, event_ms(df, ts))
         .repartition(1)
         .sortWithinPartitions(*_sort_cols(ts, tiebreak))
     )
+    keys = _chain_keys(df.schema, key)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry, st = _CarryScan(cols), chain()
@@ -371,8 +457,7 @@ def _sorted_stream_replay(df, key, ts, tiebreak, out_schema, cols, chain,
             if pdf.empty:
                 continue
             base = carry.begin(pdf)
-            fed = st.feed(pdf[key].to_numpy().tolist(),
-                          pdf[_TS_MS].to_numpy().tolist(), base)
+            fed = st.feed(keys(pdf[key]), pdf[_TS_MS].to_numpy().tolist(), base)
             out = shape(st, fed, carry.rows, pdf)
             carry.keep(st)
             if len(out):
@@ -395,12 +480,12 @@ def _partitioned_replay(df, partition_attr, key, ts, tiebreak, out_schema,
     shape is bounded by the LARGEST partition, not the corpus."""
     sort_cols = _sort_cols(ts, tiebreak)
     prepared = df.withColumn(_TS_MS, event_ms(df, ts))
+    keys = _chain_keys(df.schema, key)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
         st = chain()
-        fed = st.feed(pdf[key].to_numpy().tolist(),
-                      pdf[_TS_MS].to_numpy().tolist(), 0)
+        fed = st.feed(keys(pdf[key]), pdf[_TS_MS].to_numpy().tolist(), 0)
 
         def rows(refs):
             return pdf.take(refs)[cols]
@@ -422,16 +507,20 @@ def _replay(df, partition_attr, *args, **kwargs):
     return _sorted_stream_replay(df, *args, **kwargs)
 
 
-def _check_chain_args(df, key, ts, window_length, keep="last",
-                      partition_attr=None):
+def _check_chain_args(df, key, ts, window_length=None, keep="last",
+                      partition_attr=None, start_time_ms=None):
+    """Validate a chain operator's or twin's arguments. -> the window
+    length, or None when the window has none."""
     if partition_attr:
         require_column(df, partition_attr, "partition attribute")
     require_column(df, key, "unique.key")
     require_column(df, ts, "ts")
-    n = require_pos_int(window_length, "window.length")
+    require_start_time(start_time_ms)
     if keep not in ("last", "first"):
         raise ValueError(f"keep must be 'last' or 'first', got {keep!r}")
-    return n
+    if window_length is None:
+        return None
+    return require_pos_int(window_length, "window.length")
 
 
 def length_batch(
@@ -657,7 +746,8 @@ def time_length_batch(
     the reference allocates per partition key).
     """
     n = _check_chain_args(df, key, ts, window_length,
-                          partition_attr=partition_attr)
+                          partition_attr=partition_attr,
+                          start_time_ms=start_time_ms)
     t_ms = parse_time_ms(window_time, "window.time")
     out_schema = StructType(
         list(df.schema.fields)
@@ -711,10 +801,9 @@ def time_length_batch_distributed(
     sequence-numbering window over distinct intervals."""
     from pyspark.sql.window import Window
 
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
+    n = _check_chain_args(df, key, ts, window_length,
+                          start_time_ms=start_time_ms)
     t_ms = parse_time_ms(window_time, "window.time")
-    n = require_pos_int(window_length, "window.length")
     out_cols = list(df.columns)
 
     ms = event_ms(df, ts)

@@ -38,6 +38,7 @@ from siddhi_execution_unique_spark.operators.validation import (
     parse_time_ms,
     require_column,
     require_keys,
+    require_start_time,
 )
 from siddhi_execution_unique_spark.sources import naive_as_utc
 
@@ -114,6 +115,7 @@ def time_batch(
     keys = require_keys(keys)
     require_column(df, ts, "ts")
     window_ms = parse_time_ms(window_time, "window.time")
+    require_start_time(start_time_ms)
     if keep not in ("last", "first"):
         raise ValueError(f"keep must be 'last' or 'first', got {keep!r}")
     return _batched_retain(df, keys, ts, window_ms, start_time_ms % window_ms, tiebreak, keep)
@@ -195,6 +197,7 @@ def external_time_batch(
         require_column(df, partition_attr, "partition attribute")
     require_column(df, timestamp, "time.stamp")
     window_ms = parse_time_ms(window_time, "window.time")
+    require_start_time(start_time_ms)
 
     if start_time_ms is None:
         df = _instance_anchor(df, timestamp, partition_attr)

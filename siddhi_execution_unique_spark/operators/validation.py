@@ -10,6 +10,7 @@ accept the same sugar as strings plus plain ints.
 
 from __future__ import annotations
 
+import numbers
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -70,6 +71,15 @@ def require_pos_int(value: int, param: str = "window.length") -> int:
         raise ValueError(f"{param} must be a constant int, got {type(value).__name__}")
     if value <= 0:
         raise ValueError(f"{param} must be > 0, got {value}")
+    return value
+
+
+def require_start_time(value, param: str = "start.time"):
+    """``start.time`` is an optional constant int of epoch millis; time
+    sugar such as ``'1 sec'`` is a duration, not an instant."""
+    if value is not None and (
+            isinstance(value, bool) or not isinstance(value, numbers.Integral)):
+        raise ValueError(f"{param} must be an int constant (epoch ms), got {value!r}")
     return value
 
 

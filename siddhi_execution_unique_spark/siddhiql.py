@@ -467,15 +467,17 @@ def _dual_channel(
 _PARTITION_COMPOSITE = frozenset({"ever", "first", "timeBatch", "firstTimeBatch"})
 
 
-def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> DataFrame:
-    """Lower one window clause onto the operators. Inside `partition
-    with (attr of Stream)` (``q["partition"]``) every attribute value
-    runs its own window instance (Siddhi partitioned execution). The
-    arguments parse and validate the same either way; the instance
-    scoping is the operators' ``partition_attr=``, except where the
-    lowering itself depends on it: the per-key / absolute-grid windows
-    take the attribute as a leading key, deduplicate a staged
-    composite key, and unique:time a per-instance event-time edge."""
+def _window_args(q: dict, df: DataFrame) -> tuple[list, dict]:
+    """The argument binder of both window builders (batch and
+    streaming), so a window clause validates the same either way: the
+    partition attribute must be a column of the stream;
+    externalTimeBatch takes (key, timestamp, window.time [, start.time
+    [, time.out [, replace.time.stamp.with.batch.end.time]]]); any
+    other window's ``_SPECS`` constants come last, consumed from the
+    END, and all are required but timeBatch's start.time (a short list
+    is the reference's invalid-parameter-count
+    SiddhiAppCreationException). -> (the key / attribute arguments,
+    the constants by operator parameter name)."""
     p = q.get("partition")
     if p is not None and p not in df.columns:
         raise SiddhiQLError(
@@ -483,9 +485,6 @@ def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> Data
             f"({df.columns})"
         )
     window, args = q["window"], list(q["args"])
-    channel = q["channel"]
-    if channel == "all" and window in _NEVER_EXPIRES:
-        channel = "current"
     if window == "externalTimeBatch":
         if len(args) < 3 or len(args) > 6:
             raise SiddhiQLError(
@@ -493,10 +492,7 @@ def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> Data
                 " [, start.time [, time.out [, replace.time.stamp.with."
                 "batch.end.time]]])"
             )
-        key, ts_attr, wtime = args[0], args[1], _const(args[2])
-        # start.time fixes an absolute grid shared by every instance;
-        # without it each instance anchors at its own first event
-        kwargs: dict = {"tiebreak": tiebreak, "partition_attr": p}
+        kwargs: dict = {"window_time": _const(args[2])}
         if len(args) >= 4:
             if not _INT_RE.match(args[3]):
                 raise SiddhiQLError(
@@ -504,22 +500,63 @@ def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> Data
                     f"got {args[3]!r}"
                 )
             kwargs["start_time_ms"] = int(args[3])
-        # args[4] (time.out) is a wall-clock idle flush: batch replay
-        # has no idle clock (-1 = disabled); the streaming twin honors it
-        if len(args) >= 5 and not (_INT_RE.match(args[4]) or _TIME_RE.match(args[4])):
-            raise SiddhiQLError(
-                f"externalTimeBatch time.out must be an int/time constant, "
-                f"got {args[4]!r}"
-            )
+        if len(args) >= 5:
+            if not (_INT_RE.match(args[4]) or _TIME_RE.match(args[4])):
+                raise SiddhiQLError(
+                    f"externalTimeBatch time.out must be an int/time constant, "
+                    f"got {args[4]!r}"
+                )
+            kwargs["idle_timeout"] = _const(args[4])
         if len(args) == 6:
             if not _BOOL_RE.match(args[5]):
                 raise SiddhiQLError(
                     "externalTimeBatch replace.time.stamp.with.batch.end.time "
                     f"must be true/false, got {args[5]!r}"
                 )
-            kwargs["replace_timestamp_with_batch_end"] = (
-                args[5].lower() == "true"
-            )
+            kwargs["replace_timestamp_with_batch_end"] = args[5].lower() == "true"
+        return args[:2], kwargs
+    trailing = _SPECS[window][1]
+    consts: list = []
+    while args and _is_const(args[-1]) and len(consts) < len(trailing):
+        consts.insert(0, _const(args.pop()))
+    if any(_is_const(a) for a in args):
+        raise SiddhiQLError(
+            f"unique:{window}: constant parameters must come last, got {q['args']}"
+        )
+    if len(consts) < len([t for t in trailing if t != "start_time_ms"]):
+        raise SiddhiQLError(
+            f"unique:{window} needs ({', '.join(['key'] + trailing)})"
+        )
+    if not args:
+        raise SiddhiQLError(f"unique:{window} needs at least a unique key attribute")
+    return args, dict(zip(trailing, consts))
+
+
+def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> DataFrame:
+    """Lower one window clause onto the operators. Inside `partition
+    with (attr of Stream)` (``q["partition"]``) every attribute value
+    runs its own window instance (Siddhi partitioned execution). The
+    arguments parse and validate the same either way
+    (:func:`_window_args`); the instance scoping is the operators'
+    ``partition_attr=``, except where the lowering itself depends on
+    it: the per-key / absolute-grid windows take the attribute as a
+    leading key, deduplicate a staged composite key, and unique:time a
+    per-instance event-time edge."""
+    p = q.get("partition")
+    args, kwargs = _window_args(q, df)
+    window = q["window"]
+    channel = q["channel"]
+    if channel == "all" and window in _NEVER_EXPIRES:
+        channel = "current"
+    if window == "externalTimeBatch":
+        key, ts_attr = args
+        wtime = kwargs.pop("window_time")
+        # time.out is a wall-clock idle flush: batch replay has no idle
+        # clock; the streaming twin honors it. start.time fixes an
+        # absolute grid shared by every instance; without it each
+        # instance anchors at its own first event
+        kwargs.pop("idle_timeout", None)
+        kwargs.update(tiebreak=tiebreak, partition_attr=p)
         # the expired derivation has no ts-rewrite knob (the reference
         # rewrites expired timestamps to the flush time regardless —
         # our expired_at_ms column carries that)
@@ -545,23 +582,7 @@ def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> Data
                 )
             return ops.external_time_batch_all(df, key, ts_attr, wtime, **exp_kwargs)
         return ops.external_time_batch(df, key, ts_attr, wtime, **kwargs)
-    fn, trailing, expired_fn = _SPECS[window]
-    consts: list = []
-    while trailing and args and _is_const(args[-1]) and len(consts) < len(trailing):
-        consts.insert(0, _const(args.pop()))
-    if any(_is_const(a) for a in args):
-        raise SiddhiQLError(
-            f"unique:{window}: constant parameters must come last, got {q['args']}"
-        )
-    # every trailing constant is required except timeBatch's optional
-    # start.time — a short list (e.g. timeLengthBatch with only one
-    # constant) is the reference's invalid-parameter-count
-    # SiddhiAppCreationException
-    required = len(trailing or []) - (1 if window == "timeBatch" else 0)
-    if len(consts) < required:
-        raise SiddhiQLError(
-            f"unique:{window} needs ({', '.join(['key'] + (trailing or []))})"
-        )
+    fn, _, expired_fn = _SPECS[window]
     # expression keys (validated in _bind_stream; ever/first only):
     # lower to Column expressions, which ops.* stage and drop
     has_expr_keys = any(
@@ -581,9 +602,6 @@ def _build_window(q: dict, df: DataFrame, ts: str, tiebreak: str | None) -> Data
                 "expired channel or the function API"
             )
         args = [a if _IDENT_RE.fullmatch(a) else F.expr(a) for a in args]
-    if not args:
-        raise SiddhiQLError(f"unique:{window} needs at least a unique key attribute")
-    kwargs = dict(zip(trailing or [], consts))
     part: dict = {}
     if p is not None:
         if window == "deduplicate" and channel == "current":
@@ -2364,7 +2382,7 @@ def run_app(
     return out
 
 
-# streaming dispatch: same positional treatment, onto the Structured
+# streaming dispatch: the same argument binder, onto the Structured
 # Streaming twins (no tiebreak — streams order by arrival/event time)
 def _streaming_specs():
     from siddhi_execution_unique_spark import streaming as stw
@@ -2376,128 +2394,88 @@ def _streaming_specs():
         return wrapped
 
     return {
-        "ever": (stw.ever_stream, []),
-        "first": (stw.first_stream, []),
-        "length": (stw.length_window_stream, ["window_length"]),
-        "lengthBatch": (stw.length_batch_stream, ["window_length"]),
-        "firstLengthBatch": (keep_first(stw.length_batch_stream), ["window_length"]),
-        "time": (stw.time_window_stream, ["window_time"]),
-        "timeBatch": (stw.tumbling_batch_stream, ["window_time"]),
-        "firstTimeBatch": (keep_first(stw.tumbling_batch_stream), ["window_time"]),
-        "timeLengthBatch": (
-            stw.time_length_batch_stream, ["window_time", "window_length"]
-        ),
-        "deduplicate": (stw.deduplicate_exact_stream, ["time_interval"]),
-        "externalTimeBatch": (stw.external_time_batch_stream, ["window_time"]),
+        "ever": stw.ever_stream,
+        "first": stw.first_stream,
+        "length": stw.length_window_stream,
+        "lengthBatch": stw.length_batch_stream,
+        "firstLengthBatch": keep_first(stw.length_batch_stream),
+        "time": stw.time_window_stream,
+        "timeBatch": stw.tumbling_batch_stream,
+        "firstTimeBatch": keep_first(stw.tumbling_batch_stream),
+        "timeLengthBatch": stw.time_length_batch_stream,
+        "deduplicate": stw.deduplicate_exact_stream,
+        "externalTimeBatch": stw.external_time_batch_stream,
     }
 
 
 def _build_streaming_res(q: dict, df: DataFrame, ts: str):
     """Build one windowed-stream clause's Structured Streaming twin
     (shared by :func:`run_app_streaming` and the foreachBatch
-    aggregate lowering). Returns (possibly-rewritten q, twin
-    DataFrame, drop_staged) where drop_staged lists the staged
-    helper columns (composite dedup key, expression keys) to drop
-    from emitted rows."""
-    specs = _streaming_specs()
+    aggregate lowering), its arguments bound by :func:`_window_args`
+    as in the batch builder. Returns (twin DataFrame, keys,
+    drop_staged): keys are the twin's key columns as bound (a
+    partitioned per-key window's leading partition attribute, staged
+    expression-key columns), drop_staged the staged helper columns
+    (composite dedup key, expression keys) to drop from emitted rows.
+    Operator ValueErrors surface as SiddhiQLError."""
+    args, kwargs = _window_args(q, df)
+    window, p = q["window"], q.get("partition")
     drop_staged: list[str] = []
-    part_attr = None
-    if q.get("partition"):
-        p = q["partition"]
-        if p not in df.columns:
-            raise SiddhiQLError(
-                f"partition attribute {p!r} is not in stream "
-                f"{q['stream']!r} ({df.columns})"
-            )
-        if q["window"] in ("ever", "first", "timeBatch", "firstTimeBatch"):
-            # composite key = independent window instance per
-            # partition value (same windows as the batch path)
-            q = {**q, "args": [p] + list(q["args"])}
-        elif q["window"] == "deduplicate":
-            key = q["args"][0]
-            df = df.withColumn(
-                "_pkey",
-                F.concat_ws(
-                    "\x1f", F.col(p).cast("string"), F.col(key).cast("string")
-                ),
-            )
-            q = {**q, "args": ["_pkey"] + list(q["args"][1:])}
+    if p is not None:
+        if window in _PARTITION_COMPOSITE:
+            # composite key = independent window instance per partition
+            # value (same windows as the batch path)
+            args = [p] + args
+        elif window == "deduplicate":
+            df = df.withColumn("_pkey", F.concat_ws(
+                "\x1f", F.col(p).cast("string"), F.col(args[0]).cast("string")))
+            args = ["_pkey"] + args[1:]
             drop_staged.append("_pkey")
-        elif q["window"] in ("lengthBatch", "firstLengthBatch",
-                             "timeLengthBatch", "externalTimeBatch"):
-            # the stateful fire-chain twins shard their state store by
-            # the partition attribute: one state group per instance —
-            # per-instance anchor/chain AND the distributed execution
-            # shape for the otherwise single-group twin
-            part_attr = p
+        elif window in ("lengthBatch", "firstLengthBatch", "timeLengthBatch",
+                        "externalTimeBatch"):
+            # the chain twins shard their state by the partition
+            # attribute: one state group per instance — per-instance
+            # anchor/chain AND the distributed shape for the otherwise
+            # single-group twin
+            kwargs["partition_attr"] = p
         else:
             raise SiddhiQLError(
-                f"partitioned streaming unique:{q['window']} is not "
+                f"partitioned streaming unique:{window} is not "
                 "wired; composite keys cover ever/first/timeBatch/"
                 "firstTimeBatch/deduplicate; sharded state covers "
                 "lengthBatch/firstLengthBatch/timeLengthBatch/"
                 "externalTimeBatch"
             )
-    window, args = q["window"], list(q["args"])
     if window in _EXPR_KEY_WINDOWS:
         # expression keys (validated in _bind_stream): stage each as a
         # computed column so the stateful twin keys on a real column,
         # dropped from the emitted rows
-        new_args = []
         for i, a in enumerate(args):
-            if _is_const(a) or _IDENT_RE.fullmatch(a):
-                new_args.append(a)
-            else:
-                c = f"_ekey{i}"
-                df = df.withColumn(c, F.expr(a))
-                new_args.append(c)
-                drop_staged.append(c)
-        args = new_args
-    fn, trailing = specs[window]
+            if not _IDENT_RE.fullmatch(a):
+                args[i] = f"_ekey{i}"
+                df = df.withColumn(args[i], F.expr(a))
+                drop_staged.append(args[i])
+    fn = _streaming_specs()[window]
     if window == "externalTimeBatch":
-        # (key, timestamp_attr, T [, start.time [, time.out [, replace
-        # .time.stamp...]]]): the twin reads the attribute directly as
-        # its event-time column
-        if len(args) < 3 or len(args) > 6:
-            raise SiddhiQLError(
-                "unique:externalTimeBatch needs (key, timestamp, "
-                "window.time [, start.time [, time.out [, replace...]]])"
-            )
-        kw: dict = {"ts": args[1]}
-        if len(args) >= 4:
-            kw["start_time_ms"] = int(args[3])
-        if len(args) >= 5 and not (
-            _INT_RE.match(args[4]) and int(args[4]) < 0
-        ):  # -1 disables the idle flush
-            kw["idle_timeout"] = _const(args[4])
-        if len(args) == 6 and args[5].lower() != "false":
+        # the twin reads the timestamp attribute as its event-time column
+        key, ts_attr = args
+        if kwargs.pop("replace_timestamp_with_batch_end", False):
             raise SiddhiQLError(
                 "replace.time.stamp.with.batch.end.time is not wired for "
                 "the STREAMING twin; use the batch run_app"
             )
-        if part_attr is not None:
-            kw["partition_attr"] = part_attr
-        res = fn(df, args[0], _const(args[2]), **kw)
-    else:
-        consts: list = []
-        while trailing and args and _is_const(args[-1]) and len(consts) < len(trailing):
-            consts.insert(0, _const(args.pop()))
-        if trailing and not consts:
-            raise SiddhiQLError(
-                f"unique:{window} needs ({', '.join(['key'] + trailing)})"
-            )
-        keys = args if len(args) > 1 else (args[0] if args else None)
-        if keys is None:
-            raise SiddhiQLError(
-                f"unique:{window} needs at least a unique key attribute"
-            )
-        kwargs = dict(zip(trailing or [], consts))
-        if window != "first":
-            kwargs["ts"] = ts
-        if part_attr is not None:
-            kwargs["partition_attr"] = part_attr
-        res = fn(df, keys, **kwargs)
-    return q, res, drop_staged
+        idle = kwargs.pop("idle_timeout", None)
+        kwargs["idle_timeout"] = None if isinstance(idle, int) and idle < 0 else idle
+        return _app_error_boundary(fn, df, key, ts=ts_attr, **kwargs), [key], drop_staged
+    if "start_time_ms" in kwargs:
+        raise SiddhiQLError(
+            "start.time is not wired for the STREAMING unique:timeBatch "
+            "twin; use the batch run_app"
+        )
+    if window != "first":
+        kwargs["ts"] = ts
+    res = _app_error_boundary(fn, df, args if len(args) > 1 else args[0], **kwargs)
+    return res, args, drop_staged
 
 
 def run_app_streaming(
@@ -2522,7 +2500,7 @@ def run_app_streaming(
                 "multi-stage streaming topology — stage through a sink"
             )
         df = _bind_stream(q, streams)
-        q, res, drop_staged = _build_streaming_res(q, df, ts)
+        res, _keys, drop_staged = _build_streaming_res(q, df, ts)
         window = q["window"]
         if q["channel"] == "expired":
             if "channel" not in res.columns:
@@ -2618,7 +2596,7 @@ def run_app_streaming_aggregates(
                 )
             df = _bind_stream(q, streams)
             spark = df.sparkSession
-            q, res, drop_staged = _build_streaming_res(q, df, ts)
+            res, keys, drop_staged = _build_streaming_res(q, df, ts)
             staging = os.path.join(work, f"staging_{qi}_{q['out']}")
             ckpt = os.path.join(work, f"ckpt_{qi}_{q['out']}")
             acc = res.withColumn("_bid", F.lit(None).cast("long"))
@@ -2644,8 +2622,8 @@ def run_app_streaming_aggregates(
             if q["window"] == "ever":
                 # the update stream re-emits a key on every
                 # replacement; the final window contents are the last
-                # epoch's row per key (one row per key within an epoch)
-                keys = [a for a in q["args"] if not _is_const(a)]
+                # epoch's row per key (one row per key within an epoch);
+                # partitioned, the key is (partition attribute, key)
                 w = SqlWindow.partitionBy(*keys).orderBy(F.col("_bid").desc())
                 acc = (
                     acc.withColumn("_rn", F.row_number().over(w))
@@ -2756,7 +2734,7 @@ def _stage_stream_contents(side: dict, df: DataFrame, ts: str, work_dir: str | N
             f"unique:{window}'s twin does not expose final contents as a "
             "single staged table"
         )
-    _, res, _drop = _build_streaming_res({**side, "channel": "current"}, df, ts)
+    res, _keys, _drop = _build_streaming_res({**side, "channel": "current"}, df, ts)
     if _drop:
         res = res.drop(*_drop)
     if "channel" in res.columns:

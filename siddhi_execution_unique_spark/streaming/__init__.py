@@ -18,8 +18,10 @@ the exact variant runs through ``applyInPandasWithState``.
 
 from __future__ import annotations
 
+import json
 from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -35,12 +37,24 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from siddhi_execution_unique_spark.operators.length import _fifo_channels
+from siddhi_execution_unique_spark.operators.replay import (
+    BATCH_SEQ,
+    _CarryScan,
+    _chain_keys,
+    _check_chain_args,
+    _ExternalTimeBatch,
+    _FormingSet,
+    _INT_TYPES,
+    _refuse_inexact_int_keys,
+    _TimeLengthBatch,
+    _UniqueFifo,
+)
 from siddhi_execution_unique_spark.operators.validation import (
     key_cols,
     parse_time_ms,
     require_column,
     require_keys,
-    require_pos_int,
     stage_keys,
 )
 
@@ -191,19 +205,12 @@ def tumbling_batch_stream(
 
 
 def _drain_sorted(pdfs, *sort_cols) -> pd.DataFrame | None:
-    """Drain a state group's Arrow-chunk iterator and sort ONCE.
-
-    ``applyInPandasWithState`` hands a group's micro-batch rows over
-    as multiple frames whenever they straddle an Arrow batch boundary
-    (default 10k rows per transfer batch), and the chunks' time ranges
-    interleave — rows within a group carry no order after the keyed
-    shuffle. Any ORDER-SENSITIVE walk must therefore sort the whole
-    group, not each chunk: per-chunk sorting passed every small-SF
-    gate and broke only at sf1, where ~2,700 of 915,720 dedup-chain
-    decisions flipped at the straddle points. Only the keyed twins use
-    this (memory = one key's rows per micro-batch); the single-group
-    chain twins (lengthBatch family) keep streaming chunks and instead
-    document their partition-ordered feed contract."""
+    """Drain a keyed state group's Arrow chunks and sort ONCE: a group's
+    micro-batch rows arrive as several frames whose time ranges
+    interleave after the keyed shuffle, so an order-sensitive walk sorts
+    the whole group (sorting per chunk flipped ~2,700 of 915,720
+    dedup-chain decisions at sf1). Memory is one key's rows per
+    micro-batch; the chain twins stream chunks (:func:`_chain_stream`)."""
     frames = [p for p in pdfs if not p.empty]
     if not frames:
         return None
@@ -214,10 +221,7 @@ def _drain_sorted(pdfs, *sort_cols) -> pd.DataFrame | None:
 
 
 def _ms_series(pdf: pd.DataFrame, ts: str, is_timestamp: bool):
-    if is_timestamp:
-        # normalize to ns explicitly: pyarrow>=13 may hand Arrow frames
-        # over as datetime64[us], where a bare astype('int64') would
-        # yield micros and silently shrink every interval 1000x
+    if is_timestamp:  # via ns: pyarrow>=13 may hand over datetime64[us]
         return (pdf[ts].astype("datetime64[ns]").astype("int64") // 1_000_000).to_numpy()
     return pdf[ts].to_numpy()
 
@@ -266,8 +270,6 @@ def time_window_stream(
     State is one (ts, payload) pair per key in the state store —
     hash-partitioned by key, scales to any key cardinality. Payload
     columns must be JSON-scalar (int/float/str/bool/null)."""
-    import json
-
     require_column(df, key, "unique.key")
     require_column(df, ts, "ts")
     interval_ms = parse_time_ms(window_time, "window.time")
@@ -344,6 +346,137 @@ def ever_stream_dual(
     )
 
 
+def _load_rows(text: str) -> list:
+    """A saved row list. Also reads the layouts of earlier releases
+    (a key -> row object, or ``[key, row]`` pairs), so their
+    checkpoints resume."""
+    rows = json.loads(text)
+    rows = list(rows.values()) if isinstance(rows, dict) else rows
+    return [r[1] if isinstance(r, list) else r for r in rows]
+
+
+def _chain_stream(df, key, ts, partition_attr, chain, shape, fields, saved,
+                  timeout=GroupStateTimeout.NoTimeout, tick=None,
+                  arm=None, watermark_delay=None):
+    """The one ``applyInPandasWithState`` driver of the chain twins: it
+    runs :mod:`~siddhi_execution_unique_spark.operators.replay`'s chain
+    classes as the batch replays do, one state group per
+    ``partition_attr`` value (each instance its own chain, as the
+    reference's per-instance WindowState) or one constant group (the
+    reference's own single-JVM semantics).
+
+    FEED-ORDER CONTRACT: the group's Arrow chunks stream through the
+    chain without materializing the micro-batch (O(chunk) memory — the
+    whole batch funnels into one group), each chunk sorted by ``ts``
+    only. Chunks of a single-partition input arrive in row order, so a
+    feed that is ts-sorted within each input partition replays the
+    reference's arrival order exactly (the certification entries and
+    the 1M-row soak feed this way); a multi-partition unsorted feed
+    gets arrival-order semantics over an unspecified interleaving —
+    same as the reference consuming an unordered transport. The keyed
+    twins instead drain-and-sort per key (:func:`_drain_sorted`).
+
+    ``shape(st, fed, rows, prev)`` turns a ``feed`` (or ``tick``) result
+    into rows with the ``fields`` columns, ``prev`` being the refs of
+    the chain's last fire before it; rows ride a ``_CarryScan`` with
+    ``ts`` as epoch millis. The state row is the chain's ``STATE``
+    scalars as longs (-1 for unset), then the ``saved`` JSON row lists:
+    the held rows and, if named, the last fire's. ``tick(st,
+    state)`` feeds a timeout; ``arm(st, state)`` sets the next timer.
+    ``watermark_delay`` sets an ``EventTimeTimeout`` twin's watermark
+    but drops no late row (Spark drops rows behind the last batch's
+    watermark before the state function, so a resumed run lost rows one
+    run keeps): it is set on ``ts`` + 100 years with the delay grown as
+    much, so timers are unchanged and late rows feed the chain."""
+    cols = list(df.columns)
+    is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
+    keys = _chain_keys(df.schema, key)
+    out_schema = StructType(df.schema.fields + fields)
+    scalars = chain().STATE
+    state_schema = StructType([StructField(f, LongType()) for _, f in scalars]
+                              + [StructField(c, StringType()) for c in saved])
+    if watermark_delay is not None:  # never carried: _CarryScan takes cols
+        df = (df.withColumn("_wm", F.col(ts) + F.expr("INTERVAL 36500 DAYS"))
+              .withWatermark("_wm", f"36500 days {watermark_delay}"))
+
+    def fn(key_tuple, pdfs, state: GroupState):
+        st, carry = chain(), _CarryScan(cols)
+        if state.exists:
+            vals = state.get
+            for (a, _), v in zip(scalars, vals):
+                setattr(st, a, None if v == -1 else v)
+            held, *last = [_load_rows(t) for t in vals[len(scalars):]]
+            carry.frame = pd.DataFrame.from_records(
+                held + [r for rs in last for r in rs], columns=cols)
+            st.held = dict(zip(keys(carry.frame[key].iloc[:len(held)]),
+                               range(len(held))))
+            st.last = list(range(len(held), len(carry.frame)))
+
+        def fed():  # -> (feed or tick result, the last fire before it)
+            for pdf in pdfs:
+                if pdf.empty:
+                    continue
+                pdf = pdf.sort_values(ts, kind="mergesort")
+                ms = _ms_series(pdf, ts, is_timestamp)
+                pdf[ts] = ms
+                prev, base = st.last, carry.begin(pdf)
+                yield st.feed(keys(pdf[key]), ms.tolist(), base), prev
+            if state.hasTimedOut:
+                prev = st.last
+                yield tick(st, state), prev
+
+        for res, prev in fed():
+            out = shape(st, res, carry.rows, prev)
+            carry.keep(st)
+            if is_timestamp:
+                out[ts] = pd.to_datetime(out[ts], unit="ms")
+            if len(out):
+                yield out
+        frame = pd.DataFrame(columns=cols) if carry.frame is None else carry.frame
+        n = len(st.held)
+        parts = (frame.iloc[:n], frame.iloc[n:])[:len(saved)]
+        state.update(
+            tuple(-1 if getattr(st, a) is None else int(getattr(st, a))
+                  for a, _ in scalars)
+            + tuple(json.dumps(p.to_dict("records")) for p in parts))
+        if arm is not None:
+            arm(st, state)
+
+    grouped = (df.groupBy(partition_attr) if partition_attr
+               else df.withColumn("_g", F.lit(1)).groupBy("_g"))
+    return grouped.applyInPandasWithState(fn, out_schema, state_schema, "append", timeout)
+
+
+def _fire_log(rows, prev, fired, counts, seq0, **extras) -> pd.DataFrame:
+    """The dual channel of a fire chain's flush log: flush ``j``
+    re-emits flush ``j-1``'s rows on ``expired`` (with their own
+    ``batch_seq`` and flush ``j``'s ``extras``), then its own rows on
+    ``current`` (UniqueLengthBatchWindowProcessor.java:171-191). Flush
+    ``-1`` is ``prev``, the chain's last fire before this result; a
+    flush of no rows only drains. Index arithmetic in numpy, no
+    per-row Python."""
+    counts = np.asarray(counts, dtype=np.int64)
+    k = len(counts)
+    sizes = np.r_[len(prev), counts]
+    refs = np.r_[np.asarray(prev, dtype=np.int64), np.asarray(fired, dtype=np.int64)]
+    blocks = np.repeat(np.arange(k + 1), 2)[1:-1]  # flush j: blocks j, j+1
+    lens = sizes[blocks]
+    starts = (np.cumsum(sizes) - sizes)[blocks]
+    idx = np.arange(lens.sum()) + np.repeat(starts - (np.cumsum(lens) - lens), lens)
+    out = rows(refs[idx])
+    seqs = seq0 - 1 + np.r_[0, np.cumsum(counts > 0)]
+    out[BATCH_SEQ] = np.repeat(seqs[blocks], lens)
+    flush = np.repeat(np.arange(k), 2)
+    for name, vals in extras.items():
+        out[name] = np.repeat(np.asarray(vals)[flush], lens)
+    out["channel"] = np.repeat(np.array(["expired", "current"] * k, dtype=object), lens)
+    return out
+
+
+_BATCH_SEQ_FIELD = StructField(BATCH_SEQ, LongType())
+_CHANNEL_FIELD = StructField("channel", StringType())
+
+
 def length_batch_stream(
     df: DataFrame,
     key: str,
@@ -362,108 +495,18 @@ def length_batch_stream(
     emits on ``current`` (:171-191).
 
     The distinct-key count is global, so this runs as a single state
-    group — the reference's own single-JVM semantics. It cannot
-    scale out by key; at scale use the per-window ``time_batch``
-    family or the batch-mode replay operator.
+    group (:func:`_chain_stream`); it cannot scale out by key. At
+    scale use the per-window ``time_batch`` family, the batch-mode
+    replay operator, or ``partition_attr``."""
+    n = _check_chain_args(df, key, ts, window_length, keep, partition_attr)
 
-    FEED-ORDER CONTRACT: the chain walk streams the group's Arrow
-    chunks without materializing the micro-batch (O(chunk) memory —
-    the whole batch funnels into this one group), sorting each chunk
-    only. Chunks of a single-partition input arrive in row order, so
-    a feed that is ts-sorted within each input partition replays the
-    reference's arrival order exactly (the certification entries and
-    the 1M-row soak feed this way); a multi-partition unsorted feed
-    gets arrival-order semantics over an unspecified interleaving —
-    same as the reference consuming an unordered transport. The keyed
-    twins instead drain-and-sort per key (:func:`_drain_sorted`),
-    where memory is bounded by one key's rows."""
-    import json
+    def shape(st, fed, rows, prev):
+        fired, at, seq0 = fed
+        return _fire_log(rows, prev, fired, [n] * len(at), seq0)
 
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
-    if keep not in ("last", "first"):
-        raise ValueError(f"keep must be 'last' or 'first', got {keep!r}")
-    n = require_pos_int(window_length, "window.length")
-    is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
-    columns = [f.name for f in df.schema.fields]
-    out_schema = StructType(
-        df.schema.fields
-        + [StructField("batch_seq", LongType()), StructField("channel", StringType())]
-    )
-    state_schema = StructType(
-        [
-            StructField("batch_seq", LongType()),
-            StructField("forming_json", StringType()),
-            StructField("prev_json", StringType()),
-        ]
-    )
-
-    def fn(key_tuple, pdfs, state: GroupState):
-        if state.exists:
-            batch_seq, forming_json, prev_json = state.get
-            forming = json.loads(forming_json)
-            prev = json.loads(prev_json)
-        else:
-            batch_seq, forming, prev = 0, {}, []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            out, batch_seq, forming, prev = _length_batch_walk(
-                pdf, columns, key, ts, is_timestamp, keep, n,
-                batch_seq, forming, prev,
-            )
-            if out is not None:
-                yield out
-        state.update((batch_seq, json.dumps(forming), json.dumps(prev)))
-
-    # `partition with` shards the fire chain: one state group PER
-    # partition value (each instance its own forming batch, batch_seq,
-    # and prev — the per-instance WindowState the reference allocates),
-    # which also distributes the otherwise single-group chain
-    grouped = (
-        df.groupBy(partition_attr)
-        if partition_attr
-        else df.withColumn("_g", F.lit(1)).groupBy("_g")
-    )
-    return grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def _length_batch_walk(pdf, columns, key, ts, is_timestamp, keep, n,
-                       batch_seq, forming, prev):
-    """One micro-batch chunk of the lengthBatch fire chain of
-    :func:`length_batch_stream`. Returns ``(out_frame_or_None,
-    batch_seq, forming, prev)`` — ``forming``/``prev`` are rebound on
-    fire, so callers must take the returned values."""
-    pdf = pdf.sort_values(ts, kind="mergesort")
-    ms = _ms_series(pdf, ts, is_timestamp)
-    recs = []
-    for row in _row_dicts(pdf, columns, ts, ms):
-        k = str(row[key])
-        if k in forming:
-            if keep == "last":
-                forming[k] = row
-        else:
-            forming[k] = row
-        if len(forming) == n:
-            for old in prev:
-                recs.append(
-                    tuple(old[c] for c in columns) + (batch_seq - 1, "expired")
-                )
-            fired = list(forming.values())
-            for ev in fired:
-                recs.append(tuple(ev[c] for c in columns) + (batch_seq, "current"))
-            prev, forming = fired, {}
-            batch_seq += 1
-    out = None
-    if recs:
-        out = pd.DataFrame.from_records(
-            recs, columns=columns + ["batch_seq", "channel"]
-        )
-        if is_timestamp and len(out):
-            out[ts] = pd.to_datetime(out[ts], unit="ms")
-    return out, batch_seq, forming, prev
+    return _chain_stream(
+        df, key, ts, partition_attr, lambda: _FormingSet(n, keep), shape,
+        [_BATCH_SEQ_FIELD, _CHANNEL_FIELD], ["forming_json", "prev_json"])
 
 
 def length_window_stream(
@@ -485,48 +528,9 @@ def length_window_stream(
     reference's own single-JVM semantics. State is bounded at ``N``
     rows. Batch twin: ``operators.length.length_window_emissions``;
     distributable final-contents form: ``operators.length.length_window``."""
-    import json
-
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
-    n = require_pos_int(window_length, "window.length")
-    is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
-    columns = [f.name for f in df.schema.fields]
-    out_schema = StructType(df.schema.fields + [StructField("channel", StringType())])
-    # insertion-ordered buffer serialized as a [key, row] pair list
-    state_schema = StructType([StructField("buffer_json", StringType())])
-
-    def fn(key_tuple, pdfs, state: GroupState):
-        buffer: dict = (
-            dict(json.loads(state.get[0])) if state.exists else {}
-        )
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(ts, kind="mergesort")
-            ms = _ms_series(pdf, ts, is_timestamp)
-            recs = []
-            for row in _row_dicts(pdf, columns, ts, ms):
-                k = str(row[key])
-                if k in buffer:
-                    old = buffer.pop(k)
-                    recs.append(tuple(old[c] for c in columns) + ("expired",))
-                elif len(buffer) == n:
-                    old = buffer.pop(next(iter(buffer)))
-                    recs.append(tuple(old[c] for c in columns) + ("expired",))
-                buffer[k] = row
-                recs.append(tuple(row[c] for c in columns) + ("current",))
-            if recs:
-                yield _records_frame(recs, columns, ts, is_timestamp)
-        state.update((json.dumps(list(buffer.items())),))
-
-    return (
-        df.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    n = _check_chain_args(df, key, ts, window_length)
+    return _chain_stream(df, key, ts, None, lambda: _UniqueFifo(n),
+                         _fifo_channels, [_CHANNEL_FIELD], ["buffer_json"])
 
 
 def time_length_batch_stream(
@@ -541,8 +545,8 @@ def time_length_batch_stream(
 ) -> DataFrame:
     """Streaming ``unique:timeLengthBatch``: tumbling batch fired by
     ``T`` elapsed or ``N`` distinct keys, whichever first
-    (UniqueTimeLengthBatchWindowProcessor.java:110). Semantics mirror
-    the batch replay (operators/replay.py:time_length_batch):
+    (UniqueTimeLengthBatchWindowProcessor.java:110), the batch
+    replay's chain (operators/replay.py:time_length_batch):
 
     - length fire the moment the Nth distinct key arrives (:279-282);
       afterwards events are **discarded** until the next time boundary
@@ -550,161 +554,52 @@ def time_length_batch_stream(
     - time fire flushes the forming batch at ``anchor + k*T``
       (:304-336) — event-driven when a later event crosses the
       boundary, watermark-driven (``EventTimeTimeout``, the streaming
-      analog of ``scheduler.notifyAt``) when the stream idles;
+      analog of ``scheduler.notifyAt``) when the stream idles; a row
+      behind the watermark is kept, not dropped as late;
     - on each fire the previous batch re-emits on the ``expired``
       channel before the new batch emits on ``current``
       (UniqueTimeLengthBatchWindowTestCase.java:100-101 counts both);
       expired rows carry their own ``batch_seq`` and the *current*
-      fire's ``fired_at_ms``/``fire_reason`` (= when they expired).
+      fire's ``fired_at_ms``/``fire_reason`` (= when they expired). A
+      boundary with no forming rows still drains the previous batch.
 
-    Distinct-key count and boundary clock are global, so this runs as
-    a single state group — the reference's own single-JVM semantics;
-    at scale use the per-window ``tumbling_batch_stream`` family."""
-    import json
-
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
+    One state group (the count and clock are global), or one per
+    ``partition_attr`` value with its own anchor; at scale use the
+    per-window ``tumbling_batch_stream`` family."""
+    n = _check_chain_args(df, key, ts, window_length,
+                          partition_attr=partition_attr,
+                          start_time_ms=start_time_ms)
     t_ms = parse_time_ms(window_time, "window.time")
-    n = require_pos_int(window_length, "window.length")
-    is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
-    columns = [f.name for f in df.schema.fields]
-    out_schema = StructType(
-        df.schema.fields
-        + [
-            StructField("batch_seq", LongType()),
-            StructField("fired_at_ms", LongType()),
-            StructField("fire_reason", StringType()),
-            StructField("channel", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("batch_seq", LongType()),
-            StructField("next_emit", LongType()),
-            StructField("event_sent", LongType()),
-            StructField("seen_max", LongType()),
-            StructField("forming_json", StringType()),
-            StructField("prev_json", StringType()),
-        ]
-    )
 
-    def fn(key_tuple, pdfs, state: GroupState):
-        if state.exists:
-            (batch_seq, next_emit, event_sent, seen_max,
-             forming_json, prev_json) = state.get
-            forming = json.loads(forming_json)
-            prev = json.loads(prev_json)
-        else:
-            batch_seq, next_emit, event_sent, seen_max = 0, -1, 0, -1
-            forming, prev = {}, []
-        recs: list[tuple] = []
+    def shape(st, fed, rows, prev):
+        fired, counts, at_ms, reasons, seq0 = fed
+        return _fire_log(rows, prev, fired, counts, seq0,
+                         fired_at_ms=at_ms, fire_reason=reasons)
 
-        def fire(at_ms: int, reason: str) -> None:
-            # sendEvents drains eventsToBeExpired on EVERY flush, even
-            # when no current batch formed (the timer tick after an
-            # empty interval still flushes,
-            # UniqueTimeLengthBatchWindowProcessor.java:304-318) — so
-            # an empty-forming boundary is a drain-only flush
-            nonlocal batch_seq, prev, forming
-            if not forming and not prev:
-                return
-            for old in prev:
-                recs.append(
-                    tuple(old[c] for c in columns)
-                    + (batch_seq - 1, at_ms, reason, "expired")
-                )
-            prev = []
-            if forming:
-                fired = list(forming.values())
-                for ev in fired:
-                    recs.append(
-                        tuple(ev[c] for c in columns)
-                        + (batch_seq, at_ms, reason, "current")
-                    )
-                prev, forming = fired, {}
-                batch_seq += 1
+    def tick(st, state):
+        # the watermark is GLOBAL; a group's event-time clock is its OWN
+        # stream front (the per-instance convention every partitioned
+        # derivation uses), so a timer never crosses past it
+        return st.advance(min(state.getCurrentWatermarkMs(), st.front))
 
-        def cross_boundaries(up_to_ms: int) -> None:
-            """Advance past every boundary <= up_to_ms: a boundary
-            clears the post-length-fire skip flag, else time-fires."""
-            nonlocal next_emit, event_sent
-            while next_emit >= 0 and up_to_ms >= next_emit:
-                if event_sent:
-                    event_sent = 0
-                else:
-                    fire(next_emit, "time")
-                next_emit += t_ms
-
-        if state.hasTimedOut:
-            # the watermark is GLOBAL; this group's event-time clock is
-            # its OWN stream front (the per-instance convention every
-            # partitioned derivation uses), so timer-driven boundary
-            # crossing never advances past the group's last seen event
-            cross_boundaries(min(state.getCurrentWatermarkMs(), seen_max))
-        else:
-            for pdf in pdfs:
-                if pdf.empty:
-                    continue
-                pdf = pdf.sort_values(ts, kind="mergesort")
-                ms = _ms_series(pdf, ts, is_timestamp)
-                for row in _row_dicts(pdf, columns, ts, ms):
-                    ts_i = row[ts]
-                    seen_max = max(seen_max, int(ts_i))
-                    if next_emit < 0:  # anchor on the first event
-                        if start_time_ms is not None:
-                            next_emit = (
-                                start_time_ms
-                                + ((ts_i - start_time_ms) // t_ms + 1) * t_ms
-                            )
-                        else:
-                            next_emit = ts_i + t_ms
-                    cross_boundaries(ts_i)
-                    if event_sent:
-                        continue  # discarded until next boundary
-                    forming[str(row[key])] = row
-                    if len(forming) == n:
-                        fire(ts_i, "length")
-                        event_sent = 1
-
-        state.update(
-            (batch_seq, next_emit, event_sent, seen_max,
-             json.dumps(forming), json.dumps(prev))
-        )
-        if next_emit >= 0 and (forming or event_sent or prev) and seen_max >= next_emit:
-            # watermark clock drives the next boundary on an idle
-            # stream — prev counts too: an undrained expired batch
-            # still needs its boundary flush. But the group's clock is
-            # capped at its OWN stream front (cross_boundaries caps at
-            # seen_max), so when seen_max lags the boundary no timer
-            # can ever make progress — only a new event can, and that
-            # re-invokes this function anyway. Registering in that
-            # state would fire a no-op timeout every micro-batch on
-            # idle partitions.
+    def arm(st, state):
+        # the watermark drives the next boundary on an idle stream (an
+        # undrained last fire still needs its flush) — but only when
+        # the group's front has reached it: short of that only a new
+        # event can progress, and a timer would fire a no-op timeout
+        # every micro-batch on idle partitions
+        if (st.next_emit is not None and (st.held or st.skip or st.last)
+                and st.front >= st.next_emit):
             state.setTimeoutTimestamp(
-                max(next_emit, state.getCurrentWatermarkMs() + 1)
-            )
-        if recs:
-            out = pd.DataFrame.from_records(
-                recs, columns=columns + ["batch_seq", "fired_at_ms", "fire_reason", "channel"]
-            )
-            if is_timestamp and len(out):
-                out[ts] = pd.to_datetime(out[ts], unit="ms")
-            yield out
+                max(st.next_emit, state.getCurrentWatermarkMs() + 1))
 
-    # `partition with` shards the fire chain: one state group PER
-    # partition value, each with its own anchor/boundary clock, skip
-    # flag, and expired queue — the per-instance WindowState the
-    # reference allocates, and the distributed shape for the
-    # otherwise single-group twin
-    wm = df.withWatermark(ts, watermark_delay)
-    grouped = (
-        wm.groupBy(partition_attr)
-        if partition_attr
-        else wm.withColumn("_g", F.lit(1)).groupBy("_g")
-    )
-    return grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return _chain_stream(
+        df, key, ts, partition_attr,
+        lambda: _TimeLengthBatch(t_ms, n, start_time_ms), shape,
+        [_BATCH_SEQ_FIELD, StructField("fired_at_ms", LongType()),
+         StructField("fire_reason", StringType()), _CHANNEL_FIELD],
+        ["forming_json", "prev_json"],
+        GroupStateTimeout.EventTimeTimeout, tick, arm, watermark_delay)
 
 
 def external_time_batch_stream(
@@ -733,102 +628,38 @@ def external_time_batch_stream(
     partial chunk, matching the reference (flushed keys were cleared
     from the map, :296-298). Keep-latest per key within a chunk.
 
-    Single global state group by default (the boundary clock is
-    global), mirroring the reference's single-JVM semantics; use
-    :func:`tumbling_batch_stream` for the scale path, or
-    ``partition_attr`` (``partition with``) to shard the state one
-    group per partition value."""
-    import json
-
-    require_column(df, key, "unique.key")
-    require_column(df, ts, "ts")
+    One state group (the boundary clock is global), or one per
+    ``partition_attr`` value; :func:`tumbling_batch_stream` is the
+    scale path."""
+    _check_chain_args(df, key, ts, partition_attr=partition_attr,
+                      start_time_ms=start_time_ms)
     t_ms = parse_time_ms(window_time, "window.time")
     idle_ms = None if idle_timeout is None else parse_time_ms(idle_timeout, "time.out")
-    is_timestamp = str(df.schema[ts].dataType) in ("TimestampType()", "TimestampNTZType()")
-    columns = [f.name for f in df.schema.fields]
-    out_schema = StructType(
-        df.schema.fields
-        + [
-            StructField("batch_start_ms", LongType()),
-            StructField("batch_end_ms", LongType()),
-            StructField("flush_reason", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("end_time", LongType()), StructField("forming_json", StringType())]
-    )
 
-    def fn(key_tuple, pdfs, state: GroupState):
-        if state.exists:
-            end_time, forming_json = state.get
-            forming = json.loads(forming_json)
-        else:
-            end_time, forming = -1, {}
-        recs: list[tuple] = []
+    def shape(st, fed, rows, prev):
+        fired, counts, ends, reason = fed
+        end = np.repeat(np.asarray(ends, dtype=np.int64), counts)
+        return rows(fired).assign(batch_start_ms=end - t_ms, batch_end_ms=end,
+                                  flush_reason=reason)
 
-        def flush(reason: str) -> None:
-            nonlocal forming
-            if not forming:
-                return
-            for ev in forming.values():
-                recs.append(
-                    tuple(ev[c] for c in columns) + (end_time - t_ms, end_time, reason)
-                )
-            forming = {}
-
-        if state.hasTimedOut:
-            flush("timeout")
-            state.update((end_time, json.dumps(forming)))
-        else:
-            for pdf in pdfs:
-                if pdf.empty:
-                    continue
-                pdf = pdf.sort_values(ts, kind="mergesort")
-                ms = _ms_series(pdf, ts, is_timestamp)
-                for row in _row_dicts(pdf, columns, ts, ms):
-                    ts_i = row[ts]
-                    if end_time < 0:  # anchor on the first event (:449-458)
-                        if start_time_ms is not None:
-                            end_time = ts_i + (t_ms - (ts_i - start_time_ms) % t_ms)
-                        else:
-                            end_time = ts_i + t_ms
-                    while ts_i >= end_time:
-                        flush("boundary")
-                        end_time += t_ms
-                    forming[str(row[key])] = row
-            state.update((end_time, json.dumps(forming)))
-            if idle_ms is not None and forming:
-                state.setTimeoutDuration(idle_ms)
-        if recs:
-            out = pd.DataFrame.from_records(
-                recs, columns=columns + ["batch_start_ms", "batch_end_ms", "flush_reason"]
-            )
-            if is_timestamp and len(out):
-                out[ts] = pd.to_datetime(out[ts], unit="ms")
-            yield out
+    def arm(st, state):
+        if idle_ms is not None and st.held:
+            state.setTimeoutDuration(idle_ms)
 
     # ProcessingTimeTimeout ONLY when time.out is configured: the
     # timeout mode forces Spark to keep scheduling state-cleanup
     # micro-batches while any state exists, so an availableNow replay
     # of the no-time.out variant would never terminate (observed:
     # endless "No new data but cleaning up state" batches)
-    timeout_mode = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    # `partition with` shards the batch clock: one state group per
-    # partition value, each anchored at its own first event — the
-    # per-instance WindowState, and the distributed shape for the
-    # otherwise single-group twin
-    grouped = (
-        df.groupBy(partition_attr)
-        if partition_attr
-        else df.withColumn("_g", F.lit(1)).groupBy("_g")
-    )
-    return grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout_mode
-    )
+    timeout = (GroupStateTimeout.ProcessingTimeTimeout if idle_ms is not None
+               else GroupStateTimeout.NoTimeout)
+    return _chain_stream(
+        df, key, ts, partition_attr, lambda: _ExternalTimeBatch(t_ms, start_time_ms),
+        shape,
+        [StructField("batch_start_ms", LongType()),
+         StructField("batch_end_ms", LongType()),
+         StructField("flush_reason", StringType())],
+        ["forming_json"], timeout, lambda st, state: st.flush(), arm)
 
 
 _ASOF_STATE = StructType(
@@ -1004,8 +835,6 @@ def range_agg_stream(
     the cursor is monotone because each micro-batch is processed in
     event-time order). This is the state-size contract a stream-stream
     interval join needs at 100 TB/day: O(window) per key, forever."""
-    import json
-
     require_column(df, key, "unique.key")
     require_column(df, ts, "ts")
     require_column(df, side_col, "side column")
@@ -1098,8 +927,6 @@ def sessionize_stream(
     time; data late enough to land after its session's close is the
     documented divergence vs the batch form's global re-sort (same
     caveat as every streaming twin here)."""
-    import json
-
     require_column(df, user, "session user")
     require_column(df, ts, "ts")
     require_column(df, type_col, "session type column")
@@ -1761,8 +1588,6 @@ def quantile_sample_stream(
     has seen the same rows reports the IDENTICAL row to the batch
     operator (same hash, same integer-ceil rank selection —
     driver-certified)."""
-    import json
-
     from siddhi_execution_unique_spark.functions.sketch import (
         BK_K,
         _BK_HASH_SPARK,
@@ -1889,13 +1714,6 @@ def with_processing_time(df: DataFrame, ts: str = "ts") -> DataFrame:
     runs unchanged on the stamped column; the twins below also accept
     ``ts=None`` as a shorthand for this call."""
     return df.withColumn(ts, F.current_timestamp())
-
-
-def _proc_ts(df: DataFrame, ts: str | None) -> tuple[DataFrame, str]:
-    """``ts=None`` shorthand: stamp arrival time and use it."""
-    if ts is None:
-        return with_processing_time(df, "_arrival_ts"), "_arrival_ts"
-    return df, ts
 
 
 def _now_ms() -> int:
@@ -2103,8 +1921,7 @@ def _keyed_replay(src: DataFrame, replay_groups, out_schema) -> DataFrame:
     batches across the Python boundary; the replay semantics per key
     are untouched)."""
 
-    int_key = src.schema["k"].dataType.typeName() in (
-        "long", "integer", "short", "byte")
+    int_key = src.schema["k"].dataType.typeName() in _INT_TYPES
 
     def _same_key(a, b) -> bool:
         if pd.isna(a) or pd.isna(b):
@@ -2116,22 +1933,9 @@ def _keyed_replay(src: DataFrame, replay_groups, out_schema) -> DataFrame:
         of one partition's key-sorted rows)."""
         done = pd.concat(parts, ignore_index=True) \
             if len(parts) > 1 else parts[0].reset_index(drop=True)
-        kcol = done["k"]
-        if int_key and kcol.dtype.kind == "f":
-            # an integer key column arrives as float64 when a batch
-            # holds null keys, and a float chunk (the null keys sort
-            # first) promotes every int64 chunk concatenated with it;
-            # beyond 2^53 distinct int64 keys become equal floats and
-            # their replay state would merge (the old per-group
-            # dispatch grouped exactly) — refuse loudly rather than
-            # corrupt. Checked on the concatenated frame, which every
-            # row reaches exactly once.
-            mx = kcol.abs().max()
-            if pd.notna(mx) and mx >= 2.0 ** 53:
-                raise ValueError(
-                    "keyed replay: integer key column contains "
-                    "nulls and |key| >= 2^53; float64 conversion "
-                    "cannot represent these keys exactly")
+        # a float chunk (null keys sort first) promotes every int64
+        # chunk concatenated with it, so the whole frame is checked
+        _refuse_inexact_int_keys(done["k"], int_key, "keyed replay")
         return replay_groups(done)
 
     def run(batches):

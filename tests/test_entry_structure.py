@@ -2,19 +2,24 @@
 ``__spark_entry__.py`` (stdlib ``ast``) every streaming certification
 drains through the one runner and no query function carries imports
 it does not use; ``operators.__all__`` is exactly the public operators,
-with `partition with` as a parameter rather than twin functions."""
+with `partition with` as a parameter rather than twin functions; the
+chain windows are written once, in ``operators/replay.py``, and the
+streaming twins run those chains."""
 
 import ast
 import os
 
-ENTRY = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "__spark_entry__.py")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENTRY = os.path.join(ROOT, "__spark_entry__.py")
+PKG = os.path.join(ROOT, "siddhi_execution_unique_spark")
+STREAMING = os.path.join(PKG, "streaming", "__init__.py")
+CHAIN_TWINS = ("length_batch_stream", "length_window_stream",
+               "time_length_batch_stream", "external_time_batch_stream")
 
 
-def _tree():
-    with open(ENTRY) as f:
-        return ast.parse(f.read(), ENTRY)
+def _tree(path=ENTRY):
+    with open(path) as f:
+        return ast.parse(f.read(), path)
 
 
 def test_one_write_stream_site():
@@ -53,3 +58,38 @@ def test_siddhiql_has_one_window_builder():
     from siddhi_execution_unique_spark import siddhiql
 
     assert not hasattr(siddhiql, "_build_partitioned")
+
+
+def test_streaming_chain_twins_have_no_row_walk():
+    fns = {n.name: n for n in _tree(STREAMING).body
+           if isinstance(n, ast.FunctionDef)}
+    assert "_length_batch_walk" not in fns
+    for name in CHAIN_TWINS:
+        calls = {n.func.id for n in ast.walk(fns[name])
+                 if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)}
+        assert "_row_dicts" not in calls, name
+        assert "_chain_stream" in calls, name
+
+
+def test_chain_classes_live_in_replay_only():
+    # a class deriving from _Chain (directly or not) outside replay.py
+    # would be a second copy of a window's state machine
+    defined = {}
+    for dirpath, _, files in os.walk(PKG):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                for n in ast.walk(_tree(path)):
+                    if isinstance(n, ast.ClassDef):
+                        defined[n.name] = (os.path.relpath(path, PKG),
+                                           [getattr(b, "id", None) for b in n.bases])
+    chains = {"_Chain"}
+    while True:
+        more = {c for c, (_, bases) in defined.items() if chains & set(bases)}
+        if more <= chains:
+            break
+        chains |= more
+    where = {defined[c][0] for c in chains}
+    assert where == {os.path.join("operators", "replay.py")}
+    assert {"_FormingSet", "_UniqueFifo", "_TimeLengthBatch",
+            "_ExternalTimeBatch"} <= chains

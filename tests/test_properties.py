@@ -233,6 +233,94 @@ def test_time_length_batch_interval_form_matches_sequential(ts_gaps, keys, t, n,
     assert sequential_tlb(seq, t, n, start) == interval_tlb(seq, t, n, start)
 
 
+def stream_fire_walk(seq, n, keep="last", t=None, start=None):
+    """Row-by-row transcription of the streaming fire-chain twins'
+    dual channel (lengthBatch, or timeLengthBatch when ``t`` is given):
+    every fire re-emits the previous batch on ``expired`` with its own
+    batch_seq, then its batch on ``current``; a time boundary with
+    nothing formed only drains. Rows are (event_index, batch_seq,
+    fired_at, reason, channel)."""
+    out, forming, prev = [], {}, []
+    batch_seq, next_emit, sent = 0, None, False
+
+    def fire(at, reason):
+        nonlocal batch_seq, prev, forming
+        out.extend((i, batch_seq - 1, at, reason, "expired") for i in prev)
+        prev = list(forming.values())
+        out.extend((i, batch_seq, at, reason, "current") for i in prev)
+        batch_seq += bool(forming)
+        forming = {}
+
+    for i, (ms, k) in enumerate(seq):
+        if t is not None:
+            if next_emit is None:
+                next_emit = ms + t if start is None else start + ((ms - start) // t + 1) * t
+            while ms >= next_emit:
+                if sent:
+                    sent = False
+                elif forming or prev:
+                    fire(next_emit, "time")
+                next_emit += t
+            if sent:
+                continue
+        if keep == "last" or k not in forming:
+            forming[k] = i
+        if len(forming) == n:
+            fire(ms, "length")
+            sent = True
+    return out
+
+
+def chain_fire_log(seq, n, keep, t, start, chunk):
+    """The same log from the replay chains and the streaming driver's
+    ``_fire_log``, fed ``chunk`` arrivals at a time."""
+    import pandas as pd
+
+    from siddhi_execution_unique_spark.operators.replay import (
+        _FormingSet,
+        _TimeLengthBatch,
+    )
+    from siddhi_execution_unique_spark.streaming import _fire_log
+
+    st = _FormingSet(n, keep) if t is None else _TimeLengthBatch(t, n, start)
+    out = []
+    for lo in range(0, len(seq), chunk):
+        part = seq[lo:lo + chunk]
+        prev = st.last
+        fed = st.feed([k for _, k in part], [ms for ms, _ in part], lo)
+        if t is None:
+            fired, at, seq0 = fed
+            counts = [n] * len(at)
+            at_ms, reasons = [part[j][0] for j in at], ["length"] * len(at)
+        else:
+            fired, counts, at_ms, reasons, seq0 = fed
+        log = _fire_log(lambda refs: pd.DataFrame({"i": refs}), prev, fired,
+                        counts, seq0, at=at_ms, reason=reasons)
+        out += [tuple(r) for r in log.itertuples(index=False, name=None)]
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    ts_gaps=st.lists(st.integers(min_value=0, max_value=7), min_size=1, max_size=40),
+    keys=st.lists(st.sampled_from("abcde"), min_size=40, max_size=40),
+    n=st.integers(min_value=1, max_value=4),
+    window=st.one_of(st.none(), st.integers(min_value=2, max_value=9)),
+    keep=st.sampled_from(["last", "first"]),
+    start=st.one_of(st.none(), st.integers(min_value=0, max_value=5)),
+    chunk=st.integers(min_value=1, max_value=12),
+)
+def test_chain_fire_log_matches_stream_walk(ts_gaps, keys, n, window, keep, start, chunk):
+    ms, seq = 0, []
+    for i, g in enumerate(ts_gaps):
+        ms += g
+        seq.append((ms, keys[i]))
+    if window is not None:
+        keep = "last"  # timeLengthBatch always replaces
+    assert (chain_fire_log(seq, n, keep, window, start, chunk)
+            == stream_fire_walk(seq, n, keep, window, start))
+
+
 def greedy_sessions(ts_list: list[int], gap: int) -> list[list[int]]:
     """Reference semantics: walk one user's sorted timestamps, break a
     session when the gap is exceeded."""

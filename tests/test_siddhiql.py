@@ -117,6 +117,13 @@ def test_length_batch_and_multi_query_app(streams):
      "missing window.length"),
     ("from events#window.unique:lengthBatch(10, user_id) select * insert into x;",
      "constants must come last"),
+    ("from events#window.unique:timeBatch(user_id, 1 hour, 1 sec) "
+     "select * insert into x;",
+     "start.time given as a duration"),
+    ("partition with (event_type of events) begin "
+     "from events#window.unique:timeBatch(user_id, 1 hour, 1 sec) "
+     "select * insert into x; end",
+     "partitioned start.time given as a duration"),
     ("from clicks#window.unique:ever(user_id) "
      "join purchases#window.unique:ever(user_id) "
      "on clicks.user_id == purchases.user_id "
@@ -1519,6 +1526,35 @@ def test_partitioned_outside_queries_coexist(streams):
 def test_partitioned_validation_errors(streams, bad):
     with pytest.raises(sq.SiddhiQLError):
         sq.run_app(bad, streams, tiebreak="event_id")
+
+
+@pytest.mark.parametrize("bad", [
+    # the streaming builder binds window arguments with the batch one's
+    # binder: each of these escaped as a raw IndexError,
+    # AnalysisException, ValueError or int() error
+    "partition with (event_type of events) begin "
+    "from events#unique:deduplicate() select * insert into x; end",
+    "from events#window.unique:timeBatch(user_id, 1 sec, 1000) "
+    "select * insert into x;",
+    "from events#window.unique:timeLengthBatch(user_id, 1 sec, 1000, 2) "
+    "select * insert into x;",
+    "from events#window.unique:externalTimeBatch(user_id, ts, 1 sec, 1 sec) "
+    "select * insert into x;",
+    # the global form of the first, and a missing window.length
+    "from events#unique:deduplicate() select * insert into x;",
+    "from events#window.unique:lengthBatch(user_id) select * insert into x;",
+])
+def test_streaming_validation_errors(spark, tmp_path, bad):
+    import shutil
+    from siddhi_execution_unique_spark.streaming.sources import stream_table
+
+    src = f"{SF_DIR}/events.parquet"
+    indir = tmp_path / "in"
+    indir.mkdir()
+    shutil.copy(src, indir / "events.parquet")
+    sdf = stream_table(spark, str(indir), spark.read.parquet(src).schema, ts=None)
+    with pytest.raises(sq.SiddhiQLError):
+        sq.run_app_streaming(bad, {"events": sdf})
 
 
 def test_every_reference_test_query_string_parses():

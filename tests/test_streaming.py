@@ -168,6 +168,42 @@ def test_streaming_aggregate_select_matches_batch(spark, workdir):
             sorted(map(tuple, want[name].collect())), name
 
 
+def test_partitioned_streaming_aggregate_matches_batch(spark, workdir):
+    """A partitioned `ever` aggregate finalizes per (partition value,
+    key): the same key in two instances is two window rows, also when
+    both arrive in one micro-batch."""
+    import datetime
+
+    from siddhi_execution_unique_spark import siddhiql as sq
+
+    rows = [(1000, 1, "x", "a"), (2000, 2, "y", "a"), (3000, 3, "x", "b"),
+            (4000, 4, "x", "a")]
+    table = pa.table({
+        "ts": pa.array([r[0] * 1000 for r in rows], pa.timestamp("us")),
+        "event_id": pa.array([r[1] for r in rows], pa.int64()),
+        "g": pa.array([r[2] for r in rows], pa.string()),
+        "k": pa.array([r[3] for r in rows], pa.string()),
+    })
+    pq.write_table(table, str(workdir / "in" / "001.parquet"))
+    app = """
+    partition with (g of events) begin
+    from events#window.unique:ever(k)
+    select k, count() as n
+    group by k
+    insert into agg;
+    end
+    """
+    schema = "ts timestamp, event_id long, g string, k string"
+    src = spark.readStream.schema(schema).parquet(str(workdir / "in"))
+    got = sq.run_app_streaming_aggregates(app, {"events": src})["agg"]
+    bdf = spark.createDataFrame(
+        [(datetime.datetime.utcfromtimestamp(t / 1000.0), e, g, k)
+         for (t, e, g, k) in rows], schema)
+    want = sq.run_app(app, {"events": bdf}, tiebreak="event_id")["agg"]
+    assert sorted(map(tuple, got.collect())) == [("a", 2), ("b", 1)]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 def test_ever_stream_update_mode(spark, workdir):
     write_batch(workdir / "in", "001.parquet", [(1000, 1, "a", 1.0), (2000, 2, "b", 2.0)])
     write_batch(workdir / "in", "002.parquet", [(3000, 3, "a", 3.0)])
@@ -440,6 +476,25 @@ def test_length_twins_reject_bad_window_length(spark, twin, bad):
                                "ts long, event_id long, k string, v double")
     with pytest.raises(ValueError, match="window.length"):
         twin(df, bad)
+
+
+@pytest.mark.parametrize("twin, args, bad", [
+    ("length_batch_stream", (2,), {"partition_attr": "ghost"}),
+    ("time_length_batch_stream", (10_000, 2), {"partition_attr": "ghost"}),
+    ("external_time_batch_stream", (10_000,), {"partition_attr": "ghost"}),
+    ("time_length_batch_stream", (10_000, 2), {"start_time_ms": "1 sec"}),
+    ("external_time_batch_stream", (10_000,), {"start_time_ms": "1 sec"}),
+], ids=["length_batch_partition_attr", "time_length_batch_partition_attr",
+        "external_time_batch_partition_attr", "time_length_batch_start_time",
+        "external_time_batch_start_time"])
+def test_chain_twins_validate_like_batch(spark, twin, args, bad):
+    # the batch chain operators' argument checks: an unknown partition
+    # attribute or a duration as start.time fails when the query is
+    # built, not inside it
+    df = spark.createDataFrame([(1000, 1, "a", 1.0)],
+                               "ts long, event_id long, k string, v double")
+    with pytest.raises(ValueError, match="partition attribute|start.time"):
+        getattr(stw, twin)(df, "k", *args, ts="ts", **bad)
 
 
 def test_external_time_batch_stream_boundary_flush(spark, workdir):
@@ -1864,12 +1919,20 @@ def test_typed_twins_cover_every_apply_in_pandas_with_state_twin():
 
     with open(stw.__file__) as f:
         tree = ast.parse(f.read())
-    twins = {
-        fn.name for fn in tree.body
-        if isinstance(fn, ast.FunctionDef) and any(
-            isinstance(n, ast.Attribute) and n.attr == "applyInPandasWithState"
+    fns = [fn for fn in tree.body if isinstance(fn, ast.FunctionDef)]
+
+    def uses(fn, names):
+        # an applyInPandasWithState call, or a call of a private driver
+        return any(
+            (isinstance(n, ast.Attribute) and n.attr == "applyInPandasWithState")
+            or (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+                and n.func.id in names)
             for n in ast.walk(fn))
-    }
+
+    drivers = {fn.name for fn in fns
+               if fn.name.startswith("_") and uses(fn, ())}
+    twins = {fn.name for fn in fns
+             if not fn.name.startswith("_") and uses(fn, drivers)}
     assert twins == set(_TYPED_TWINS)
 
 
@@ -1949,3 +2012,64 @@ def test_apply_in_pandas_twin_output_types_pinned(spark, workdir, twin):
                   for rows in _TYPED_EVENTS for r in rows}
         want = [events[r[0]] + r[1:] for r in want]
     assert got == sorted(want, key=repr)
+
+
+def _sink_rows(res):
+    """A sink's rows with timestamps as epoch millis."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampType
+
+    return [tuple(r) for r in res.select(*[
+        F.unix_millis(f.name).alias(f.name)
+        if isinstance(f.dataType, TimestampType) else F.col(f.name)
+        for f in res.schema]).collect()]
+
+
+# An availableNow run ends with a no-data batch that moves the
+# late-event watermark to the first file's front (01:10 - 10 s), so the
+# resumed run drops event 7 (00:30) as late; one run over both files
+# reads it in the batch right after, whose late-event watermark is
+# still the first batch's. Spark drops such rows before an
+# EventTimeTimeout state function sees them; the chain driver's
+# watermark (streaming._chain_stream) keeps them, these two twins not.
+_LATE_AFTER_RESTART = pytest.mark.xfail(
+    strict=True, reason="a restart drops events behind the watermark "
+    "that the no-data batch closing the first run advanced")
+
+
+@pytest.mark.parametrize("twin", [
+    pytest.param(t, marks=_LATE_AFTER_RESTART)
+    if t in ("sessionize_stream", "time_window_stream") else t
+    for t in sorted(_TYPED_TWINS) if not t.endswith("_proc_stream")])
+def test_twin_resumes_from_checkpoint(spark, workdir, twin):
+    """Every twin that ends under availableNow resumes from its
+    checkpoint: a run over the first file, then a run over the second
+    from that checkpoint, emit together what one run over both files
+    does (``_TYPED_EXPECTED``: the same one-file-per-trigger split).
+    The processing-time twins never end under availableNow."""
+    build, mode = _TYPED_TWINS[twin]
+    docs = twin == "lsh_ingest_stream"
+    indir = str(workdir / "in")
+    got = []
+    for i, rows in enumerate(_TYPED_DOCS if docs else _TYPED_EVENTS):
+        _write_typed_batch(indir, f"{i:03d}.parquet", rows, docs)
+        out = build(
+            spark.readStream.schema(spark.read.parquet(indir).schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(indir)
+        )
+        # foreachBatch: the memory sink cannot recover from a checkpoint
+        q = (
+            out.writeStream.foreachBatch(lambda b, _: got.extend(_sink_rows(b)))
+            .outputMode(mode)
+            .option("checkpointLocation", str(workdir / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    want = _TYPED_EXPECTED[twin]
+    if out.columns[:6] == _EVENT_COLUMNS:
+        events = {r[0]: (r[0], _T0 + r[1] * _MIN, r[2], r[3], r[4], "{}")
+                  for rows in _TYPED_EVENTS for r in rows}
+        want = [events[r[0]] + r[1:] for r in want]
+    assert sorted(got, key=repr) == sorted(want, key=repr)

@@ -607,6 +607,24 @@ def test_bad_time_constant(spark):
         time_batch(df, "k", -5, ts="ts")
 
 
+@pytest.mark.parametrize("bad", ["1 sec", 1.5, True], ids=["duration", "float", "bool"])
+def test_start_time_must_be_an_int(spark, bad):
+    # start.time is an instant (int epoch ms), never a duration: one
+    # eager check in every operator that takes it
+    df = make(spark, [(1, 1, "a", 1.0)])
+    for op in (
+        lambda: time_batch(df, "k", 10, ts="ts", start_time_ms=bad),
+        lambda: first_time_batch(df, "k", 10, ts="ts", start_time_ms=bad),
+        lambda: time_length_batch(df, "k", 10, 2, ts="ts", start_time_ms=bad),
+        lambda: ops.time_length_batch_distributed(
+            df, "k", 10, 2, ts="ts", start_time_ms=bad),
+        lambda: external_time_batch(
+            df, "k", timestamp="ts", window_time=10, start_time_ms=bad),
+    ):
+        with pytest.raises(ValueError, match="start.time"):
+            op()
+
+
 def test_bad_length(spark):
     df = make(spark, [(1, 1, "a", 1.0)])
     with pytest.raises(ValueError):
@@ -832,3 +850,42 @@ def test_full_row_replays_stream_one_million_rows(spark):
     assert agg2["batches"] == n_rows // t_win
     assert agg2["len_fires"] == n_rows // 2
     assert agg2["fired_ok"] == n_rows // 2
+
+
+# --- chain keys: every null is one key; ints past 2^53 never merge ---
+
+@pytest.mark.parametrize("op, cols", [
+    (lambda df: length_batch(df, "k", 3, ts="ts", tiebreak="event_id"),
+     ["event_id", "batch_seq", "fired_at_ms"]),
+    (lambda df: time_length_batch(df, "k", 100, 3, ts="ts", tiebreak="event_id"),
+     ["event_id", "batch_seq", "fired_at_ms", "fire_reason"]),
+    (lambda df: ops.length_window_emissions_indexed(
+        df, "k", 2, ts="ts", tiebreak="event_id"),
+     ["event_id", "channel", "emission_idx"]),
+], ids=["length_batch", "time_length_batch", "length_window_emissions_indexed"])
+def test_chain_null_keys_are_one_key(spark, op, cols):
+    # Spark's groupBy convention: all nulls are ONE key, for a long key
+    # column (whose nulls reach pandas as NaN) as for a string one
+    df = spark.createDataFrame(
+        [(i, i, k, 0.0) for i, k in enumerate([1, None, None, 2, None, 3], 1)],
+        "ts long, event_id long, k long, v double")
+    as_long = rows_set(op(df), *cols)
+    as_str = rows_set(op(df.withColumn("k", F.col("k").cast("string"))), *cols)
+    assert as_long == as_str
+    if cols[1] == "batch_seq":
+        # the second null replaces the first; key 2 completes the batch
+        assert {r[0] for r in as_long if r[1] == 0} == {1, 3, 4}
+
+
+def test_chain_keys_past_2_53_never_merge(spark):
+    big = 2 ** 53
+    df = spark.createDataFrame([(1, 1, big, 0.0), (2, 2, big + 1, 0.0)],
+                               "ts long, event_id long, k long, v double")
+    got = rows_set(length_batch(df, "k", 2, ts="ts", tiebreak="event_id"),
+                   "event_id", "batch_seq")
+    assert got == {(1, 0), (2, 0)}  # two distinct keys fire a batch of 2
+    # a null key makes the column float64 in pandas, where the two keys
+    # are one float: refused rather than merged
+    nulls = df.union(spark.createDataFrame([(3, 3, None, 0.0)], df.schema))
+    with pytest.raises(Exception, match=r"2\^53"):
+        length_batch(nulls, "k", 2, ts="ts", tiebreak="event_id").collect()
